@@ -34,8 +34,12 @@ Modes (``SPARK_GRAFT_CHECKPOINT_MODE`` env var or
   construction-time jobs; NOT a correctness mode for iterative
   operators at scale (lineage grows unchecked).
 
-Operators route through :func:`materialize`; the knob is process-wide
-because the choice is a deployment property, not a per-call one.
+Operators route their barriers through :func:`materialize`; a guard
+test (``tests/test_chkpt_single_path.py``) rejects raw
+``.localCheckpoint(`` / ``.checkpoint(`` calls anywhere else, apart
+from the few sites it still lists as not yet routed.  The knob is
+process-wide because the choice is a deployment property, not a
+per-call one.
 """
 
 from __future__ import annotations

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
+
 
 def funnel_stages(
     df: DataFrame,
@@ -60,26 +62,21 @@ def funnel_stages(
     NULLs upstream if the feed can contain them.
 
     Eager-construction CONTRACT (r14 ADVICE): per-stage reach frames
-    are localCheckpointed at CALL time (see the inline note), so
-    constructing the returned DataFrame runs one bounded Spark job per
-    stage — plan-only consumers (cold-plan fingerprinting, scan
-    audits, schema lints) pay those jobs per construction, and the
-    checkpointed blocks are executor-local (not fault-tolerant outside
-    local mode).  The same contract applies to the other fan-out
-    operators in this family (``similarity_join``,
+    pass through ``chkpt.materialize`` at CALL time (see the inline
+    note), so constructing the returned DataFrame runs one bounded
+    Spark job per stage.  The same contract applies to the other
+    fan-out operators in this family (``similarity_join``,
     ``weighted_jaccard_scores``, ``longest_common_runs``,
-    ``quantile_line``).  Plan-only tooling can opt out process-wide
-    via ``magi_etl_spark.chkpt.set_checkpoint_mode("off")`` for
-    operators routed through ``chkpt.materialize`` (new operators
-    route through it from r15 on; this family migrates when its gate
-    dependents next rotate in-window), or by patching
-    ``DataFrame.localCheckpoint`` to identity as ``tools/ab_probe.py``
-    does.
+    ``quantile_line``).  They follow the process-wide checkpoint mode:
+    plan-only tooling opts out with
+    ``magi_etl_spark.chkpt.set_checkpoint_mode("off")``, and a cluster
+    picks a fault-tolerant mode (``reliable`` or ``persist``) instead of
+    the executor-local default.
     """
     if not stages:
         raise ValueError("funnel_stages needs at least one stage")
-    # each stage frame is eagerly localCheckpointed (the q250/setjoin
-    # posture; never persist()): stage k's frame is referenced by stage
+    # each stage frame is an eager barrier (the q250/setjoin posture;
+    # never a bare persist()): stage k's frame is referenced by stage
     # k+1 AND by the counts union, whose three final references
     # otherwise re-derive the whole stage chain — the compiled plan
     # carried 10 corpus scans for a 4-stage funnel.  The per-stage
@@ -89,7 +86,7 @@ def funnel_stages(
         df.filter(F.col(type_col) == stages[0])
         .groupBy(user_col)
         .agg(F.min(ts_col).alias("_t"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     per_stage = [reached]
     for s in stages[1:]:
@@ -106,7 +103,7 @@ def funnel_stages(
         reached = (
             step.groupBy(user_col)
             .agg(F.min(ts_col).alias("_t"))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         per_stage.append(reached)
     counts = None

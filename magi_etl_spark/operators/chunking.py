@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from magi_etl_spark.caching import CacheScope, persist_in
 from magi_etl_spark.functions.text import tokens
 
 
@@ -22,17 +21,13 @@ def chunk_documents(
     chunk_tokens: int = 64,
     stride: int = 48,
     min_chunk_tokens: int = 16,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """One row per (document, window): 1-indexed start grid stepping by
     ``stride``; the final window may be short and is kept only at
     ``min_chunk_tokens`` or more."""
-    toks_df = persist_in(
-        df.select(
-            F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks")
-        ).where(F.size("toks") > 0),
-        scope,
-    )  # HOFs: tokenize once, slice many
+    toks_df = df.select(
+        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks")
+    ).where(F.size("toks") > 0).persist()  # HOFs: tokenize once, slice many
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(stride))
     exploded = toks_df.select(
         "doc_id",

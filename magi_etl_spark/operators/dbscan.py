@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
+
 
 def grid_dbscan(
     points: DataFrame,
@@ -73,7 +75,7 @@ def grid_dbscan(
     # edges, the border join, and — via cores — the anti-join), so it
     # materializes once (O(corpus) id pairs, density-bounded) instead
     # of re-running the grid join per consumer — measured 3-4x of the
-    # operator's wall at 32x scale.  Eager localCheckpoint, NOT
+    # operator's wall at 32x scale.  Eager chkpt barrier, NOT a bare
     # persist(): an explicit persist stays registered in the cache
     # manager until someone unpersists it, leaking one cached pair
     # frame per grid_dbscan call in a long-lived session (the r12
@@ -92,14 +94,14 @@ def grid_dbscan(
             y_col,
         )
         .select("_ida", "_idb")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cores = (
         pairs.groupBy("_ida")
         .agg(F.count(F.lit(1)).alias("_n_eps"))
         .where(F.col("_n_eps") >= int(min_pts))
         .select(F.col("_ida").alias("id"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     core_pairs = (
         pairs.join(cores.select(F.col("id").alias("_ida")), "_ida")

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from magi_etl_spark.caching import CacheScope, persist_in
 from magi_etl_spark.operators.dedup import with_shingles
 
 
@@ -37,7 +36,6 @@ def contamination_pairs(
     bench_text: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """(doc_id, bench_id, overlap, bench_shingles, containment) for every
     doc/benchmark pair with containment >= threshold.
@@ -45,18 +43,18 @@ def contamination_pairs(
     ``overlap`` counts DISTINCT shared n-grams; ``containment`` =
     overlap / |distinct benchmark n-grams|.  Benchmark items shorter than
     ``n`` tokens have no shingles and can never flag anything."""
-    d = with_shingles(docs, doc_id, doc_text, n, scope=scope).where(
+    d = with_shingles(docs, doc_id, doc_text, n).where(
         F.size("shingles") > 0
     )
-    b = persist_in(
-        with_shingles(bench, bench_id, bench_text, n, scope=scope)
+    b = (
+        with_shingles(bench, bench_id, bench_text, n)
         .where(F.size("shingles") > 0)
         .select(
             F.col("doc_id").alias("b_id"),
             F.size("shingles").alias("b_n_sh"),
             F.explode("shingles").alias("shingle"),
-        ),
-        scope,
+        )
+        .persist()
     )
     d_post = d.select("doc_id", F.explode("shingles").alias("shingle"))
     matched = d_post.join(F.broadcast(b), "shingle")
@@ -84,13 +82,12 @@ def decontaminate(
     bench_text: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """The corpus minus contaminated documents: a broadcastable LEFT ANTI
     join of ``docs`` against the flagged doc ids (the flagged set is
     orders of magnitude smaller than the corpus)."""
     flagged = contamination_pairs(
-        docs, bench, doc_id, doc_text, bench_id, bench_text, n, threshold, scope
+        docs, bench, doc_id, doc_text, bench_id, bench_text, n, threshold
     ).select(F.col("doc_id").alias("_c_id")).distinct()
     return docs.join(
         F.broadcast(flagged), docs[doc_id] == F.col("_c_id"), "left_anti"

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from magi_etl_spark.caching import CacheScope, persist_in
 from magi_etl_spark.functions.text import salted_min_hashes, tokens, word_shingles
 
 
@@ -63,7 +62,6 @@ def with_shingles(
     text_col: str,
     n: int = 3,
     distinct: bool = True,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """(id, shingles array) projection; distinct shingle sets for Jaccard.
 
@@ -74,12 +72,9 @@ def with_shingles(
     blowup.  Persisting bounds it to one tokenization per document; at
     cluster scale this spills to local disk, which is still far cheaper.
     """
-    toks = persist_in(
-        _fan_out(df.select(F.col(id_col).alias("doc_id"), F.col(text_col))).select(
-            "doc_id", tokens(F.col(text_col)).alias("toks")
-        ),
-        scope,
-    )
+    toks = _fan_out(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    ).select("doc_id", tokens(F.col(text_col)).alias("toks")).persist()
     sh = word_shingles(F.col("toks"), n)
     if distinct:
         sh = F.array_distinct(sh)
@@ -93,7 +88,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | float | None = None,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """All pairs with shingle-set Jaccard >= threshold.
 
@@ -108,12 +102,9 @@ def ngram_jaccard_pairs(
     survive are true near-dups (no false positives added); pairs held
     together only by stop-shingles are dropped, which is the point.
     """
-    sets = persist_in(
-        with_shingles(df, id_col, text_col, n, scope=scope).where(
-            F.size("shingles") > 0
-        ),
-        scope,
-    )
+    sets = with_shingles(df, id_col, text_col, n).where(
+        F.size("shingles") > 0
+    ).persist()
     sizes = sets.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sets.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_doc_freq is not None:
@@ -153,7 +144,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | float | None = None,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """All ORDERED pairs with shingle-set containment
     ``|A ∩ B| / |A| >= threshold`` — the asymmetric near-SUPERSET
@@ -171,12 +161,9 @@ def containment_pairs(
     :func:`ngram_jaccard_pairs` (pruning only lowers containment, so
     survivors are true positives); intersection counts stay exact
     integers, so the threshold cut is engine-portable."""
-    sets = persist_in(
-        with_shingles(df, id_col, text_col, n, scope=scope).where(
-            F.size("shingles") > 0
-        ),
-        scope,
-    )
+    sets = with_shingles(df, id_col, text_col, n).where(
+        F.size("shingles") > 0
+    ).persist()
     sizes = sets.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sets.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_doc_freq is not None:
@@ -223,19 +210,15 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     n_hashes: int = 4,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """Per-doc MinHash signature columns m0..m{k-1} (md5-based, portable).
 
     The shingle arrays are persisted before fanning out into k min-hash
     columns — otherwise Catalyst inlines the tokenize/shingle expression
     into every one of the k projections (k-fold recompute)."""
-    sets = persist_in(
-        with_shingles(df, id_col, text_col, n, scope=scope).where(
-            F.size("shingles") > 0
-        ),
-        scope,
-    )
+    sets = with_shingles(df, id_col, text_col, n).where(
+        F.size("shingles") > 0
+    ).persist()
     return sets.select("doc_id", *salted_min_hashes(F.col("shingles"), n_hashes))
 
 
@@ -276,7 +259,6 @@ def minhash_lsh_dedup(
     n_hashes: int = 4,
     band_size: int = 2,
     threshold: float = 0.5,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """Full MinHash→LSH→verify pipeline: signatures → banded candidates →
     exact Jaccard verification of candidates only."""
@@ -285,15 +267,12 @@ def minhash_lsh_dedup(
     # re-evaluated on EVERY side of every self-join (measured 4x cost).
     # Both intermediates are small: signatures are 4 hashes/doc, shingle
     # sets are the tokenized docs.
-    sets = persist_in(
-        with_shingles(df, id_col, text_col, n, scope=scope).where(
-            F.size("shingles") > 0
-        ),
-        scope,
-    )
-    sigs = persist_in(
-        sets.select("doc_id", *salted_min_hashes(F.col("shingles"), n_hashes)), scope
-    )
+    sets = with_shingles(df, id_col, text_col, n).where(
+        F.size("shingles") > 0
+    ).persist()
+    sigs = sets.select(
+        "doc_id", *salted_min_hashes(F.col("shingles"), n_hashes)
+    ).persist()
     bands = [
         [f"m{j}" for j in range(i, min(i + band_size, n_hashes))]
         for i in range(0, n_hashes, band_size)

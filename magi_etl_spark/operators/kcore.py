@@ -11,7 +11,7 @@ edges touching them, until a fixed point (or the iteration cap — the
 cap keeps driver-side planning bounded and lets a SQL oracle unroll the
 same number of steps; convergence is reported so callers can see
 whether the cap bound).  Each round is exactly one keyed degree
-aggregate + one semi-join edge filter, with an eager localCheckpoint
+aggregate + one semi-join edge filter, with an eager ``chkpt`` barrier
 truncating lineage (the PageRank idiom) — per-round cost is linear in
 surviving edges, zero driver work beyond the loop counter.
 """
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from magi_etl_spark.chkpt import materialize
 
 
 def cooccurrence_edges(
@@ -109,12 +111,12 @@ def k_core(
     the matching oracle unrolls the identical rounds, so the contract
     is deterministic either way.
     """
-    e = edges.localCheckpoint(eager=True)
+    e = materialize(edges)
     n_prev = e.count()
     for _ in range(max_iters):
         if n_prev == 0:
             break
-        e = peel_round(e, k, broadcast_vertices).localCheckpoint(eager=True)
+        e = materialize(peel_round(e, k, broadcast_vertices))
         n_now = e.count()
         if n_now == n_prev:
             # fixed point: every remaining vertex already has deg >= k,

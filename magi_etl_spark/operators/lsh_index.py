@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
 
 _PARAMS = "_lsh_params.json"
@@ -108,15 +109,17 @@ def incremental_lsh_pairs(
         new_docs, id_col, text_col, n=n, n_hashes=n_hashes
     ).withColumn("_new", F.lit(True))
     # a re-delivered id supersedes its indexed signature.  The reused
-    # frame is localCheckpoint-ed, not persist()-ed: an explicit persist
-    # stays registered in the cache manager until someone unpersists it,
-    # which leaked one cached frame per micro-batch in the streaming
-    # caller (r5 ADVICE item 2); checkpoint blocks are released by the
-    # ContextCleaner as soon as the frame goes out of scope, and the
-    # eager materialization also truncates the union lineage.
-    sigs = old.join(
-        new_sigs.select("doc_id"), "doc_id", "left_anti"
-    ).unionByName(new_sigs).localCheckpoint(eager=True)
+    # frame goes through the chkpt barrier, not persist(): an explicit
+    # persist stays registered in the cache manager until someone
+    # unpersists it, which leaked one cached frame per micro-batch in
+    # the streaming caller (r5 ADVICE item 2); checkpoint blocks are
+    # released by the ContextCleaner as soon as the frame goes out of
+    # scope, and the eager materialization also truncates the union
+    # lineage.
+    sigs = materialize(
+        old.join(new_sigs.select("doc_id"), "doc_id", "left_anti")
+        .unionByName(new_sigs)
+    )
     bands = [
         [f"m{j}" for j in range(i, min(i + band_size, n_hashes))]
         for i in range(0, n_hashes, band_size)

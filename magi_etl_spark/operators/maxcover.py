@@ -18,7 +18,7 @@ Scale shape: per round — one broadcast-able anti-join of (doc, token)
 pairs against the covered-token set, one per-doc count aggregate, one
 1-row ``max_by`` collect (the bounded-collect idiom: exactly k rows
 cross the driver over the whole trace, like ``coreset.kcenter_select``).
-The (doc, token) pair frame is computed once and localCheckpoint-ed;
+The (doc, token) pair frame is computed once and materialized;
 the covered set grows by at most the winner's vocabulary each round.
 No pairwise doc-doc materialization anywhere.
 
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from magi_etl_spark.chkpt import materialize
 
 _WORD_RE = "[a-z]+"
 
@@ -77,7 +79,7 @@ def vocab_cover_select(
     stops early when every unit is covered — the gate corpus always has
     k productive rounds, so its unrolled oracle never sees the early
     stop, the ``coreset.kcenter_select`` convention)."""
-    dt = _units(df, id_col, text_col, ngram).localCheckpoint()
+    dt = materialize(_units(df, id_col, text_col, ngram))
     covered = None  # DataFrame[_tok] of covered tokens
     trace: list[dict] = []
     cum = 0
@@ -106,9 +108,9 @@ def vocab_cover_select(
              "cum_tokens": cum}
         )
         won = uncov.where(F.col("_doc") == m["_doc"]).select("_tok")
-        covered = (
+        covered = materialize(
             won if covered is None else covered.union(won)
-        ).localCheckpoint()
+        )
     return trace
 
 

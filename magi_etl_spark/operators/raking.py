@@ -25,7 +25,7 @@ plus one keyed join back — work rides the CELL table (category
 cardinality x category cardinality), never the corpus; the corpus is
 scanned exactly three times (cells + the two marginal builds),
 REGARDLESS of rounds: the cell frame is materialized by an eager
-localCheckpoint before the loop and after every half-round (the
+``chkpt`` barrier before the loop and after every half-round (the
 lsh_index/components pattern — blocks are ContextCleaner-released,
 nothing registers in the cache manager).  Without the checkpoints the
 scaling recurrence doubles the lazy plan per half-round — the first
@@ -42,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from magi_etl_spark.chkpt import materialize
 
 _DEC = "decimal(38,0)"
 
@@ -110,16 +112,10 @@ def rake_weights(
     # (category cross, the documented contract), so materializing it is
     # O(categories²) while keeping the plan linear in rounds and the
     # corpus scan count at three
-    cur = cells.join(rt, row_col).join(ct, col_col).localCheckpoint(
-        eager=True
-    )
+    cur = materialize(cells.join(rt, row_col).join(ct, col_col))
     for _ in range(int(rounds)):
-        cur = _scale(cur, row_col, "_tr", int(unit)).localCheckpoint(
-            eager=True
-        )
-        cur = _scale(cur, col_col, "_tc", int(unit)).localCheckpoint(
-            eager=True
-        )
+        cur = materialize(_scale(cur, row_col, "_tr", int(unit)))
+        cur = materialize(_scale(cur, col_col, "_tc", int(unit)))
     return cur.select(
         row_col, col_col, "n", F.col("w").alias("w_micro")
     )

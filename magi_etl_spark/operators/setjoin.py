@@ -26,6 +26,8 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
+
 
 def _token_frame(
     docs: DataFrame, id_col: str, text_col: str
@@ -134,11 +136,11 @@ def longest_common_runs(
     (pair, diagonal).
 
     Eager: the positions input feeds both join sides, so it is
-    localCheckpointed at call time (the similarity_join posture) —
+    materialized at call time (the similarity_join posture) —
     left lazy, the upstream tokenize ran twice."""
     from pyspark.sql import Window as PW
 
-    positions = positions.localCheckpoint(eager=True)
+    positions = materialize(positions)
     pa = positions.select(
         F.col("doc_id").alias("doc_a"),
         F.col("pos").alias("_pa"),
@@ -190,9 +192,9 @@ def weighted_jaccard_scores(
     generates pairs itself.
 
     Eager: the weighted-set input feeds three downstream frames
-    (totals and both scoring sides), so it is localCheckpointed at
-    call time (the similarity_join posture)."""
-    sets = sets.localCheckpoint(eager=True)
+    (totals and both scoring sides), so it is materialized at call
+    time (the similarity_join posture)."""
+    sets = materialize(sets)
     totals = sets.groupBy("doc_id").agg(
         F.sum(weight_col).cast("long").alias("_W")
     )
@@ -239,17 +241,17 @@ def similarity_join(
     ``threshold`` must be a Fraction so the verification stays integer:
     accept iff ``inter * q >= (sa + sb - inter) * p`` for t = p/q.
 
-    Eager: the element-set input is localCheckpointed at call time —
+    Eager: the element-set input is materialized at call time —
     it feeds FIVE downstream frames (document frequencies, sizes, the
     ranked prefix, and both verification sides), and left lazy the
     compiled plan re-derived the upstream tokenize per reference (the
     q256/q250 lesson; profiled at 9.1s -> 4.4s for the q195 path at
     sf0.1).  The prefix frame (both candidate-join sides) is
-    checkpointed for the same reason.  Never persist() — the dbscan
-    cache-manager lesson.
+    materialized for the same reason.  Never a bare persist() — the
+    dbscan cache-manager lesson.
     """
     p, q = threshold.numerator, threshold.denominator
-    sets = sets.localCheckpoint(eager=True)
+    sets = materialize(sets)
     df_tok = sets.groupBy("tok").agg(F.count("*").alias("_df"))
     sizes = sets.groupBy("doc_id").agg(F.count("*").alias("_sz"))
     ranked = (
@@ -269,7 +271,7 @@ def similarity_join(
             <= F.col("_sz") - F.expr(f"({p} * _sz + {q - 1}) DIV {q}") + 1
         )
         .select("doc_id", "tok", "_sz", "_rk")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = prefix.alias("a")
     b = prefix.alias("b")

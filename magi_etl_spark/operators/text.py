@@ -25,23 +25,18 @@ def _hits(toks: Column, markers: tuple[str, ...]) -> Column:
 
 
 def token_stats(
-    df: DataFrame, id_col: str, text_col: str, scope=None
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Token count + average token length (integer-exact ratios).
 
     The token array is projected + persisted once (interpreted HOFs skip
     CSE, so the three stats would otherwise re-split every document —
     see ``quality_scores``)."""
-    from magi_etl_spark.caching import persist_in
-
-    base = persist_in(
-        df.select(
-            F.col(id_col),
-            F.length(F.col(text_col)).alias("_len"),
-            tokens(F.col(text_col)).alias("_t"),
-        ),
-        scope,
-    )
+    base = df.select(
+        F.col(id_col),
+        F.length(F.col(text_col)).alias("_len"),
+        tokens(F.col(text_col)).alias("_t"),
+    ).persist()
     t = F.col("_t")
     toklen_sum = F.aggregate(
         F.transform(t, lambda x: F.length(x)), F.lit(0), lambda acc, x: acc + x
@@ -55,7 +50,7 @@ def token_stats(
 
 
 def quality_scores(
-    df: DataFrame, id_col: str, text_col: str, scope=None
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Heuristic document quality: length, stopword ratio, lexical
     diversity, blended 0..1 score (training-data filtering primitive).
@@ -65,16 +60,10 @@ def quality_scores(
     computing each stat straight off the text would re-split every
     document ~5 times — measured 8x wall at the 32x scale probe before
     this materialization.  Same trade as the dedup family
-    (``operators/dedup.py``); pass ``scope`` (a ``CacheScope``) to bound
-    the cached block's lifetime."""
-    from magi_etl_spark.caching import persist_in
-
-    base = persist_in(
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t")).where(
-            F.size("_t") > 0
-        ),
-        scope,
-    )
+    (``operators/dedup.py``)."""
+    base = df.select(
+        F.col(id_col), tokens(F.col(text_col)).alias("_t")
+    ).where(F.size("_t") > 0).persist()
     t = F.col("_t")
     n = F.size(t)
     stop_ratio = _hits(t, LANG_MARKERS["en"]) / n
@@ -94,7 +83,7 @@ def quality_scores(
 
 
 def language_id(
-    df: DataFrame, id_col: str, text_col: str, scope=None
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Stopword-vote language ID with deterministic tie-break (declaration
     order).  A real model would be a broadcast n-gram table; the operator
@@ -104,11 +93,9 @@ def language_id(
     references the hit count of every language, which would otherwise
     re-tokenize each document once per language (interpreted HOFs skip
     CSE — see ``quality_scores``)."""
-    from magi_etl_spark.caching import persist_in
-
-    base = persist_in(
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t")), scope
-    )
+    base = df.select(
+        F.col(id_col), tokens(F.col(text_col)).alias("_t")
+    ).persist()
     t = F.col("_t")
     hit_cols = {lang: _hits(t, m) for lang, m in LANG_MARKERS.items()}
     best = F.greatest(*hit_cols.values())

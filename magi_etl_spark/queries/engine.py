@@ -276,7 +276,7 @@ def q79_concurrent_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The S2 multi-query fan-out surface driver-gated: two MetricQuery
     jobs submitted through ``concurrency.run_concurrent`` — each on its
     own driver thread inside the FAIR scheduler pool, materialized
-    eagerly (``localCheckpoint``) so the cluster genuinely runs them
+    eagerly (``chkpt.materialize``) so the cluster genuinely runs them
     concurrently — then unioned under a job label (reference
     ``run_multiple_queries``, ``connectors.py:302-365``: N Athena
     submissions + poll loop; on Spark the scheduler multiplexes the
@@ -287,6 +287,7 @@ def q79_concurrent_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     results-dict contract (query_id -> fetched rows) means."""
     from pyspark.sql import functions as F
 
+    from magi_etl_spark.chkpt import materialize
     from magi_etl_spark.concurrency import run_concurrent
 
     def make(segment: str):
@@ -306,7 +307,7 @@ def q79_concurrent_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = run_concurrent(
         spark,
         {"purchase": make("purchase"), "view": make("view")},
-        materialize=lambda df: df.localCheckpoint(eager=True),
+        materialize=materialize,
     )
     out = [
         results[name].select(F.lit(name).alias("job"), "day", "users", "events_cnt")

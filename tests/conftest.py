@@ -19,3 +19,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def built_query(spark, sf_dir):
+    """``built_query(name, fn)`` returns ``fn(spark, sf_dir)``, built once
+    per session.  Building a query runs its eager barriers, so the
+    registry-wide sweeps (plan lint, output schemas) share one build
+    per query instead of paying for it in each sweep."""
+    frames = {}
+
+    def build(name, fn):
+        if name not in frames:
+            frames[name] = fn(spark, sf_dir)
+        return frames[name]
+
+    return build

@@ -1,27 +1,6 @@
-"""CacheScope releases operator-persisted intermediates on exit."""
+"""Operators persist their reuse intermediates (the dedup family)."""
 
 from __future__ import annotations
-
-
-def test_cache_scope_releases_operator_persists(spark, sf_dir):
-    from magi_etl_spark.caching import CacheScope
-    from magi_etl_spark.operators import dedup as D
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    with CacheScope() as scope:
-        pairs = D.ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.5, max_doc_freq=0.01, scope=scope
-        )
-        assert pairs.count() >= 0
-        frames = list(scope._frames)
-        assert frames and any(
-            f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames
-        )
-    # exiting the scope unpersisted every registered frame
-    assert all(
-        not (f.storageLevel.useMemory or f.storageLevel.useDisk) for f in frames
-    )
-    assert not scope._frames
 
 
 def test_operators_without_scope_keep_legacy_persist(spark, sf_dir):
@@ -29,4 +8,4 @@ def test_operators_without_scope_keep_legacy_persist(spark, sf_dir):
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sigs = D.minhash_signatures(d, "doc_id", "text")
-    assert sigs.count() > 0  # no scope: behavior unchanged
+    assert sigs.count() > 0

@@ -3,7 +3,6 @@
 import pytest
 from pyspark.sql import functions as F
 
-from magi_etl_spark.caching import CacheScope
 from magi_etl_spark.operators.decontaminate import contamination_pairs, decontaminate
 
 
@@ -51,11 +50,8 @@ def test_containment_pairs_thresholds(corpus):
 
 def test_decontaminate_anti_join(corpus):
     docs, bench = corpus
-    with CacheScope() as scope:
-        clean = decontaminate(
-            docs, bench, bench_id="bench_id", threshold=0.3, scope=scope
-        )
-        assert sorted(r.doc_id for r in clean.collect()) == [3, 4]
+    clean = decontaminate(docs, bench, bench_id="bench_id", threshold=0.3)
+    assert sorted(r.doc_id for r in clean.collect()) == [3, 4]
 
 
 def test_broadcast_in_plan(spark, corpus):

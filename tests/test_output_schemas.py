@@ -10,8 +10,9 @@ driver/local divergence class the q89 HUGEINT saga taught; like the
 no-HUGEINT oracle lint (tests/test_oracle_types.py), this closes the
 class structurally instead of per-instance.
 
-Schema-only: ``fn(spark, sf_dir)`` builds the plan lazily, ``.schema``
-never executes it, so the sweep over every authored query is cheap.
+Schema-only: ``.schema`` never executes the plan.  Building a query
+still runs its eager barriers, so the frames come from the session's
+``built_query`` fixture, shared with the plan-lint sweep.
 """
 
 from __future__ import annotations
@@ -45,10 +46,10 @@ def _all_query_registries() -> dict[str, object]:
     return out
 
 
-def test_no_query_emits_a_complex_typed_output_column(spark, sf_dir):
+def test_no_query_emits_a_complex_typed_output_column(built_query):
     offenders: dict[str, list[str]] = {}
     for name, fn in sorted(_all_query_registries().items()):
-        schema = fn(spark, sf_dir).schema
+        schema = built_query(name, fn).schema
         bad = [
             f.name
             for f in schema.fields

@@ -70,7 +70,7 @@ def test_clean_keyed_agg_passes(spark, sf_dir):
     assert all(f.severity != "error" for f in findings)
 
 
-def test_every_registered_query_is_lint_clean(spark, sf_dir):
+def test_every_registered_query_is_lint_clean(built_query):
     """The engine's own surface obeys its own linter: ALL registered
     queries compile with zero error-severity findings — no cartesian
     products and no unsafe single-partition exchanges anywhere,
@@ -84,7 +84,7 @@ def test_every_registered_query_is_lint_clean(spark, sf_dir):
 
     errors = {}
     for name, fn in QUERIES.items():
-        findings = lint(fn(spark, sf_dir))
+        findings = lint(built_query(name, fn))
         errs = [f for f in findings if f.severity == "error"]
         if errs:
             errors[name] = [f.rule for f in errs]

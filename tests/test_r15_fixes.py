@@ -116,18 +116,39 @@ def test_checkpoint_modes_agree_on_a_checkpointing_operator(spark):
 def test_checkpoint_mode_off_constructs_plan_only(spark):
     """off-mode is the plan-only opt-out: constructing a routed
     operator's DataFrame must run ZERO Spark jobs."""
+    from fractions import Fraction
+
     from magi_etl_spark import chkpt
+    from magi_etl_spark.operators.behavior import funnel_stages
     from magi_etl_spark.operators.friedman import friedman_test
+    from magi_etl_spark.operators.setjoin import (
+        longest_common_runs,
+        similarity_join,
+    )
 
     df = spark.createDataFrame(
         _FRIEDMAN_ROWS, "key string, b int, g string, v int"
     )
+    events = spark.createDataFrame(
+        [(1, "2025-01-01 00:00:00", "view"), (1, "2025-01-01 00:05:00", "buy")],
+        "user_id long, ts string, event_type string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    sets = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "a"), (2, "b")], "doc_id long, tok string"
+    )
+    positions = spark.createDataFrame(
+        [(1, 0, "a"), (2, 0, "a")], "doc_id long, pos int, tok string"
+    )
+    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     prev = chkpt.set_checkpoint_mode("off")
     sc = spark.sparkContext
     group = "r15fix-chkpt-off-construct"
     sc.setJobGroup(group, "off-mode construction must be lazy")
     try:
         friedman_test(df, ["key"], "b", "g", F.col("v"))
+        funnel_stages(events, ["view", "buy"])
+        similarity_join(sets, Fraction(1, 2))
+        longest_common_runs(pairs, positions)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert jobs == [], (
             f"off-mode construction ran {len(jobs)} eager job(s)"
