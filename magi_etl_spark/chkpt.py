@@ -73,9 +73,18 @@ def set_checkpoint_mode(mode: str) -> str:
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialization barrier under the process-wide mode.
 
-    ``eager=True`` (the default, matching every current call site) runs
-    the job at call time; ``eager=False`` defers to first action where
-    the mode supports it (``persist`` simply skips the priming count).
+    ``eager=True`` (the default) runs the job at call time;
+    ``eager=False`` defers to first action where the mode supports it
+    (``persist`` simply skips the priming count).
+
+    Counted barrier: a loop that needs the barrier's row count anyway
+    (k-core's convergence test) writes ``x = materialize(df,
+    eager=False)`` then ``x.count()``.  Under ``local`` and ``persist``
+    the count's own job fills the barrier, so no separate barrier job
+    runs: on a frame ending in an aggregate, barrier plus count took 2
+    Spark jobs this way against 4 (``local``) and 6 (``persist``) for
+    the eager form followed by a count.  ``reliable`` took 3 either
+    way, since it writes its checkpoint files in a job of their own.
     """
     if _mode == "off":
         return df

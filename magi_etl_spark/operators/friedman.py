@@ -14,10 +14,13 @@ r_bj, treatment rank sums R_j = sum_b r_bj over n complete blocks:
 
 which reduces to the classic 12/(nk(k+1)) * sum R_j^2 - 3n(k+1) when
 no ties exist.  Everything rides the DOUBLED within-block rank
-``a = 2*avgrank`` (an exact integer — rankcorr's ``_rank2`` machinery,
-imported here, partitioned by (key, block)):
+``a = 2*avgrank = rank() + (rows with value <= x)``, an exact integer
+read from ONE window partitioned by (key, block) and ordered by the
+value (``rank()`` plus a ``count`` over the RANGE frame, which takes
+in the ties).  With R2_j = sum_b a_bj, and sum_j R2_j = n k (k+1)
+(each block's doubled ranks sum to k(k+1)):
 
-    (R_j - n(k+1)/2)^2 = (R2_j - n(k+1))^2 / 4
+    sum_j (R_j - n(k+1)/2)^2 = (sum_j R2_j^2 - n^2 k (k+1)^2) / 4
     A2 - C2 = (sum a^2 - n k (k+1)^2) / 4
 
 so the 4s cancel and T = (k-1) * NUM / DEN with NUM and DEN both
@@ -33,12 +36,14 @@ ragged blocks strictly shrinks n rather than silently shrinking k.
 
 Scale shape: one (key, block, treatment) cell scan collapses the
 corpus into an eagerly localCheckpointed cell frame (the input is
-referenced by five downstream frames — lazy, the compiled plan
+referenced by several downstream frames — lazy, the compiled plan
 re-derived it per reference; the q250 IPF lesson), so the corpus is
 scanned exactly ONCE regardless of plan fan-out; the rank window is
 partitioned by (key, block) — millions of tiny partitions, never a
-funnel; the rest is keyed aggregations.  Keys-with-no-complete-blocks
-still emit their row (n_blocks 0, t NULL — the mannkendall posture).
+funnel; the rest is two stacked keyed aggregations (per treatment,
+then per key) left-joined to the treatment counts.
+Keys-with-no-complete-blocks still emit their row (n_blocks 0, t
+NULL — the mannkendall posture).
 
 Scope note: the reference app has no blocked-design surface — this
 completes the rank family (Mann–Whitney q238, Spearman/Kendall q245,
@@ -49,6 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from magi_etl_spark.chkpt import materialize
 
@@ -75,10 +81,9 @@ def friedman_test(
     emit t NULL (the mannkendall posture: the row is present, the
     statistic is undefined).
 
-    Eager: the cell frame is localCheckpointed at call time (the q250
-    posture), so construction runs one bounded job."""
-    from magi_etl_spark.operators.rankcorr import _rank2
-
+    Eager: the cell frame and the complete-block frame pass
+    ``chkpt.materialize`` barriers at call time (the q250 posture), so
+    construction runs two bounded barriers."""
     if not key_cols:
         raise ValueError(
             "key_cols must be non-empty (the treatment/tie frames join "
@@ -87,15 +92,15 @@ def friedman_test(
         )
     reserved = {
         "k_treat", "n_blocks", "t",
-        "_b", "_g", "_x", "_a", "_cnt", "_nb", "_r2", "_a2", "_num",
+        "_b", "_g", "_x", "_a", "_cnt", "_nb", "_r2", "_a2", "_s2",
     } & (set(key_cols) | {block_col, treatment_col})
     if reserved:
         raise ValueError(
             f"key/block/treatment columns collide with working columns: "
             f"{sorted(reserved)}"
         )
-    # the cell frame is referenced by FIVE downstream frames (k-count,
-    # completeness filter, ranks, both aggregates) — left lazy, the
+    # the cell frame is referenced by several downstream frames
+    # (k-count, completeness filter, ranks) — left lazy, the
     # compiled plan re-derives the input per reference (20 corpus scans
     # at audit; the q250 IPF lesson), so it is materialized ONCE via
     # chkpt.materialize (eager localCheckpoint in the sandbox; the
@@ -135,36 +140,40 @@ def friedman_test(
         )
         .select(*key_cols, "_b")
     )
-    # the complete-block cell frame feeds the rank join and both final
-    # aggregates — checkpointed for the same reason as base (a strict
-    # subset of it, so the same bound)
+    # the complete-block cell frame is checkpointed for the same reason
+    # as base (a strict subset of it, so the same bound)
     cc = base.join(blocks, [*key_cols, "_b"]).transform(materialize)
-    ranked = cc.join(
-        _rank2(cc, [*key_cols, "_b"], "_x", "_a"), [*key_cols, "_b", "_x"]
+    w = Window.partitionBy(*key_cols, "_b").orderBy("_x")
+    ranked = cc.select(
+        *key_cols,
+        "_g",
+        (
+            F.rank().over(w)
+            + F.count(F.lit(1)).over(
+                w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+        )
+        .cast(_DEC)
+        .alias("_a"),
     )
+    # a complete block holds every treatment exactly once, so each
+    # treatment's row count is n
     per_treat = ranked.groupBy(*key_cols, "_g").agg(
-        F.sum(F.col("_a").cast(_DEC)).alias("_r2")
+        F.sum("_a").alias("_r2"),
+        F.sum(F.col("_a") * F.col("_a")).alias("_a2"),
+        F.count(F.lit(1)).alias("_nb"),
     )
-    per_key = ranked.groupBy(*key_cols).agg(
-        F.countDistinct("_b").alias("n_blocks"),
-        F.sum(F.col("_a").cast(_DEC) * F.col("_a").cast(_DEC)).alias("_a2"),
+    per_key = per_treat.groupBy(*key_cols).agg(
+        F.max("_nb").alias("n_blocks"),
+        F.sum("_a2").alias("_a2"),
+        F.sum(F.col("_r2") * F.col("_r2")).alias("_s2"),
     )
     n = F.col("n_blocks").cast(_DEC)
     k = F.col("k_treat").cast(_DEC)
-    num = (
-        per_treat.join(per_key.select(*key_cols, "n_blocks"), key_cols)
-        .join(kt, key_cols)
-        .groupBy(*key_cols)
-        .agg(
-            F.sum(
-                (F.col("_r2") - n * (k + 1)) * (F.col("_r2") - n * (k + 1))
-            ).alias("_num")
-        )
-    )
+    num = F.col("_s2") - n * n * k * (k + 1) * (k + 1)
     den = F.col("_a2") - n * k * (k + 1) * (k + 1)
     return (
         kt.join(per_key, key_cols, "left")
-        .join(num, key_cols, "left")
         .select(
             *key_cols,
             "k_treat",
@@ -175,7 +184,7 @@ def friedman_test(
                 & (den > 0),
                 F.round(
                     (F.col("k_treat") - 1).cast("double")
-                    * F.col("_num").cast("double")
+                    * num.cast("double")
                     / den.cast("double"),
                     round_dp,
                 ),

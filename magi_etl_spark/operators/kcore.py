@@ -11,9 +11,11 @@ edges touching them, until a fixed point (or the iteration cap — the
 cap keeps driver-side planning bounded and lets a SQL oracle unroll the
 same number of steps; convergence is reported so callers can see
 whether the cap bound).  Each round is exactly one keyed degree
-aggregate + one semi-join edge filter, with an eager ``chkpt`` barrier
-truncating lineage (the PageRank idiom) — per-round cost is linear in
-surviving edges, zero driver work beyond the loop counter.
+aggregate + one semi-join edge filter behind a ``chkpt`` barrier
+truncating lineage (the PageRank idiom); the barrier is lazy and the
+round's convergence count fills it, so no separate barrier job runs.
+Per-round cost is linear in surviving edges; the Python loop keeps
+only a counter.
 """
 
 from __future__ import annotations
@@ -111,12 +113,14 @@ def k_core(
     the matching oracle unrolls the identical rounds, so the contract
     is deterministic either way.
     """
-    e = materialize(edges)
+    # counted barriers: the lazy barrier is filled by the convergence
+    # count's own job (chkpt.materialize docstring)
+    e = materialize(edges, eager=False)
     n_prev = e.count()
     for _ in range(max_iters):
         if n_prev == 0:
             break
-        e = materialize(peel_round(e, k, broadcast_vertices))
+        e = materialize(peel_round(e, k, broadcast_vertices), eager=False)
         n_now = e.count()
         if n_now == n_prev:
             # fixed point: every remaining vertex already has deg >= k,

@@ -11,10 +11,15 @@ fully synchronous (every round reads only the previous round's labels),
 the initial label is the vertex id, and the majority vote breaks ties
 to the SMALLEST label — so a SQL oracle replays every round exactly.
 
-Scale shape: one keyed shuffle join + two aggregates per round over the
-(undirected) edge list; labels are ``localCheckpoint``-ed each round so
-lineage stays flat (the operators/graph.py discipline).  No step is
-ever quadratic in vertices; rounds are a fixed small constant.
+Scale shape: one keyed shuffle join + ONE aggregate keyed on the
+vertex id per round over the (undirected) edge list; the first round
+needs no join, since its labels are the vertex ids.  The vote is
+Spark's deterministic ``mode(label, true)``, which returns the smallest
+of equally frequent labels, so no ``(id, label)`` count aggregate (and
+its exchange) precedes it.  Labels pass a ``chkpt.materialize``
+barrier each round so lineage stays flat (the operators/graph.py
+discipline).  No step is ever quadratic in vertices; rounds are a
+fixed small constant.
 """
 
 from __future__ import annotations
@@ -43,18 +48,21 @@ def label_propagation(
     edge endpoints; every vertex has at least one neighbor by
     construction, so the majority vote is total."""
     und = undirect(edges, src_col, dst_col).transform(materialize)
-    labels = und.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-    for _ in range(n_rounds):
-        nbr = und.join(
-            labels.withColumnRenamed("id", "dst"), "dst"
+    labels = und.select(
+        F.col("src").alias("id"), F.col("src").alias("label")
+    ).distinct()
+    for i in range(n_rounds):
+        # every vertex starts labelled with its own id, so the first
+        # round's neighbor labels are the neighbor ids: no join
+        nbr = (
+            und.join(labels.withColumnRenamed("id", "dst"), "dst")
+            if i
+            else und.withColumn("label", F.col("dst"))
         ).select(F.col("src").alias("id"), "label")
-        votes = nbr.groupBy("id", "label").agg(F.count(F.lit(1)).alias("n"))
-        labels = votes.groupBy("id").agg(
-            F.max_by("label", F.struct(F.col("n"), -F.col("label"))).alias(
-                "label"
-            )
+        # deterministic mode: the most frequent label, ties to the
+        # smallest — the whole vote is one aggregate keyed on id
+        labels = nbr.groupBy("id").agg(
+            F.mode("label", True).alias("label")
         ).transform(materialize)
     return labels
 

@@ -221,6 +221,10 @@ _PRIORITY: list[str] = [
     "q244_grid_dbscan",
     "q250_survey_raking",
     "q255_dbscan_profile",
+    # Rule-2 re-entry: the label-propagation vote became one
+    # deterministic-mode aggregate (operators/labelprop.py), displacing
+    # q147_triangle_count (verified, sources unchanged) to the tail.
+    "q221_label_propagation",
     # ROUND-15 WINDOW — COVERAGE.md "Planned r15 window", executed
     # verbatim: CORRECTNESS_r14 was 50/50 hash-green (zero err, no
     # failure re-entries), so rule 1 front-loads the r14 staged wave
@@ -244,7 +248,6 @@ _PRIORITY: list[str] = [
     # planned fill's LAST five entries (q22 q26 q57 q98 q104 -> r16).
     # q39/q137/q202 were adjudicated BY DESIGN (zero live scans; the
     # old audit string-counted cache-fill re-prints), costing nothing.
-    "q147_triangle_count",
     "q116_pagerank",
     "q160_personalized_pagerank",
     "q157_revenue_concentration",
@@ -293,7 +296,6 @@ _PRIORITY: list[str] = [
     # window").
     "q203_lorenz_points",
     "q220_kcenter_coreset",
-    "q221_label_propagation",
     "q222_good_turing",
     "q223_epoch_plan",
     "q224_feature_hashing",

@@ -779,8 +779,8 @@ def _kcore_oracle() -> str:
 def q199_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the supplier co-order graph (suppliers are adjacent
     when they serve the same order) after 8 peeling rounds — each round
-    one degree aggregate + one semi-join edge filter with an eager
-    localCheckpoint (the PageRank lineage idiom).  The oracle unrolls
+    one degree aggregate + one semi-join edge filter behind a counted
+    chkpt barrier (the PageRank lineage idiom).  The oracle unrolls
     the identical 8 rounds as chained CTEs."""
     from magi_etl_spark.operators.kcore import cooccurrence_edges, k_core
 

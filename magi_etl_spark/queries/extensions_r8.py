@@ -164,9 +164,10 @@ def q221_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (moot under disjoint ranges, but kept aligned by construction).
     Deterministic LPA: synchronous updates, identity initialization,
     neighbor-majority vote with smallest-label tie-break — the oracle
-    unrolls all three rounds.  One keyed shuffle join + two aggregates
-    per round, labels localCheckpoint-ed so lineage stays flat (the
-    graph.py discipline)."""
+    unrolls all three rounds.  One keyed shuffle join + one aggregate
+    keyed on the vertex per round (the first round needs no join),
+    labels behind a chkpt barrier so lineage stays flat (the graph.py
+    discipline)."""
     from magi_etl_spark.operators.labelprop import label_propagation
 
     o = load_table(spark, sf_dir, "orders")

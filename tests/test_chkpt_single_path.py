@@ -62,6 +62,8 @@ _MODE_QUERIES = [
     "q230_vocab_cover",  # maxcover
     "q114_incremental_lsh_index",  # lsh_index
     "q79_concurrent_fanout",  # queries/engine.py run_concurrent
+    "q221_label_propagation",  # labelprop
+    "q256_friedman_dow",  # friedman
 ]
 
 

@@ -335,9 +335,11 @@ def test_tail_queries_with_changed_sources_reenter_the_window():
         changed = _git(
             "diff", "--name-only", gates[last[name]], "HEAD", "--", *sorted(deps)
         ).split()
-        # uncommitted edits count too — the window must be correct at the
-        # tree the driver will actually run
-        changed += _git("diff", "--name-only", "--", *sorted(deps)).split()
+        # uncommitted edits count too, staged or not — the window must be
+        # correct at the tree the external gate will actually run
+        changed += _git(
+            "diff", "HEAD", "--name-only", "--", *sorted(deps)
+        ).split()
         real = sorted(
             {f for f in changed if _really_changed(gates[last[name]], f)}
         )

@@ -51,6 +51,21 @@ def test_friedman_matches_reference_with_ties(spark):
     assert abs(out.t - round(exp, 6)) < 1e-9
 
 
+def test_friedman_ranks_in_one_window_without_a_join_on_the_value(spark):
+    """The doubled average rank comes from ONE window over (key, block)
+    ordered by the value (``rank()`` plus a RANGE-frame count), not from
+    a per-value count aggregate joined back on ``_x``."""
+    from magi_etl_spark.operators.friedman import friedman_test
+
+    rows = [("k", b, g, (b * g) % 3) for b in range(4) for g in range(3)]
+    df = spark.createDataFrame(rows, "key string, b int, g int, x int")
+    out = friedman_test(df, ["key"], "b", "g", F.col("x"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    assert sum(" Window [" in ln for ln in lines) == 1, plan
+    assert not [ln for ln in lines if "Join" in ln and "_x#" in ln], plan
+
+
 def test_friedman_drops_incomplete_blocks_and_keeps_degenerate_keys(spark):
     from magi_etl_spark.operators.friedman import friedman_test
 

@@ -105,6 +105,28 @@ def test_label_propagation_matches_python_reference(spark, n_rounds):
     assert got == _lpa_reference(edges, n_rounds)
 
 
+def test_label_propagation_round_is_one_aggregate_keyed_on_id(spark):
+    """Each round's vote is ONE aggregate keyed on ``id`` (deterministic
+    ``mode``): no ``(id, label)`` count aggregate and no exchange on
+    ``(id, label)`` ahead of it.  Planned under the plan-only ``off``
+    checkpoint mode so both rounds stay in one plan."""
+    import re
+
+    from magi_etl_spark import chkpt
+    from magi_etl_spark.operators.labelprop import label_propagation
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
+    prev = chkpt.set_checkpoint_mode("off")
+    try:
+        plan = label_propagation(df, n_rounds=2)._jdf.queryExecution()
+        plan = plan.executedPlan().toString()
+    finally:
+        chkpt.set_checkpoint_mode(prev)
+    assert plan.count("partial_mode(") == 2, plan
+    assert not re.search(r"keys=\[id#\d+L?, label#", plan), plan
+    assert not re.search(r"hashpartitioning\(id#\d+L?, label#", plan), plan
+
+
 def test_label_propagation_separates_disconnected_communities(spark):
     from magi_etl_spark.operators.labelprop import label_propagation
 

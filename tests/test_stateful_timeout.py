@@ -5,6 +5,9 @@ sessionization of the same events."""
 
 from __future__ import annotations
 
+import os
+import time
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Window as W
@@ -55,6 +58,11 @@ def test_gap_sessions_event_timeout_matches_batch(spark, tmp_path):
     # final timer batch at watermark 24h, closing u4 too — only u5's
     # session is still open when the stream drains
     _write_events(src / "d.parquet", [(5, 24.0)])
+    # the file source takes files in modification-time order (ms);
+    # files written back to back can share one, so give each its own
+    t0 = time.time() - 60
+    for i, name in enumerate("abcd"):
+        os.utime(src / f"{name}.parquet", (t0 + i, t0 + i))
 
     stream = stream_events(spark, str(src), max_files_per_trigger=1)
     q = (
