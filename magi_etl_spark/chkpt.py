@@ -36,8 +36,8 @@ Modes (``SPARK_GRAFT_CHECKPOINT_MODE`` env var or
 
 Operators route their barriers through :func:`materialize`; a guard
 test (``tests/test_chkpt_single_path.py``) rejects raw
-``.localCheckpoint(`` / ``.checkpoint(`` calls anywhere else, apart
-from the few sites it still lists as not yet routed.  The knob is
+``.localCheckpoint(`` / ``.checkpoint(`` calls anywhere else, and pins
+the count of raw ``.persist(`` / ``.cache(`` sites per module.  The knob is
 process-wide because the choice is a deployment property, not a
 per-call one.
 """

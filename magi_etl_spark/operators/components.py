@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
+
 
 def connected_components(
     edges: DataFrame,
@@ -47,14 +49,13 @@ def connected_components(
     sym = fwd.union(
         edges.select(F.col(dst).alias("v"), F.col(src).alias("n"))
     ).persist()
-    labels = (
+    # eager barrier: iterative driver loops must truncate lineage each
+    # round, or round k re-executes rounds 1..k-1 and the plan grows
+    # without bound
+    labels = materialize(
         sym.groupBy("v")
         .agg(F.min("n").alias("mn"))
         .select("v", F.least("v", "mn").alias("label"))
-        # eager localCheckpoint: iterative driver loops must truncate
-        # lineage each round, or round k re-executes rounds 1..k-1 and
-        # the plan grows without bound
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iterations):
         # One-hop propagation AND pointer jumping in a single join: the
@@ -81,16 +82,14 @@ def connected_components(
             .groupBy("v")
             .agg(F.min("n_label").alias("min_label"))
         )
-        step = (
-            labels.join(new, "v", "left")
-            .select(
+        step = materialize(
+            labels.join(new, "v", "left").select(
                 "v",
                 "label",
                 F.least(
                     F.col("label"), F.coalesce("min_label", "label")
                 ).alias("new_label"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = step.where(F.col("new_label") != F.col("label")).count()
         labels = step.select("v", F.col("new_label").alias("label"))

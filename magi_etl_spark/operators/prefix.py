@@ -6,10 +6,10 @@ trap — a single-partition window that serializes the whole frame through
 one task.  This operator computes it in parallel instead:
 
 1. Range-partition on the order key (sampled boundaries), materialize
-   ONCE (eager ``localCheckpoint``) so every consumer reads the same
-   partition assignment — ReusedExchange de-duplication is an optimizer
-   feature, not a correctness guarantee, because sampled boundaries can
-   differ between independent materializations.
+   ONCE (an eager ``chkpt.materialize`` barrier) so every consumer
+   reads the same partition assignment — ReusedExchange de-duplication
+   is an optimizer feature, not a correctness guarantee, because sampled
+   boundaries can differ between independent materializations.
 2. Per-partition local rank/cumsum with a window PARTITIONED BY the
    physical partition id (fully parallel).
 3. Aggregate one ``(rows, sum)`` pair per partition — a P-row frame —
@@ -46,12 +46,13 @@ def ranked_prefix_sum(
     """All input columns + ``rank`` (1-based global position in ``order``)
     and ``cum`` (running total of ``value_col`` through this row);
     ``include_total`` adds a broadcast ``total`` column."""
+    from magi_etl_spark.chkpt import materialize
     from magi_etl_spark.functions import pinned_partition
 
-    parts = (
-        df.repartitionByRange(num_partitions, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    parts = materialize(
+        df.repartitionByRange(num_partitions, *order).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     local_w = W.partitionBy("_pid").orderBy(*order)
     local = parts.select(

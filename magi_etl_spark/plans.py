@@ -163,6 +163,15 @@ def _sort_unordered_lists(s: str) -> str:
     return "".join(out)
 
 
+def canonical_plan(plan: str) -> str:
+    """The canonical string :func:`plan_fingerprint` hashes: ``plan`` (a
+    physical plan's ``toString()``) with run-specific details stripped,
+    the synthetic ``gid`` values masked and unordered lists sorted."""
+    s = _canon_v1(plan)
+    s = re.sub(r"\(gid# = \d+L?\)", "(gid# = <g>)", s)
+    return _sort_unordered_lists(s)
+
+
 def plan_fingerprint(df: DataFrame | None, plan: str | None = None) -> str:
     """Stable hash of the canonicalized initial physical plan (v3).
     Canonicalization strips everything run-specific: expression/plan
@@ -180,9 +189,7 @@ def plan_fingerprint(df: DataFrame | None, plan: str | None = None) -> str:
     ADVICE)."""
     import hashlib
 
-    s = _canon_v1(plan if plan is not None else _physical(df))
-    s = re.sub(r"\(gid# = \d+L?\)", "(gid# = <g>)", s)
-    s = _sort_unordered_lists(s)
+    s = canonical_plan(plan if plan is not None else _physical(df))
     return hashlib.md5(s.encode()).hexdigest()[:12]
 
 

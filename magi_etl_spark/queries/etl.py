@@ -165,7 +165,7 @@ def q89_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, so a typed-frame hasher sees ``123.0`` vs Spark's ``123`` while
     a fetchall() cell compare sees equal ints.  The outer SELECT now casts
     ``value_c`` to BIGINT, and two structural guards prevent recurrence:
-    ``tests/test_oracle_types.py`` lints every registered+staged oracle
+    ``tests/test_oracle_types.py`` lints every registered oracle
     for HUGEINT/UHUGEINT output columns, and the local harness compares
     typed fetchdf frames in addition to fetchall values.
     """

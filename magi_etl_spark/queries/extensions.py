@@ -1,17 +1,4 @@
-"""STAGED r5 gate queries over the round-4 operator extensions.
-
-These are fully-formed gate entries — Spark program + DuckDB oracle,
-column-aligned — kept in a SEPARATE registry (``EXT_QUERIES`` /
-``EXT_ORACLE``) that `__spark_entry__.queries()` does NOT include yet:
-the r4 driver window is full and pre-committed, and the gate-window
-invariant test correctly refuses never-verified queries outside it.
-At the r5 rotation these move into the main registry verbatim (merge
-the dicts, front-load the names in ``_PRIORITY`` per rotation rule 1).
-
-Until then `tests/test_extension_queries.py` runs the SAME DuckDB
-comparison the driver runs (tests/oracle_harness.py) over every entry
-at sf0.001, so the staging surface carries hash-level correctness
-evidence from day one.
+"""Registered queries over the round-4 operator extensions.
 
 Non-SQL-expressible entries (iterative label propagation inside
 ``semantic_dedup``; numpy Lloyd training inside PQ) register without
@@ -24,30 +11,14 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
 
-EXT_QUERIES: dict[str, QueryFn] = {}
-EXT_ORACLE: dict[str, str] = {}
-
-
-def ext_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT_QUERIES[name] = fn
-        if oracle is not None:
-            EXT_ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-@ext_query(
+@query(
     "q95_salted_hot_join",
     oracle="""
     SELECT c.c_mktsegment AS segment,
@@ -77,7 +48,7 @@ def q95_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q96_fuzzy_linkage",
     oracle="""
     WITH dict AS (SELECT DISTINCT p_name AS dict_name FROM part),
@@ -124,7 +95,7 @@ def q96_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q97_snm_pairs",
     oracle="""
     WITH ranked AS (
@@ -160,7 +131,7 @@ def q97_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q98_rrf_fusion",
     oracle=r"""
     WITH toks AS (
@@ -253,7 +224,7 @@ def q98_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q99_temperature_mix",
     oracle="""
     WITH counts AS (
@@ -303,7 +274,7 @@ def q99_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q100_redact_pii",
     oracle=r"""
     SELECT doc_id,
@@ -334,7 +305,7 @@ def q100_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q101_expectation_suite",
     oracle="""
     SELECT 'fk_customer_mod3' AS check, CAST(COUNT(*) AS BIGINT) AS violations
@@ -386,7 +357,7 @@ def q101_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@ext_query(
+@query(
     "q102_incremental_extract",
     oracle="""
     SELECT CAST(ts AS DATE) AS day,
@@ -423,7 +394,7 @@ def q102_incremental_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q103_winsorize",
     oracle="""
     WITH b AS (
@@ -467,7 +438,7 @@ def q103_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q105_paragraph_dedup",
     oracle=r"""
     WITH docs AS (
@@ -539,7 +510,7 @@ def q105_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paragraph_dedup(d, "doc_id", "text")
 
 
-@ext_query(
+@query(
     "q107_join_estimate",
     oracle="""
     WITH la AS (
@@ -655,7 +626,7 @@ FROM assigned a LEFT JOIN comp c ON c.x = a.vec_id
 """
 
 
-@ext_query("q104_semantic_dedup", oracle=_Q104_ORACLE)
+@query("q104_semantic_dedup", oracle=_Q104_ORACLE)
 def q104_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup kept-set over the embeddings corpus (hash-init IVF,
     threshold 0.99).  Hash-oracled in r6 (r5 VERDICT item 6): the
@@ -754,7 +725,7 @@ def _q106_oracle(m: int = 16, k: int = 16, rerank: int = 40, topk: int = 10) -> 
     """
 
 
-@ext_query("q106_pq_refine_topk", oracle=_q106_oracle())
+@query("q106_pq_refine_topk", oracle=_q106_oracle())
 def q106_pq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-compressed ANN with exact refine for query vectors 0-2.
     Hash-oracled in r6 (r5 VERDICT item 6): with ``init="hash"`` +
@@ -772,7 +743,7 @@ def q106_pq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk_rerank(enc, books, q, em, k=10, rerank=40)
 
 
-@ext_query(
+@query(
     "q108_group_sample_n",
     oracle="""
     WITH r AS (
@@ -803,7 +774,7 @@ def q108_group_sample_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_n_per_group(e, ["event_type"], "event_id", n=50)
 
 
-@ext_query(
+@query(
     "q109_unigram_logprob",
     oracle=r"""
     WITH toks AS (
@@ -839,7 +810,7 @@ def q109_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q110_versioned_table",
     oracle="""
     SELECT CAST(ts AS DATE) AS day,
@@ -879,7 +850,7 @@ def q110_versioned_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext_query(
+@query(
     "q111_tfidf_keywords",
     oracle=r"""
     WITH toks AS (
@@ -920,7 +891,7 @@ def q111_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_keywords(d, k=5)
 
 
-@ext_query(
+@query(
     "q112_semantic_decontaminate",
     oracle="""
     WITH bench AS (
@@ -956,7 +927,7 @@ def q112_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_decontaminate(em, bench, threshold=0.999).select("vec_id")
 
 
-@ext_query(
+@query(
     "q113_corpus_curation",
     oracle=r"""
     WITH RECURSIVE docs0 AS (
@@ -1103,7 +1074,7 @@ _SHINGLES = r"""
 """
 
 
-@ext_query(
+@query(
     "q114_incremental_lsh_index",
     oracle=f"""
     WITH {_SHINGLES},
@@ -1158,7 +1129,7 @@ def q114_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_lsh_pairs(inc, path, n=3, n_hashes=4, band_size=2)
 
 
-@ext_query(
+@query(
     "q115_incremental_ivf_index",
     oracle="""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1304,7 +1275,7 @@ def _pagerank_oracle(iterations: int, damping: float) -> str:
     )
 
 
-@ext_query("q116_pagerank", oracle=_pagerank_oracle(10, 0.85))
+@query("q116_pagerank", oracle=_pagerank_oracle(10, 0.85))
 def q116_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer→supplier purchase graph (an edge per
     lineitem through its order; suppliers are offset into their own id

@@ -1,15 +1,4 @@
-"""STAGED r11 gate queries over the round-10 operator additions.
-
-Same staging pattern six prior rotations proved out: the r10 driver
-window was full (the EXT6 merge + 16 dependency re-entries + the
-28-slot oldest-first tail refresh, COVERAGE.md "Planned r10 window"),
-and the gate-window invariant test refuses never-verified queries
-outside it — so new operators landed here, in a SEPARATE registry
-(``EXT7_QUERIES`` / ``EXT7_ORACLE``), with the driver's own hash
-comparison run over every entry each suite run.  At the r11 rotation
-these MERGED at the front of the window (COVERAGE.md "Planned r11
-window") — the sweep now rides tests/test_queries_oracle.py like every
-merged wave.
+"""Registered queries over the round-10 operator additions.
 
 Round-10 wave — deliberately ≤6 (the r8 verdict: waves must stay
 smaller than the tail-fill slack), six queries across six NEW operator
@@ -32,33 +21,17 @@ re-entries):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT7_QUERIES: dict[str, QueryFn] = {}
-EXT7_ORACLE: dict[str, str] = {}
-
-
-def ext7_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT7_QUERIES[name] = fn
-        if oracle is not None:
-            EXT7_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- CUPED variance reduction ------------------------------------------------
 
 
-@ext7_query(
+@query(
     "q232_cuped_adjustment",
     oracle="""
     WITH per_cust AS (
@@ -178,7 +151,7 @@ def q232_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact distributed quantiles ----------------------------------------------
 
 
-@ext7_query(
+@query(
     "q233_exact_quantiles",
     oracle="""
     WITH v AS (
@@ -229,7 +202,7 @@ def q233_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q234_TERMS = ["merge", "scan", "sort"]
 
 
-@ext7_query(
+@query(
     "q234_boolean_retrieval",
     oracle=f"""
     WITH p AS (
@@ -265,7 +238,7 @@ def q234_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- two-sample KS drift -------------------------------------------------------
 
 
-@ext7_query(
+@query(
     "q235_ks_drift",
     oracle="""
     WITH base AS (
@@ -323,7 +296,7 @@ def q235_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- stratified log-rank churn test --------------------------------------------
 
 
-@ext7_query(
+@query(
     "q236_logrank_churn",
     oracle="""
     WITH gmax AS (SELECT MAX(CAST(ts AS DATE)) AS gd FROM events),
@@ -420,7 +393,7 @@ def q236_logrank_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- delta-method ratio CI -----------------------------------------------------
 
 
-@ext7_query(
+@query(
     "q237_ratio_metric_ci",
     oracle="""
     WITH units AS (

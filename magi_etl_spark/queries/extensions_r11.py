@@ -1,14 +1,4 @@
-"""STAGED r12 gate queries over the round-11 operator additions.
-
-Same staging pattern seven prior rotations proved out: the r11 driver
-window is full (the EXT7 merge + 2 dependency re-entries + the 42-slot
-oldest-first tail refresh, COVERAGE.md "Planned r11 window"), and the
-gate-window invariant test refuses never-verified queries outside it —
-so new operators land here, in a SEPARATE registry (``EXT8_QUERIES`` /
-``EXT8_ORACLE``) that ``__spark_entry__.queries()`` does NOT include
-yet, with the driver's own hash comparison run over every entry each
-suite run (tests/test_r11_wave.py).  At the r12 rotation these merge
-and the window refills with tail re-entries (oldest driver rows first).
+"""Registered queries over the round-11 operator additions.
 
 Round-11 wave — deliberately ≤6 (the r8 verdict: waves must stay
 smaller than the tail-fill slack), six queries across six NEW operator
@@ -32,33 +22,17 @@ re-entries):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT8_QUERIES: dict[str, QueryFn] = {}
-EXT8_ORACLE: dict[str, str] = {}
-
-
-def ext8_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT8_QUERIES[name] = fn
-        if oracle is not None:
-            EXT8_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- exact per-day ROC-AUC -----------------------------------------------------
 
 
-@ext8_query(
+@query(
     "q238_group_auc",
     oracle="""
     WITH base AS (
@@ -124,7 +98,7 @@ def q238_group_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q239_EPS = 1_500_000  # micro-degree radius (~1.5 deg in the planar metric)
 
 
-@ext8_query(
+@query(
     "q239_spatial_pairs",
     oracle=f"""
     WITH c AS (
@@ -258,7 +232,7 @@ def _q240_oracle() -> str:
     """
 
 
-@ext8_query("q240_daily_autocorrelation", oracle=_q240_oracle())
+@query("q240_daily_autocorrelation", oracle=_q240_oracle())
 def q240_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACF at lags 1..7 of the daily event-count series per event type:
     exact integer sufficient statistics (cross-products and squares in
@@ -277,7 +251,7 @@ def q240_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Benjamini-Hochberg FDR ----------------------------------------------------
 
 
-@ext8_query(
+@query(
     "q241_bh_fdr",
     oracle="""
     WITH hyp AS (
@@ -374,7 +348,7 @@ def q241_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Cochran-Mantel-Haenszel ---------------------------------------------------
 
 
-@ext8_query(
+@query(
     "q242_cmh_high_value",
     oracle="""
     WITH base AS (
@@ -479,7 +453,7 @@ def q242_cmh_high_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q243_TERMS = ["data", "merge", "query"]
 
 
-@ext8_query(
+@query(
     "q243_ndcg_eval",
     oracle=f"""
     WITH p AS (

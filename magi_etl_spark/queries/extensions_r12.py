@@ -1,14 +1,4 @@
-"""STAGED r13 gate queries over the round-12 operator additions.
-
-Same staging pattern eight prior rotations proved out: the r12 driver
-window is full (the EXT8 merge + the 44-slot oldest-first tail refresh,
-COVERAGE.md "Planned r12 window"), and the gate-window invariant test
-refuses never-verified queries outside it — so new operators land here,
-in a SEPARATE registry (``EXT9_QUERIES`` / ``EXT9_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r12.py).  At the r13 rotation these merge and
-the window refills with tail re-entries (oldest driver rows first).
+"""Registered queries over the round-12 operator additions.
 
 Round-12 wave — deliberately ≤6, six queries across six NEW operator
 modules (no gate-verified file is touched, so no extra dependency
@@ -34,27 +24,11 @@ re-entries):
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT9_QUERIES: dict[str, QueryFn] = {}
-EXT9_ORACLE: dict[str, str] = {}
-
-
-def ext9_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT9_QUERIES[name] = fn
-        if oracle is not None:
-            EXT9_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- grid DBSCAN ---------------------------------------------------------------
@@ -72,7 +46,7 @@ _DB_EPS = 4_000_000
 _DB_MIN_PTS = 4
 
 
-@ext9_query(
+@query(
     "q244_grid_dbscan",
     # MATERIALIZED is load-bearing: the recursive reach CTE references
     # core_edges once per ITERATION, and without materialization DuckDB
@@ -175,7 +149,7 @@ def q244_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rank correlation ----------------------------------------------------------
 
 
-@ext9_query(
+@query(
     "q245_rank_correlation",
     oracle="""
     WITH daily AS (
@@ -285,7 +259,7 @@ def q245_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Mann-Kendall trend --------------------------------------------------------
 
 
-@ext9_query(
+@query(
     "q246_mann_kendall_trend",
     oracle="""
     WITH daily AS (
@@ -350,7 +324,7 @@ def q246_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- McNemar -------------------------------------------------------------------
 
 
-@ext9_query(
+@query(
     "q247_mcnemar_switch",
     oracle="""
     WITH subj AS (
@@ -416,7 +390,7 @@ def q247_mcnemar_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Cohen's kappa -------------------------------------------------------------
 
 
-@ext9_query(
+@query(
     "q248_rater_agreement",
     oracle="""
     WITH rated AS (
@@ -486,7 +460,7 @@ def q248_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RMST_TAU = 14
 
 
-@ext9_query(
+@query(
     "q249_rmst_arms",
     oracle=f"""
     WITH spans AS (

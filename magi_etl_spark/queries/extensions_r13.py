@@ -1,14 +1,4 @@
-"""STAGED r14 gate queries over the round-13 operator additions.
-
-Same staging pattern nine prior rotations proved out: the r13 driver
-window is full (the EXT9 merge + the 44-slot oldest-first tail refresh,
-COVERAGE.md "Planned r13 window"), and the gate-window invariant test
-refuses never-verified queries outside it — so new operators land here,
-in a SEPARATE registry (``EXT10_QUERIES`` / ``EXT10_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r13.py).  At the r14 rotation these merge and
-the window refills with tail re-entries (oldest driver rows first).
+"""Registered queries over the round-13 operator additions.
 
 Round-13 wave — deliberately ≤6, six queries across six NEW operator
 modules (no gate-verified file is touched, so no extra dependency
@@ -35,27 +25,11 @@ re-entries):
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT10_QUERIES: dict[str, QueryFn] = {}
-EXT10_ORACLE: dict[str, str] = {}
-
-
-def ext10_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT10_QUERIES[name] = fn
-        if oracle is not None:
-            EXT10_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- survey raking / IPF --------------------------------------------------
@@ -116,7 +90,7 @@ def _rake_oracle(rounds: int) -> str:
     )
 
 
-@ext10_query("q250_survey_raking", oracle=_rake_oracle(_RAKE_ROUNDS))
+@query("q250_survey_raking", oracle=_rake_oracle(_RAKE_ROUNDS))
 def q250_survey_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rake the first-half-window (event_type x day-index-mod-7) cell
     counts to the FULL-window marginals — the classic calibration of a
@@ -152,7 +126,7 @@ def q250_survey_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Kruskal-Wallis H -------------------------------------------------------
 
 
-@ext10_query(
+@query(
     "q251_kruskal_cohorts",
     oracle="""
     WITH base AS MATERIALIZED (
@@ -224,7 +198,7 @@ def q251_kruskal_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- CUSUM change-point localization ----------------------------------------
 
 
-@ext10_query(
+@query(
     "q252_cusum_localization",
     oracle="""
     WITH d AS MATERIALIZED (
@@ -285,7 +259,7 @@ def q252_cusum_localization(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Brier / reliability ------------------------------------------------------
 
 
-@ext10_query(
+@query(
     "q253_brier_calibration",
     oracle="""
     WITH rated AS MATERIALIZED (
@@ -337,7 +311,7 @@ def q253_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- weighted kappa -----------------------------------------------------------
 
 
-@ext10_query(
+@query(
     "q254_weighted_kappa",
     oracle="""
     WITH rated AS MATERIALIZED (
@@ -409,7 +383,7 @@ _DBS_EPS = 6_000_000
 _DBS_MIN_PTS = 4
 
 
-@ext10_query(
+@query(
     "q255_dbscan_profile",
     # MATERIALIZED is load-bearing on pairs/core_edges: the recursive
     # reach CTE re-executes non-materialized CTEs per iteration (the

@@ -1,15 +1,4 @@
-"""STAGED r15 gate queries over the round-14 operator additions.
-
-Same staging pattern ten prior rotations proved out: the r14 driver
-window is full (the EXT10 merge + the q245 rule-2 re-entry + the
-43-slot oldest-first tail refresh, COVERAGE.md "Planned r14 window"),
-and the gate-window invariant test refuses never-verified queries
-outside it — so new operators land here, in a SEPARATE registry
-(``EXT11_QUERIES`` / ``EXT11_ORACLE``) that ``__spark_entry__.
-queries()`` does NOT include yet, with the driver's own hash
-comparison run over every entry each suite run
-(tests/test_extensions_r14.py).  At the r15 rotation these merge and
-the window refills with tail re-entries (oldest driver rows first).
+"""Registered queries over the round-14 operator additions.
 
 Round-14 wave — deliberately ≤6, six queries across six NEW operator
 modules (no gate-verified file is touched, so no extra dependency
@@ -35,33 +24,17 @@ members:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT11_QUERIES: dict[str, QueryFn] = {}
-EXT11_ORACLE: dict[str, str] = {}
-
-
-def ext11_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT11_QUERIES[name] = fn
-        if oracle is not None:
-            EXT11_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- Friedman test -----------------------------------------------------------
 
 
-@ext11_query(
+@query(
     "q256_friedman_dow",
     oracle="""
     WITH d AS MATERIALIZED (
@@ -154,7 +127,7 @@ def q256_friedman_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Jonckheere-Terpstra -----------------------------------------------------
 
 
-@ext11_query(
+@query(
     "q257_jonckheere_cohorts",
     oracle="""
     WITH base AS MATERIALIZED (
@@ -226,7 +199,7 @@ def q257_jonckheere_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Cliff's delta -------------------------------------------------------------
 
 
-@ext11_query(
+@query(
     "q258_cliffs_effect",
     oracle="""
     WITH base AS (
@@ -285,7 +258,7 @@ def q258_cliffs_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Cucconi location-scale ----------------------------------------------------
 
 
-@ext11_query(
+@query(
     "q259_cucconi_shift",
     oracle="""
     WITH base AS MATERIALIZED (
@@ -485,7 +458,7 @@ def _qr_oracle(rounds: int, tn: int, td: int) -> str:
     )
 
 
-@ext11_query(
+@query(
     "q260_quantile_line", oracle=_qr_oracle(_QR_ROUNDS, _QR_TN, _QR_TD)
 )
 def q260_quantile_line(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,7 +493,7 @@ def q260_quantile_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ECE / MCE calibration summary ----------------------------------------------
 
 
-@ext11_query(
+@query(
     "q261_calibration_summary",
     oracle="""
     WITH rated AS MATERIALIZED (

@@ -1,15 +1,4 @@
-"""STAGED r16 gate queries over the round-15 operator additions.
-
-Same staging pattern eleven prior rotations proved out: the r15 driver
-window is full (the EXT11 merge + the five scan-audit rule-2
-re-entries + the 39-slot oldest-first tail refresh, COVERAGE.md
-"Planned r15 window"), and the gate-window invariant test refuses
-never-verified queries outside it — so new operators land here, in a
-SEPARATE registry (``EXT12_QUERIES`` / ``EXT12_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r15.py).  At the r16 rotation these merge and
-the window refills with tail re-entries (oldest driver rows first).
+"""Registered queries over the round-15 operator additions.
 
 Round-15 wave — deliberately ≤6, six queries across six NEW operator
 modules (no gate-verified file is touched, so no extra dependency
@@ -37,27 +26,11 @@ their missing members:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT12_QUERIES: dict[str, QueryFn] = {}
-EXT12_ORACLE: dict[str, str] = {}
-
-
-def ext12_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT12_QUERIES[name] = fn
-        if oracle is not None:
-            EXT12_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # shared blocked-rank CTE prefix (identical to q256's frame): daily
@@ -100,7 +73,7 @@ _BLOCKED_PREFIX = """
 # --- Page's L trend test ---------------------------------------------------
 
 
-@ext12_query(
+@query(
     "q262_page_dow_trend",
     oracle=_BLOCKED_PREFIX
     + """,
@@ -165,7 +138,7 @@ def q262_page_dow_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Kendall's W -----------------------------------------------------------
 
 
-@ext12_query(
+@query(
     "q263_weekly_concordance",
     oracle=_BLOCKED_PREFIX
     + """,
@@ -239,7 +212,7 @@ def q263_weekly_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Cochran's Q -----------------------------------------------------------
 
 
-@ext12_query(
+@query(
     "q264_cochran_parity",
     oracle="""
     WITH base AS MATERIALIZED (
@@ -312,7 +285,7 @@ def q264_cochran_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Brunner–Munzel --------------------------------------------------------
 
 
-@ext12_query(
+@query(
     "q265_user_parity_bm",
     oracle="""
     WITH cells AS MATERIALIZED (
@@ -409,7 +382,7 @@ def q265_user_parity_bm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Hodges–Lehmann --------------------------------------------------------
 
 
-@ext12_query(
+@query(
     "q266_parity_shift_hl",
     oracle="""
     WITH cells AS MATERIALIZED (
@@ -490,7 +463,7 @@ def q266_parity_shift_hl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Grubbs ----------------------------------------------------------------
 
 
-@ext12_query(
+@query(
     "q267_daily_outlier",
     oracle="""
     WITH d AS MATERIALIZED (

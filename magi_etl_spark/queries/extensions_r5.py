@@ -1,14 +1,4 @@
-"""STAGED r6 gate queries over the round-5 operator additions.
-
-Same staging pattern the r4→r5 rotation proved out
-(``queries/extensions.py``): the r5 driver window is full and
-pre-committed, and the gate-window invariant test refuses
-never-verified queries outside it — so new operators land here, in a
-SEPARATE registry (``EXT2_QUERIES`` / ``EXT2_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r5.py).  At the r6 rotation these merge into
-the main registry verbatim.
+"""Registered queries over the round-5 operator additions.
 
 The BPE oracles use the same two devices the q116 PageRank oracle
 established: iteration unrolled as chained CTEs (one pair-count /
@@ -19,27 +9,11 @@ self-reference would otherwise expand exponentially.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT2_QUERIES: dict[str, QueryFn] = {}
-EXT2_ORACLE: dict[str, str] = {}
-
-
-def ext2_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT2_QUERIES[name] = fn
-        if oracle is not None:
-            EXT2_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # Shared oracle CTE: the corpus word vocabulary in the padded
@@ -95,7 +69,7 @@ def _bpe_merges_oracle(n_merges: int) -> str:
     """
 
 
-@ext2_query("q117_bpe_merges", oracle=_bpe_merges_oracle(10))
+@query("q117_bpe_merges", oracle=_bpe_merges_oracle(10))
 def q117_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training, first 10 merges: the corpus
     is scanned ONCE into a frequency-weighted word vocabulary; each
@@ -119,7 +93,7 @@ def _bpe_segment_oracle(n_merges: int) -> str:
     """
 
 
-@ext2_query("q118_bpe_segment", oracle=_bpe_segment_oracle(10))
+@query("q118_bpe_segment", oracle=_bpe_segment_oracle(10))
 def q118_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The apply side of BPE: train 10 merges (driver-side merge loop —
     the production shape, 2 Spark jobs, merge table pinned identical to
@@ -134,7 +108,7 @@ def q118_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train_and_segment(d, n_merges=10)
 
 
-@ext2_query(
+@query(
     "q119_bigram_logprob",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -182,7 +156,7 @@ def q119_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q120_top_ngrams",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -215,7 +189,7 @@ def q120_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_ngrams(d, n=3, k=25)
 
 
-@ext2_query(
+@query(
     "q121_oot_split",
     oracle="""
     WITH ranked AS (
@@ -294,7 +268,7 @@ def _bpe_encode_oracle(n_merges: int) -> str:
     """
 
 
-@ext2_query("q122_bpe_encode_docs", oracle=_bpe_encode_oracle(10))
+@query("q122_bpe_encode_docs", oracle=_bpe_encode_oracle(10))
 def q122_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end distributed tokenization: train 10 BPE merges
     (driver-side merge loop — 2 Spark jobs, merge table pinned identical
@@ -315,7 +289,7 @@ def q122_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalization cannot hash complex-typed cells (``unhashable
     type: 'list'`` inside ``sort_values``), and a repo-wide lint
     (tests/test_output_schemas.py) now bans complex-typed output columns
-    from every registered and staged query.  The checksum is pure
+    from every registered query.  The checksum is pure
     integer HOF arithmetic (a space-joined string column was ~2 s
     slower at sf0.1) and no wider than 40 · 20k² — far inside BIGINT;
     any reordering, substitution, insertion or deletion of the sequence
@@ -341,7 +315,7 @@ def q122_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q123_multimodal_features",
     oracle="""
     WITH dims AS MATERIALIZED (
@@ -397,7 +371,7 @@ def q123_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q124_audio_features",
     oracle="""
     WITH params AS MATERIALIZED (
@@ -465,7 +439,7 @@ def q124_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q125_enrich_summary",
     oracle="""
     WITH h AS MATERIALIZED (
@@ -513,7 +487,7 @@ def q125_enrich_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich_with(d, fake_media_summary, AI_SCHEMA_SUFFIX)
 
 
-@ext2_query(
+@query(
     "q126_enrich_poster",
     oracle="""
     SELECT doc_id,
@@ -556,7 +530,7 @@ def q126_enrich_poster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q127_dsir_importance",
     oracle="""
     WITH tok_raw AS MATERIALIZED (
@@ -620,7 +594,7 @@ def q127_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q128_ngram_novelty",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -661,7 +635,7 @@ def q128_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext2_query(
+@query(
     "q129_duplicated_spans",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -713,7 +687,7 @@ def q129_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicated_spans(d, n=5)
 
 
-@ext2_query(
+@query(
     "q130_merge_into",
     oracle="""
     WITH t0 AS MATERIALIZED (
@@ -781,7 +755,7 @@ def q130_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_into(t0, src, ["o_orderkey"], delete_col="_del")
 
 
-@ext2_query(
+@query(
     "q131_weighted_sample",
     oracle="""
     WITH keyed AS MATERIALIZED (
@@ -881,7 +855,7 @@ def _bpe_pack_oracle(n_merges: int, budget: int) -> str:
     """
 
 
-@ext2_query("q132_tokenize_and_pack", oracle=_bpe_pack_oracle(10, 2048))
+@query("q132_tokenize_and_pack", oracle=_bpe_pack_oracle(10, 2048))
 def q132_tokenize_and_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone tokenizer→packing composition: train 10 BPE merges,
     tokenize the corpus (per-document token counts from the segmented

@@ -1,13 +1,4 @@
-"""STAGED r7 gate queries over the round-6 operator additions.
-
-Same staging pattern the r4→r5 and r5→r6 rotations proved out: the r6
-driver window is full and pre-committed, and the gate-window invariant
-test refuses never-verified queries outside it — so new operators land
-here, in a SEPARATE registry (``EXT3_QUERIES`` / ``EXT3_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r6.py).  At the r7 rotation these merge into the
-main registry verbatim.
+"""Registered queries over the round-6 operator additions.
 
 Round-6 operator wave: mergeable cardinality/frequency sketches (KMV,
 deterministic HyperLogLog, Count-Min — ``operators/sketches.py``; the
@@ -21,33 +12,17 @@ range-partitioned prefix sum (``operators/mixing.py``).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT3_QUERIES: dict[str, QueryFn] = {}
-EXT3_ORACLE: dict[str, str] = {}
-
-
-def ext3_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT3_QUERIES[name] = fn
-        if oracle is not None:
-            EXT3_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- cardinality / frequency sketches ---------------------------------------
 
 
-@ext3_query(
+@query(
     "q133_kmv_distinct",
     oracle="""
     WITH h AS (
@@ -99,7 +74,7 @@ def q133_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q134_hll_distinct",
     oracle="""
     WITH r AS (
@@ -148,7 +123,7 @@ def q134_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q135_cms_heavy_hitters",
     oracle="""
     WITH tok AS (
@@ -214,7 +189,7 @@ _COS = (
 )
 
 
-@ext3_query(
+@query(
     "q136_hard_negatives",
     oracle=f"""
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS bv
@@ -248,7 +223,7 @@ def q136_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q137_containment_pairs",
     oracle=r"""
     WITH t AS (
@@ -303,7 +278,7 @@ def q137_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q138_curriculum_order",
     oracle="""
     WITH staged AS (
@@ -342,7 +317,7 @@ def q138_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- behavior analytics -------------------------------------------------------
 
 
-@ext3_query(
+@query(
     "q139_funnel",
     oracle="""
     WITH s0 AS (
@@ -398,7 +373,7 @@ def q139_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q140_cohort_retention",
     oracle="""
     WITH first AS (
@@ -440,7 +415,7 @@ def q140_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_retention(e, max_offset=4)
 
 
-@ext3_query(
+@query(
     "q141_markov_transitions",
     oracle="""
     WITH seq AS (
@@ -475,7 +450,7 @@ def q141_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return markov_transitions(e)
 
 
-@ext3_query(
+@query(
     "q142_copurchase_lift",
     oracle="""
     WITH b AS (
@@ -512,7 +487,7 @@ def q142_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- drift / outlier monitoring ----------------------------------------------
 
 
-@ext3_query(
+@query(
     "q143_psi_drift",
     oracle="""
     WITH binned AS (
@@ -569,7 +544,7 @@ def q143_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_drift(e, split_ts="2024-01-16", lo=0.0, hi=350.0, n_bins=10)
 
 
-@ext3_query(
+@query(
     "q144_mad_outliers",
     oracle="""
     WITH daily AS (
@@ -627,7 +602,7 @@ def _rp_oracle() -> str:
     return f"SELECT vec_id, label,\n           {cols}\n    FROM embeddings"
 
 
-@ext3_query("q145_random_projection", oracle=_rp_oracle())
+@query("q145_random_projection", oracle=_rp_oracle())
 def q145_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss sign random projection of the 64-dim
     embeddings to 8 dims (JL-normalized, rounded to 3): the projection
@@ -642,7 +617,7 @@ def q145_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q146_rfm_segments",
     oracle="""
     WITH per AS (
@@ -701,7 +676,7 @@ def q146_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- graph / attribution / sketch algebra ------------------------------------
 
 
-@ext3_query(
+@query(
     "q147_triangle_count",
     oracle="""
     WITH b AS (
@@ -764,7 +739,7 @@ def q147_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count(edges, "u", "v")
 
 
-@ext3_query(
+@query(
     "q148_attribution",
     oracle="""
     WITH tagged AS (
@@ -804,7 +779,7 @@ def q148_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q149_kmv_set_overlap",
     oracle="""
     WITH h AS (
@@ -887,7 +862,7 @@ _PHASH_CTE = """
 """
 
 
-@ext3_query(
+@query(
     "q150_image_phash",
     oracle=f"""
     WITH {_PHASH_CTE}
@@ -911,7 +886,7 @@ def q150_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return average_hash(imgs, grid=4, on_error="raise")
 
 
-@ext3_query(
+@query(
     "q151_image_near_dup",
     oracle=f"""
     WITH {_PHASH_CTE}
@@ -946,7 +921,7 @@ def q151_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- closed-form statistics --------------------------------------------------
 
 
-@ext3_query(
+@query(
     "q152_ols_trend",
     oracle="""
     WITH daily AS (
@@ -1003,7 +978,7 @@ def q152_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return group_ols_trend(daily, ["o_orderpriority"], "x", "y")
 
 
-@ext3_query(
+@query(
     "q153_wilson_ci",
     oracle="""
     WITH agg AS (
@@ -1048,7 +1023,7 @@ def q153_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q154_ab_compare",
     oracle="""
     WITH units AS (
@@ -1182,7 +1157,7 @@ def _benford_oracle() -> str:
     """
 
 
-@ext3_query("q155_benford_audit", oracle=_benford_oracle())
+@query("q155_benford_audit", oracle=_benford_oracle())
 def q155_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit of order amounts per priority: chi2
     against the log10(1+1/d) expectation plus the largest proportion
@@ -1195,7 +1170,7 @@ def q155_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return benford_deviation(o, ["o_orderpriority"], "o_totalprice")
 
 
-@ext3_query(
+@query(
     "q156_mutual_information",
     oracle="""
     WITH cells AS (
@@ -1240,7 +1215,7 @@ def q156_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mutual_information(e, "event_type", F.hour("ts"))
 
 
-@ext3_query(
+@query(
     "q157_revenue_concentration",
     oracle="""
     WITH per AS (
@@ -1309,7 +1284,7 @@ def q157_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- seasonal indices / correlation matrix -----------------------------------
 
 
-@ext3_query(
+@query(
     "q158_dow_seasonality",
     oracle="""
     WITH daily AS (
@@ -1381,7 +1356,7 @@ def _corr_oracle() -> str:
     )
 
 
-@ext3_query("q159_corr_matrix", oracle=_corr_oracle())
+@query("q159_corr_matrix", oracle=_corr_oracle())
 def q159_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation matrix (long format) among the four
     lineitem numeric measures per return flag — the feature-redundancy
@@ -1467,7 +1442,7 @@ def _ppr_oracle(iterations: int, damping: float) -> str:
     )
 
 
-@ext3_query("q160_personalized_pagerank", oracle=_ppr_oracle(8, 0.85))
+@query("q160_personalized_pagerank", oracle=_ppr_oracle(8, 0.85))
 def q160_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from a customer seed set (every 50th
     custkey) over the customer→supplier purchase graph: teleports and
@@ -1534,7 +1509,7 @@ def _fs_oracle() -> str:
     """
 
 
-@ext3_query("q161_fs_linkage", oracle=_fs_oracle())
+@query("q161_fs_linkage", oracle=_fs_oracle())
 def q161_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter probabilistic linkage over (nation, segment)-
     blocked customer pairs: three account-balance agreement fields
@@ -1588,7 +1563,7 @@ def q161_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- grid quantiles / frequent triples ---------------------------------------
 
 
-@ext3_query(
+@query(
     "q162_grid_quantiles",
     oracle="""
     WITH cells AS (
@@ -1636,7 +1611,7 @@ def q162_grid_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q163_frequent_triples",
     oracle="""
     WITH b AS MATERIALIZED (
@@ -1673,7 +1648,7 @@ def q163_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Kneser-Ney fluency / shard planning / event paths -----------------------
 
 
-@ext3_query(
+@query(
     "q164_kneser_ney",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -1727,7 +1702,7 @@ def q164_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q165_shard_plan",
     oracle="""
     WITH s AS (
@@ -1759,7 +1734,7 @@ def q165_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q166_top_event_paths",
     oracle="""
     WITH pd AS MATERIALIZED (
@@ -1787,7 +1762,7 @@ def q166_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q167_phrase_search",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -1819,7 +1794,7 @@ def q167_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- session-4 wave: classifier / domain curation / governance ---------------
 
 
-@ext3_query(
+@query(
     "q168_seed_classifier",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -1875,7 +1850,7 @@ def q168_seed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q169_domain_curation",
     oracle="""
     WITH per AS MATERIALIZED (
@@ -1918,7 +1893,7 @@ def q169_domain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate_domains(d, "source", "text", 10, 20)
 
 
-@ext3_query(
+@query(
     "q170_k_anonymity",
     oracle="""
     WITH q AS MATERIALIZED (
@@ -1952,7 +1927,7 @@ def q170_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity_profile(e, ["event_type", "day", "vband"], k=5)
 
 
-@ext3_query(
+@query(
     "q171_soft_dedup_weights",
     oracle="""
     WITH per AS MATERIALIZED (
@@ -1989,7 +1964,7 @@ _Q172_ORD = (
 )
 
 
-@ext3_query(
+@query(
     "q172_golden_records",
     oracle=f"""
     WITH t0 AS MATERIALIZED (
@@ -2060,7 +2035,7 @@ def q172_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.withColumnRenamed("k", "o_orderkey")
 
 
-@ext3_query(
+@query(
     "q173_l_diversity",
     oracle="""
     WITH q AS MATERIALIZED (
@@ -2094,7 +2069,7 @@ def q173_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l_diversity_profile(e, ["event_type", "vband"], "user_id", 3)
 
 
-@ext3_query(
+@query(
     "q174_dp_noisy_counts",
     oracle="""
     WITH g AS MATERIALIZED (
@@ -2134,7 +2109,7 @@ def q174_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_noisy_counts(e, ["event_type", "vband"], epsilon=1.0, seed="dp")
 
 
-@ext3_query(
+@query(
     "q175_curation_manifest",
     oracle="""
     WITH per AS MATERIALIZED (
@@ -2252,7 +2227,6 @@ def q175_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 def _q176_oracle() -> str:
     from magi_etl_spark.queries.extensions_r5 import _BPE_W0, _bpe_iter_ctes
 
@@ -2279,7 +2253,7 @@ def _q176_oracle() -> str:
     """
 
 
-@ext3_query("q176_tokenizer_fertility", oracle=_q176_oracle())
+@query("q176_tokenizer_fertility", oracle=_q176_oracle())
 def q176_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility by source under a fresh 10-merge BPE model:
     tokens-per-word and chars-per-token — the vocabulary-sizing
@@ -2293,7 +2267,7 @@ def q176_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenizer_fertility(d, n_merges=10, by="source")
 
 
-@ext3_query(
+@query(
     "q177_score_calibration",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -2362,7 +2336,7 @@ def q177_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return calibration_bins(lab, "mean_llr", "is_pos", 0.5)
 
 
-@ext3_query(
+@query(
     "q178_span_removal",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -2484,7 +2458,7 @@ def _q179_oracle() -> str:
     """
 
 
-@ext3_query("q179_entity_resolution", oracle=_q179_oracle())
+@query("q179_entity_resolution", oracle=_q179_oracle())
 def q179_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end — the canonical MDM pipeline in one
     plan: (nation, segment)-blocked candidate pairs, Fellegi-Sunter
@@ -2554,7 +2528,7 @@ def q179_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q180_readability",
     oracle="""
     WITH m AS MATERIALIZED (
@@ -2588,7 +2562,7 @@ def q180_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     return readability_scores(d, "doc_id", "text")
 
 
-@ext3_query(
+@query(
     "q181_fk_discovery",
     oracle="""
     WITH pairs(child, parent) AS (
@@ -2670,7 +2644,7 @@ def q181_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext3_query(
+@query(
     "q182_multi_touch",
     oracle="""
     WITH t AS MATERIALIZED (
@@ -2842,7 +2816,7 @@ def _q183_oracle() -> str:
     """
 
 
-@ext3_query("q183_markov_attribution", oracle=_q183_oracle())
+@query("q183_markov_attribution", oracle=_q183_oracle())
 def q183_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-driven (Markov removal-effect) attribution — the third leg
     of the attribution family (winner-takes-all q148, heuristic

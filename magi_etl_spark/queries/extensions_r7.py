@@ -1,14 +1,4 @@
-"""STAGED r8 gate queries over the round-7 operator additions.
-
-Same staging pattern the r4->r5, r5->r6 and r6->r7 rotations proved
-out: the r7 driver window is full and pre-committed (COVERAGE.md
-"Planned r7 window"), and the gate-window invariant test refuses
-never-verified queries outside it — so new operators land here, in a
-SEPARATE registry (``EXT4_QUERIES`` / ``EXT4_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r7.py).  At the r8 rotation these merge into the
-main registry verbatim, behind q183 (which leads the r8 queue).
+"""Registered queries over the round-7 operator additions.
 
 Round-7 operator wave (all NEW modules — the linkage.py isolation rule
 keeps every gate-verified surface byte-identical): engagement analytics
@@ -24,33 +14,17 @@ enrichment, k-core decomposition, storage pruning).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import ORACLE, query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT4_QUERIES: dict[str, QueryFn] = {}
-EXT4_ORACLE: dict[str, str] = {}
-
-
-def ext4_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT4_QUERIES[name] = fn
-        if oracle is not None:
-            EXT4_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- engagement analytics ----------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q184_active_user_stickiness",
     oracle="""
     WITH ud AS (
@@ -82,7 +56,7 @@ def q184_active_user_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rolling_active_users(load_table(spark, sf_dir, "events"))
 
 
-@ext4_query(
+@query(
     "q185_concurrency_peaks",
     oracle="""
     WITH s AS (
@@ -122,7 +96,7 @@ def q185_concurrency_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return concurrency_profile(load_table(spark, sf_dir, "events"))
 
 
-@ext4_query(
+@query(
     "q187_decay_engagement",
     oracle="""
     WITH ref AS (SELECT MAX(CAST(ts AS DATE)) AS ref_day FROM events)
@@ -149,7 +123,7 @@ def q187_decay_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- inequality audits -------------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q186_revenue_gini",
     oracle="""
     WITH pe AS (
@@ -203,7 +177,7 @@ def q186_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- tabular feature prep ----------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q188_target_encoding",
     oracle="""
     WITH base AS (
@@ -256,7 +230,7 @@ def q188_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext4_query(
+@query(
     "q189_woe_iv",
     oracle="""
     WITH base AS (
@@ -308,7 +282,7 @@ def q189_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext4_query(
+@query(
     "q190_quota_sample",
     oracle="""
     WITH counts AS (
@@ -379,7 +353,7 @@ _DAILY_CENTS_SQL = """
 """
 
 
-@ext4_query(
+@query(
     "q191_cusum_alarms",
     oracle=f"""
     WITH RECURSIVE d AS ({_DAILY_CENTS_SQL}),
@@ -427,7 +401,7 @@ def q191_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cusum_profile(_daily_cents(spark, sf_dir), "series", "day", "x")
 
 
-@ext4_query(
+@query(
     "q192_holt_smoothing",
     oracle=f"""
     WITH RECURSIVE d AS ({_DAILY_CENTS_SQL}),
@@ -496,7 +470,7 @@ _WINNOW_SEL_SQL = """
 """
 
 
-@ext4_query(
+@query(
     "q193_winnow_profile",
     oracle=f"""
     WITH {_WINNOW_SEL_SQL}
@@ -523,7 +497,7 @@ def q193_winnow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext4_query(
+@query(
     "q194_winnow_pairs",
     oracle=f"""
     WITH {_WINNOW_SEL_SQL},
@@ -554,7 +528,7 @@ def q194_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact set-similarity join (prefix filtering) ---------------------------
 
 
-@ext4_query(
+@query(
     "q195_similarity_join",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -601,7 +575,7 @@ def q195_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- character-class text diagnostics ---------------------------------------
 
 
-@ext4_query(
+@query(
     "q196_script_profile",
     oracle="""
     SELECT doc_id,
@@ -635,7 +609,7 @@ def q196_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return script_profile(load_table(spark, sf_dir, "documents"))
 
 
-@ext4_query(
+@query(
     "q197_extract_summary",
     oracle="""
     WITH base AS MATERIALIZED (
@@ -685,7 +659,7 @@ def q197_extract_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- event-time dimension conformance ---------------------------------------
 
 
-@ext4_query(
+@query(
     "q198_asof_enrichment",
     oracle="""
     WITH dim AS MATERIALIZED (
@@ -775,7 +749,7 @@ def _kcore_oracle() -> str:
     return kcore_oracle_sql(_SUPPLIER_EDGES_SQL, k=3, max_iters=8)
 
 
-@ext4_query("q199_kcore")
+@query("q199_kcore")
 def q199_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the supplier co-order graph (suppliers are adjacent
     when they serve the same order) after 8 peeling rounds — each round
@@ -789,13 +763,13 @@ def q199_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_core(edges, k=3, max_iters=8)
 
 
-EXT4_ORACLE["q199_kcore"] = _kcore_oracle()
+ORACLE["q199_kcore"] = _kcore_oracle()
 
 
 # --- storage-layout pruning --------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q200_data_skipping",
     oracle="""
     SELECT o_orderpriority,
@@ -840,7 +814,7 @@ def q200_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext4_query(
+@query(
     "q201_dynamic_partition_pruning",
     oracle="""
     WITH daily AS (
@@ -963,7 +937,7 @@ def _lsh_eval_oracle() -> str:
     """
 
 
-@ext4_query("q202_lsh_candidate_eval")
+@query("q202_lsh_candidate_eval")
 def q202_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-generator quality eval: precision/recall of the
     2-band x 2-hash MinHash-LSH candidate pairs against the EXACT
@@ -988,7 +962,7 @@ def q202_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candidate_metrics(cand, truth)
 
 
-EXT4_ORACLE["q202_lsh_candidate_eval"] = _lsh_eval_oracle()
+ORACLE["q202_lsh_candidate_eval"] = _lsh_eval_oracle()
 
 
 def _ivf_recall_oracle() -> str:
@@ -1064,7 +1038,7 @@ def _ivf_recall_oracle() -> str:
     """
 
 
-@ext4_query("q204_ivf_recall_eval")
+@query("q204_ivf_recall_eval")
 def q204_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN acceptance metric: per-query recall@10 of the IVF probe path
     (8 hash-ordered sampled lists, 2 probed) against the exact
@@ -1087,13 +1061,13 @@ def q204_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_recall(approx, exact)
 
 
-EXT4_ORACLE["q204_ivf_recall_eval"] = _ivf_recall_oracle()
+ORACLE["q204_ivf_recall_eval"] = _ivf_recall_oracle()
 
 
 # --- transition entropy ------------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q219_transition_entropy",
     oracle="""
     WITH seq AS (
@@ -1174,7 +1148,7 @@ def q219_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- corpus datasheet capstone ----------------------------------------------
 
 
-@ext4_query(
+@query(
     "q218_source_datasheet",
     oracle="""
     WITH base AS MATERIALIZED (
@@ -1314,7 +1288,7 @@ def q218_source_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- session entry/exit analysis --------------------------------------------
 
 
-@ext4_query(
+@query(
     "q217_entry_exit_bounce",
     oracle="""
     WITH ev AS (
@@ -1386,7 +1360,7 @@ def q217_entry_exit_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- weighted similarity / token association --------------------------------
 
 
-@ext4_query(
+@query(
     "q215_weighted_jaccard",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -1476,7 +1450,7 @@ def q215_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_jaccard_scores(pairs, weighted)
 
 
-@ext4_query(
+@query(
     "q216_token_pmi",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -1525,7 +1499,7 @@ def q216_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- conversion latency ------------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q214_conversion_latency",
     oracle="""
     WITH nxt AS (
@@ -1615,7 +1589,7 @@ def q214_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- contrastive negatives / sharding / TWAP --------------------------------
 
 
-@ext4_query(
+@query(
     "q211_negative_edges",
     oracle="""
     WITH edges AS MATERIALIZED (
@@ -1695,7 +1669,7 @@ def q211_negative_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_edge_samples(edges, "src", "dst", n_trials=4)
 
 
-@ext4_query(
+@query(
     "q212_rendezvous_shards",
     oracle="""
     WITH w AS (
@@ -1731,7 +1705,7 @@ def q212_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_assignment_profile(docs, "doc_id", n_shards=16)
 
 
-@ext4_query(
+@query(
     "q213_twap",
     oracle="""
     WITH s AS (
@@ -1767,7 +1741,7 @@ def q213_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- shared-passage explanation ---------------------------------------------
 
 
-@ext4_query(
+@query(
     "q210_common_runs",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -1842,7 +1816,7 @@ def q210_common_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- distribution / association / survival ----------------------------------
 
 
-@ext4_query(
+@query(
     "q207_ecdf_normalize",
     oracle="""
     SELECT event_type, event_id, value,
@@ -1867,7 +1841,7 @@ def q207_ecdf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@ext4_query(
+@query(
     "q208_chi_square",
     oracle="""
     WITH cells AS (
@@ -1914,7 +1888,7 @@ def q208_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi_square(e, F.col("event_type"), F.weekday("ts").cast("int"))
 
 
-@ext4_query(
+@query(
     "q209_survival_curve",
     oracle="""
     WITH spans AS (
@@ -1984,7 +1958,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@ext4_query("q206_langid_confusion")
+@query("q206_langid_confusion")
 def q206_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier-eval harness for the stopword-vote language-ID
     heuristic (q22): the confusion matrix against the declared ``lang``
@@ -2013,13 +1987,13 @@ def q206_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT4_ORACLE["q206_langid_confusion"] = _langid_confusion_oracle()
+ORACLE["q206_langid_confusion"] = _langid_confusion_oracle()
 
 
 # --- robust trend ------------------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q205_theil_sen_trend",
     oracle="""
     WITH m AS (
@@ -2086,7 +2060,7 @@ def q205_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Lorenz curve points -----------------------------------------------------
 
 
-@ext4_query(
+@query(
     "q203_lorenz_points",
     oracle="""
     WITH pe AS (

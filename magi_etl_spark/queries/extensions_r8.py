@@ -1,15 +1,4 @@
-"""STAGED r9 gate queries over the round-8 operator additions.
-
-Same staging pattern the four prior rotations proved out: the r8 driver
-window is full (q122 failure re-entry + the 49-entry r6 wave,
-COVERAGE.md "Round 8 status"), and the gate-window invariant test
-refuses never-verified queries outside it — so new operators land here,
-in a SEPARATE registry (``EXT5_QUERIES`` / ``EXT5_ORACLE``) that
-``__spark_entry__.queries()`` does NOT include yet, with the driver's
-own hash comparison run over every entry each suite run
-(tests/test_extensions_r8.py).  At the r9 rotation these MERGED behind
-the R9_QUEUE residue (q182/q183) and the r7 wave (q184-q219) — the
-sweep now rides tests/test_queries_oracle.py like every merged wave.
+"""Registered queries over the round-8 operator additions.
 
 Round-8 wave — deliberately SMALL (the r7 verdict: the verification
 backlog must drain faster than it grows), six queries across six NEW
@@ -33,27 +22,11 @@ re-entries):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT5_QUERIES: dict[str, QueryFn] = {}
-EXT5_ORACLE: dict[str, str] = {}
-
-
-def ext5_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT5_QUERIES[name] = fn
-        if oracle is not None:
-            EXT5_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- k-center coreset selection ----------------------------------------------
@@ -104,7 +77,7 @@ def _kcenter_oracle(k: int) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(selects)
 
 
-@ext5_query("q220_kcenter_coreset", oracle=_kcenter_oracle(8))
+@query("q220_kcenter_coreset", oracle=_kcenter_oracle(8))
 def q220_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center (farthest-point) diverse-subset selection over
     the embedding corpus — the diversity-maximizing data-selection pass
@@ -153,7 +126,7 @@ def _lpa_oracle(n_rounds: int) -> str:
     )
 
 
-@ext5_query("q221_label_propagation", oracle=_lpa_oracle(3))
+@query("q221_label_propagation", oracle=_lpa_oracle(3))
 def q221_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three rounds of synchronous label propagation over the
     customer-supplier transaction graph.  Supplier vertices live in the
@@ -186,7 +159,7 @@ def q221_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Good-Turing frequency spectrum ------------------------------------------
 
 
-@ext5_query(
+@query(
     "q222_good_turing",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -228,7 +201,7 @@ def q222_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EPOCH_BUDGET = 1_000_000
 
 
-@ext5_query(
+@query(
     "q223_epoch_plan",
     oracle=f"""
     WITH counts AS MATERIALIZED (
@@ -298,7 +271,7 @@ def q223_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- feature hashing ----------------------------------------------------------
 
 
-@ext5_query(
+@query(
     "q224_feature_hashing",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -339,7 +312,7 @@ def q224_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rare-bigram fluency banding ----------------------------------------------
 
 
-@ext5_query(
+@query(
     "q225_rare_bigram_band",
     oracle="""
     WITH grams AS MATERIALIZED (

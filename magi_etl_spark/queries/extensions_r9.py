@@ -1,14 +1,4 @@
-"""STAGED r10 gate queries over the round-9 operator additions.
-
-Same staging pattern five prior rotations proved out: the r9 driver
-window was full (the 44-entry staged-backlog drain + 6 tail re-entries,
-COVERAGE.md "Planned r9 window"), and the gate-window invariant test
-refuses never-verified queries outside it — so new operators landed
-here, in a SEPARATE registry (``EXT6_QUERIES`` / ``EXT6_ORACLE``), with
-the driver's own hash comparison run over every entry each suite run.
-At the r10 rotation these MERGED at the front of the window
-(COVERAGE.md "Planned r10 window") — the sweep now rides
-tests/test_queries_oracle.py like every merged wave.
+"""Registered queries over the round-9 operator additions.
 
 Round-9 wave — deliberately SMALL (the r8 verdict: keep the wave at or
 under six so the backlog stays drained), six queries across six NEW
@@ -32,27 +22,11 @@ re-entries):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-EXT6_QUERIES: dict[str, QueryFn] = {}
-EXT6_ORACLE: dict[str, str] = {}
-
-
-def ext6_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        EXT6_QUERIES[name] = fn
-        if oracle is not None:
-            EXT6_ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 _TOKS = """
@@ -69,7 +43,7 @@ _TOKS = """
 # --- source KL novelty -------------------------------------------------------
 
 
-@ext6_query(
+@query(
     "q226_source_kl_novelty",
     oracle=f"""
     WITH {_TOKS},
@@ -135,7 +109,7 @@ def q226_source_kl_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- token burstiness --------------------------------------------------------
 
 
-@ext6_query(
+@query(
     "q227_token_burstiness",
     oracle=f"""
     WITH {_TOKS},
@@ -178,7 +152,7 @@ def q227_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- weighted quantiles ------------------------------------------------------
 
 
-@ext6_query(
+@query(
     "q228_weighted_median",
     oracle="""
     WITH pv AS (
@@ -233,7 +207,7 @@ def q228_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- split-conformal calibration ---------------------------------------------
 
 
-@ext6_query(
+@query(
     "q229_conformal_coverage",
     oracle="""
     WITH base AS (
@@ -350,7 +324,7 @@ def _maxcover_oracle(k: int) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(selects)
 
 
-@ext6_query("q230_vocab_cover", oracle=_maxcover_oracle(4))
+@query("q230_vocab_cover", oracle=_maxcover_oracle(4))
 def q230_vocab_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy max-vocabulary-coverage document selection (4 rounds)
     over token-BIGRAM units: each round anti-joins the (doc, bigram)
@@ -399,7 +373,7 @@ def _hill_oracle(ks: list[int]) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(selects)
 
 
-@ext6_query("q231_hill_tail", oracle=_hill_oracle([50, 100]))
+@query("q231_hill_tail", oracle=_hill_oracle([50, 100]))
 def q231_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill power-law tail-index estimates at k = 50 and k = 100 over
     the corpus token-frequency distribution — the heavy-end complement

@@ -3,11 +3,9 @@
 
 1. A guard over the package source: no module but ``chkpt.py`` may call
    ``.localCheckpoint(`` or ``.checkpoint(`` directly — such a barrier
-   would ignore ``SPARK_GRAFT_CHECKPOINT_MODE``.  The raw sites still in
-   ``components.py`` and ``prefix.py`` are pinned by count until they
-   are routed too: their dependents did not fit the 50-slot gate
-   window's re-entry rule (``tests/test_gate_window.py``) together
-   with the rest.
+   would ignore ``SPARK_GRAFT_CHECKPOINT_MODE``.  The raw ``.persist(``
+   and ``.cache(`` sites still outside ``chkpt.py`` are pinned by count
+   per module until they are routed too, so no new one can land.
 2. The fault-tolerant modes against the DuckDB oracles: one registered
    query per operator module whose barriers were routed through
    ``chkpt``, run under ``persist`` and ``reliable`` (the same query
@@ -25,29 +23,51 @@ import magi_etl_spark
 from magi_etl_spark.queries import ORACLE, QUERIES
 from tests.oracle_harness import compare, duckdb_connection
 
-_RAW_BARRIERS = {"localCheckpoint", "checkpoint"}
-# raw sites not yet routed through chkpt: module -> count (may only shrink)
-_NOT_YET_ROUTED = {"operators/components.py": 2, "operators/prefix.py": 1}
+_RAW_BARRIERS = {"localCheckpoint", "checkpoint", "persist", "cache"}
+# raw persists not yet routed through chkpt: module -> count (may only
+# shrink)
+_RAW_PERSISTS = {
+    "operators/bpe.py": 1,
+    "operators/chunking.py": 1,
+    "operators/components.py": 1,
+    "operators/coreset.py": 1,
+    "operators/decontaminate.py": 1,
+    "operators/dedup.py": 6,
+    "operators/graph.py": 3,
+    "operators/selection.py": 2,
+    "operators/similarity.py": 4,
+    "operators/text.py": 3,
+    "pipelines/wiki_metadata.py": 2,
+    "queries/advanced.py": 4,
+    "streaming/events_stream.py": 1,
+}
 
 
 def test_no_raw_barrier_outside_chkpt():
     root = Path(magi_etl_spark.__file__).parent
-    offenders = []
+    offenders, persists = [], {}
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         if rel == "chkpt.py":
             continue
-        sites = [
-            f"{rel}:{node.lineno} .{node.func.attr}("
-            for node in ast.walk(ast.parse(path.read_text(), rel))
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr in _RAW_BARRIERS
-        ]
-        if len(sites) > _NOT_YET_ROUTED.get(rel, 0):
-            offenders += sites
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _RAW_BARRIERS
+            ):
+                continue
+            if node.func.attr in ("persist", "cache"):
+                persists[rel] = persists.get(rel, 0) + 1
+            else:
+                offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
     assert not offenders, (
         "raw barriers bypass chkpt.materialize: " + ", ".join(offenders)
+    )
+    # a module above its pin gained a raw persist; one below it routed
+    # some: lower the pin
+    assert persists == _RAW_PERSISTS, (
+        f"raw .persist(/.cache( sites per module changed: {persists}"
     )
 
 
@@ -64,6 +84,8 @@ _MODE_QUERIES = [
     "q79_concurrent_fanout",  # queries/engine.py run_concurrent
     "q221_label_propagation",  # labelprop
     "q256_friedman_dow",  # friedman
+    "q179_entity_resolution",  # components
+    "q241_bh_fdr",  # prefix.ranked_prefix_sum
 ]
 
 

@@ -9,9 +9,12 @@ from __future__ import annotations
 
 
 def _ext():
-    from magi_etl_spark.queries.extensions import EXT_ORACLE, EXT_QUERIES
+    """The queries ``queries/extensions.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT_QUERIES, EXT_ORACLE
+    mod = "magi_etl_spark.queries.extensions"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_extension_registry_is_merged_into_the_gate_registry():

@@ -10,9 +10,12 @@ from __future__ import annotations
 
 
 def _ext7():
-    from magi_etl_spark.queries.extensions_r10 import EXT7_ORACLE, EXT7_QUERIES
+    """The queries ``queries/extensions_r10.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT7_QUERIES, EXT7_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r10"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r10_extension_registry_is_fully_merged():

@@ -14,12 +14,12 @@ from oracle_harness import compare, duckdb_connection
 
 
 def _ext9():
-    from magi_etl_spark.queries.extensions_r12 import (
-        EXT9_ORACLE,
-        EXT9_QUERIES,
-    )
+    """The queries ``queries/extensions_r12.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT9_QUERIES, EXT9_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r12"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r12_extension_registry_is_fully_merged():

@@ -14,12 +14,12 @@ from oracle_harness import compare, duckdb_connection
 
 
 def _ext10():
-    from magi_etl_spark.queries.extensions_r13 import (
-        EXT10_ORACLE,
-        EXT10_QUERIES,
-    )
+    """The queries ``queries/extensions_r13.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT10_QUERIES, EXT10_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r13"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r13_extension_registry_is_fully_merged():

@@ -14,12 +14,12 @@ from oracle_harness import compare, duckdb_connection
 
 
 def _ext11():
-    from magi_etl_spark.queries.extensions_r14 import (
-        EXT11_ORACLE,
-        EXT11_QUERIES,
-    )
+    """The queries ``queries/extensions_r14.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT11_QUERIES, EXT11_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r14"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r14_extension_registry_is_fully_merged():

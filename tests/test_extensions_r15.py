@@ -1,4 +1,4 @@
-"""Staged-registry discipline for the round-15 wave (EXT12, q262-q267):
+"""Registry discipline for the round-15 wave (q262-q267):
 per-entry DuckDB hash comparison (the driver's own check, run locally
 every suite run), the no-HUGEINT output lint, the complex-type output
 lint, and the plan lint — the same gauntlet every prior staged wave
@@ -14,22 +14,18 @@ from oracle_harness import compare, duckdb_connection
 
 
 def _ext12():
-    from magi_etl_spark.queries.extensions_r15 import (
-        EXT12_ORACLE,
-        EXT12_QUERIES,
-    )
+    """The queries ``queries/extensions_r15.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT12_QUERIES, EXT12_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r15"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
-def test_staging_registry_is_disjoint_from_the_gate_registry():
-    from magi_etl_spark.queries import QUERIES
-
+def test_r15_extension_registry_is_fully_merged():
     ext_q, ext_o = _ext12()
-    assert not set(ext_q) & set(QUERIES)
-    # every staged entry carries a full hash oracle
-    assert set(ext_q) == set(ext_o)
-    assert len(ext_q) == 6  # the wave stays at or under six
+    # every entry carries a full hash oracle; the wave stays at six
+    assert len(ext_q) == 6 and set(ext_q) == set(ext_o)
 
 
 def test_staged_oracles_emit_no_hugeint(sf_dir):

@@ -9,9 +9,12 @@ from __future__ import annotations
 
 
 def _ext2():
-    from magi_etl_spark.queries.extensions_r5 import EXT2_ORACLE, EXT2_QUERIES
+    """The queries ``queries/extensions_r5.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT2_QUERIES, EXT2_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r5"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r5_extension_registry_is_merged_into_the_gate_registry():

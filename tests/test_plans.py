@@ -137,3 +137,15 @@ def test_exact_profile_has_no_expand(spark, sf_dir):
             .toString()
         )
         assert "Expand" not in p, f"approx={approx}: {p[:1500]}"
+
+
+def test_plan_fingerprint_hashes_the_canonical_plan(spark, sf_dir):
+    import hashlib
+
+    from magi_etl_spark.plans import canonical_plan, plan_fingerprint
+
+    for name in ("q01_pricing_summary", "q184_active_user_stickiness"):
+        df = QUERIES[name](spark, sf_dir)
+        physical = df._jdf.queryExecution().executedPlan().toString()
+        canon = canonical_plan(physical).encode()
+        assert plan_fingerprint(df) == hashlib.md5(canon).hexdigest()[:12]

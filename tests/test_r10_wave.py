@@ -1,5 +1,5 @@
-"""Hand-fixture unit tests for the round-10 operator wave.  The staged
-oracle sweep (tests/test_extensions_r10.py) proves engine parity; these
+"""Hand-fixture unit tests for the round-10 operator wave.  The registry
+oracle sweep (tests/test_queries_oracle.py) proves engine parity; these
 pin the SEMANTICS on corpora small enough to verify by hand."""
 
 from __future__ import annotations

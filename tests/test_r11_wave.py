@@ -13,12 +13,12 @@ from oracle_harness import compare, duckdb_connection
 
 
 def _ext8():
-    from magi_etl_spark.queries.extensions_r11 import (
-        EXT8_ORACLE,
-        EXT8_QUERIES,
-    )
+    """The queries ``queries/extensions_r11.py`` registers, and their oracles."""
+    from magi_etl_spark.queries import ORACLE, QUERIES
 
-    return EXT8_QUERIES, EXT8_ORACLE
+    mod = "magi_etl_spark.queries.extensions_r11"
+    q = {n: f for n, f in QUERIES.items() if f.__module__ == mod}
+    return q, {n: ORACLE[n] for n in q if n in ORACLE}
 
 
 # --- staged-registry discipline ----------------------------------------------

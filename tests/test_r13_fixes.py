@@ -75,7 +75,7 @@ def test_q246_oracle_parity_on_null_ts_and_singleton_series(spark):
     import duckdb
 
     from magi_etl_spark.operators.mannkendall import mann_kendall_trend
-    from magi_etl_spark.queries.extensions_r12 import EXT9_ORACLE
+    from magi_etl_spark.queries import ORACLE
 
     rows = [
         # 'view': 3 real days (counts 2, 1, 1) plus one null-ts row that
@@ -113,7 +113,7 @@ def test_q246_oracle_parity_on_null_ts_and_singleton_series(spark):
         )
         + ") AS v(event_type, ts)"
     )
-    ok, msg = compare(got, con, EXT9_ORACLE["q246_mann_kendall_trend"])
+    ok, msg = compare(got, con, ORACLE["q246_mann_kendall_trend"])
     assert ok, msg
 
 

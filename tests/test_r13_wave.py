@@ -1,9 +1,9 @@
-"""Hand-fixture semantics for the round-13 operator wave (EXT10,
-q250-q255 staged in queries/extensions_r13.py).  Every operator is
+"""Hand-fixture semantics for the round-13 operator wave (q250-q255,
+queries/extensions_r13.py).  Every operator is
 cross-checked against a small pure-Python reference where the math is
 nontrivial; edge guards (n=1 series, constant inputs, null drops,
 reserved names) are pinned individually.  The driver-shaped hash
-comparison for the staged QUERIES lives in tests/test_extensions_r13.py.
+comparison for the queries lives in tests/test_queries_oracle.py.
 """
 
 from __future__ import annotations

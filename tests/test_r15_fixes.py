@@ -121,6 +121,7 @@ def test_checkpoint_mode_off_constructs_plan_only(spark):
     from magi_etl_spark import chkpt
     from magi_etl_spark.operators.behavior import funnel_stages
     from magi_etl_spark.operators.friedman import friedman_test
+    from magi_etl_spark.operators.prefix import ranked_prefix_sum
     from magi_etl_spark.operators.setjoin import (
         longest_common_runs,
         similarity_join,
@@ -149,6 +150,7 @@ def test_checkpoint_mode_off_constructs_plan_only(spark):
         funnel_stages(events, ["view", "buy"])
         similarity_join(sets, Fraction(1, 2))
         longest_common_runs(pairs, positions)
+        ranked_prefix_sum(sets, [F.col("doc_id"), F.col("tok")], "doc_id")
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert jobs == [], (
             f"off-mode construction ran {len(jobs)} eager job(s)"

@@ -437,11 +437,11 @@ def test_readability_known_values(spark):
 
 def test_fk_discovery_flags_true_keys_and_impostors(spark, sf_dir):
     from magi_etl_spark.operators.discovery import discover_fk_candidates
-    from magi_etl_spark.queries.extensions_r6 import EXT3_QUERIES
+    from magi_etl_spark.queries import QUERIES
 
     rows = {
         r["child"]: r
-        for r in EXT3_QUERIES["q181_fk_discovery"](spark, sf_dir).collect()
+        for r in QUERIES["q181_fk_discovery"](spark, sf_dir).collect()
     }
     for true_fk in ("orders.o_custkey", "lineitem.l_orderkey",
                     "lineitem.l_partkey"):
@@ -470,10 +470,10 @@ def test_fk_discovery_flags_true_keys_and_impostors(spark, sf_dir):
 def test_entity_resolution_conserves_members_and_balance(spark, sf_dir):
     from pyspark.sql import functions as SF
 
-    from magi_etl_spark.queries.extensions_r6 import EXT3_QUERIES
+    from magi_etl_spark.queries import QUERIES
     from magi_etl_spark.tables import load_table
 
-    out = EXT3_QUERIES["q179_entity_resolution"](spark, sf_dir)
+    out = QUERIES["q179_entity_resolution"](spark, sf_dir)
     c = load_table(spark, sf_dir, "customer")
     n_cust = c.count()
     agg = out.agg(

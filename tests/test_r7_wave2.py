@@ -269,9 +269,9 @@ def test_cooccurrence_edges_equals_self_join(spark, sf_dir):
 
 
 def test_langid_confusion_shares_sum_to_one(spark, sf_dir):
-    from magi_etl_spark.queries.extensions_r7 import EXT4_QUERIES
+    from magi_etl_spark.queries import QUERIES
 
-    out = EXT4_QUERIES["q206_langid_confusion"](spark, sf_dir).collect()
+    out = QUERIES["q206_langid_confusion"](spark, sf_dir).collect()
     by_lang: dict[str, float] = {}
     for r in out:
         by_lang[r.lang] = by_lang.get(r.lang, 0.0) + r.share

@@ -1,6 +1,6 @@
 """Hand-fixture invariants for the round-8 operator wave (coreset,
 labelprop, spectrum, epochs, hashing_trick, fluency) — the oracle sweep
-(tests/test_extensions_r8.py) proves engine parity; these pin the
+(tests/test_queries_oracle.py) proves engine parity; these pin the
 SEMANTICS against values computed by hand or by a tiny Python
 reference."""
 

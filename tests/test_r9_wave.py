@@ -1,6 +1,6 @@
 """Hand-fixture invariants for the round-9 operator wave (novelty,
 dispersion, wquantile, conformal, maxcover, tailindex) — the oracle
-sweep (tests/test_extensions_r9.py) proves engine parity; these pin the
+sweep (tests/test_queries_oracle.py) proves engine parity; these pin the
 SEMANTICS against values computed by hand or by a tiny Python
 reference."""
 

@@ -1,10 +1,13 @@
-"""Dump canonicalized (and raw) physical plans for named queries.
+"""Dump the physical plans of named queries.
 
 Usage: python tools/dump_plans.py OUTDIR q197_extract_summary q206_... ...
 
-Writes OUTDIR/<name>.canon.txt and OUTDIR/<name>.raw.txt using the same
-canonicalization the bench fingerprints use, so two trees' outputs can
-be diffed textually to explain a fingerprint drift.
+Writes, per query, OUTDIR/<name>.raw.txt (the plan's ``toString()``),
+OUTDIR/<name>.canon.txt (``plans.canonical_plan`` of it, the string the
+plan fingerprints hash) and OUTDIR/<name>.formatted.txt
+(``explain("formatted")``), so two trees' outputs can be diffed textually
+to explain a fingerprint drift.  Plans are captured cold (a fresh
+DataFrame, no runs), as the fingerprints are.
 """
 
 from __future__ import annotations
@@ -14,18 +17,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import re  # noqa: E402
-
-from magi_etl_spark.plans import _canon_v1, _sort_unordered_lists  # noqa: E402
+from magi_etl_spark.plans import canonical_plan  # noqa: E402
 from magi_etl_spark.queries import QUERIES  # noqa: E402
 from magi_etl_spark.session import get_spark  # noqa: E402
-
-
-def _canon(plan: str) -> str:
-    # identical pipeline to plans.plan_fingerprint, minus the md5
-    s = _canon_v1(plan)
-    s = re.sub(r"\(gid# = \d+L?\)", "(gid# = <g>)", s)
-    return _sort_unordered_lists(s)
 
 
 def main() -> None:
@@ -35,16 +29,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="plan-dump")
     for name in names:
-        raw = (
-            QUERIES[name](spark, sf_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        with open(os.path.join(outdir, f"{name}.raw.txt"), "w") as fh:
-            fh.write(raw)
-        with open(os.path.join(outdir, f"{name}.canon.txt"), "w") as fh:
-            fh.write(_canon(raw))
+        qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
+        raw = qe.executedPlan().toString()
+        formatted = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        for kind, text in (
+            ("raw", raw),
+            ("canon", canonical_plan(raw)),
+            ("formatted", formatted),
+        ):
+            with open(os.path.join(outdir, f"{name}.{kind}.txt"), "w") as fh:
+                fh.write(text)
         print(f"dumped {name}")
     spark.stop()
 

@@ -2,20 +2,24 @@
 
 The driver gate compares at sf0.01 and the local suite at sf0.001; this
 tool runs the SAME comparison at any catalog (default sf0.1) over the
-registered queries, the staged registries, or both.  Round-8 lesson: a
-summation-order last-ulp in q146's double ``AVG`` rounded differently
-only at sf0.1 — green at both smaller scales — so scale-divergent float
-arithmetic is a real class, and one cheap sweep per round catches it
-before a driver ever could.
+registered queries.  Round-8 lesson: a summation-order last-ulp in
+q146's double ``AVG`` rounded differently only at sf0.1 — green at both
+smaller scales — so scale-divergent float arithmetic is a real class,
+and one cheap sweep per round catches it before a driver ever could.
+
+Every checked query is recorded in ``PARITY_LEDGER.json`` under its
+name and the scale-factor directory's name, as ``{"fp", "ok"}``: the
+query's source fingerprint (tests/source_fingerprint.py) and the
+verdict.  ``tests/test_gate_window.py`` accepts a tail query whose
+sources changed since its last green driver row when the ledger holds
+``ok`` rows at sf0.01 and sf0.1 at its current fingerprint.
 
 Usage:
-    python tools/parity_sweep.py [--sf-dir DIR] [--scope registered|staged|all]
-                                 [--only qA,qB,...]
+    python tools/parity_sweep.py [--sf-dir DIR] [--only qA,qB,...]
 
-``--only`` restricts the sweep to a comma-separated list of query names
-(substring prefix match on the qNN id) — the optimization-round loop
-re-verifies each touched query at every scale factor without paying for
-the full registry.
+``--only`` restricts the sweep (and the ledger rows it rewrites) to a
+comma-separated list of query names (substring prefix match on the qNN
+id).  The sweep stops at the first query that loses the JVM, naming it.
 """
 
 from __future__ import annotations
@@ -29,83 +33,85 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
-def _staged() -> dict[str, tuple]:
-    out: dict[str, tuple] = {}
-    from magi_etl_spark.queries import QUERIES
+def _release(spark) -> None:
+    """Drop every cached table and persistent RDD the last query left,
+    so blocks do not pile up in the driver's heap across the registry."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
 
-    for mod, q, o in [
-        ("magi_etl_spark.queries.extensions_r6", "EXT3_QUERIES", "EXT3_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r7", "EXT4_QUERIES", "EXT4_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r8", "EXT5_QUERIES", "EXT5_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r9", "EXT6_QUERIES", "EXT6_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r10", "EXT7_QUERIES", "EXT7_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r11", "EXT8_QUERIES", "EXT8_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r12", "EXT9_QUERIES", "EXT9_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r13", "EXT10_QUERIES", "EXT10_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r14", "EXT11_QUERIES", "EXT11_ORACLE"),
-        ("magi_etl_spark.queries.extensions_r15", "EXT12_QUERIES", "EXT12_ORACLE"),
-    ]:
-        try:
-            m = __import__(mod, fromlist=[q, o])
-        except ImportError:
-            continue
-        for name, fn in getattr(m, q).items():
-            if name not in QUERIES:
-                out[name] = (fn, getattr(m, o)[name])
-    return out
+
+def _jvm_alive(spark) -> bool:
+    from py4j.protocol import Py4JError
+
+    try:
+        spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
+        return True
+    except (Py4JError, ConnectionError):  # the gateway cannot reach the JVM
+        return False
 
 
 def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
-    scope = "all"
     only: list[str] | None = None
     argv = sys.argv[1:]
     for i, a in enumerate(argv):
         if a == "--sf-dir":
             sf_dir = argv[i + 1]
-        elif a == "--scope":
-            scope = argv[i + 1]
         elif a == "--only":
             only = [s.strip() for s in argv[i + 1].split(",") if s.strip()]
 
     from oracle_harness import compare, duckdb_connection
+    from source_fingerprint import load_ledger, query_fingerprint, save_ledger
 
     from magi_etl_spark.queries import ORACLE, QUERIES
     from magi_etl_spark.session import get_spark
 
-    todo: dict[str, tuple] = {}
-    if scope in ("registered", "all"):
-        todo.update({n: (QUERIES[n], ORACLE.get(n)) for n in QUERIES})
-    if scope in ("staged", "all"):
-        todo.update(_staged())
-    if only:
-        todo = {
-            n: v
-            for n, v in todo.items()
-            if any(n == o or n.startswith(o) for o in only)
-        }
+    todo = [
+        n for n in sorted(QUERIES)
+        if not only or any(n == o or n.startswith(o) for o in only)
+    ]
+    scale = os.path.basename(os.path.normpath(sf_dir))
+    ledger = load_ledger()
+    # taken before any query runs, from the sources this process imported
+    fps = {n: query_fingerprint(QUERIES[n], ORACLE.get(n)) for n in todo}
 
-    spark = get_spark(app_name="magi-parity-sweep")
+    # with the session default heap (24g) the JVM outgrew a 15 GB host at
+    # sf0.1 and was killed; bound it as the test suite does
+    spark = get_spark(app_name="magi-parity-sweep", driver_memory="8g")
     con = duckdb_connection(sf_dir)
     fails: list[str] = []
+    lost: str | None = None
     t0 = time.time()
-    for name, (fn, sql) in sorted(todo.items()):
+    for name in todo:
+        fn, sql = QUERIES[name], ORACLE.get(name)
         try:
             if sql is None:
                 ok, msg = fn(spark, sf_dir).count() >= 0, "rows-only"
             else:
                 ok, msg = compare(fn(spark, sf_dir), con, sql)
+            _release(spark)
         except Exception as e:  # noqa: BLE001 — a sweep reports, never aborts
+            if not _jvm_alive(spark):
+                lost = name
+                print(f"LOST JVM during {name}: {str(e)[:400]}", flush=True)
+                break
             ok, msg = False, f"err: {e}"
+            _release(spark)
+        ledger.setdefault(name, {})[scale] = {"fp": fps[name], "ok": ok}
         if not ok:
             fails.append(name)
             print(f"FAIL {name} {msg[:400]}", flush=True)
+    save_ledger(ledger)
+    done = len(todo) if lost is None else todo.index(lost)
     print(
-        f"DONE scope={scope} sf_dir={sf_dir}: {len(todo)} queries, "
+        f"DONE sf_dir={sf_dir}: {done} of {len(todo)} queries, "
         f"{len(fails)} failures, {time.time() - t0:.0f}s"
+        + (f"; stopped: the JVM was lost during {lost}" if lost else "")
     )
-    spark.stop()
-    sys.exit(1 if fails else 0)
+    if lost is None:
+        spark.stop()
+    sys.exit(1 if fails or lost else 0)
 
 
 if __name__ == "__main__":
