@@ -7,6 +7,7 @@
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -15,6 +16,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from magi_etl_spark.chkpt import release
 from magi_etl_spark.queries import ORACLE, QUERIES
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -83,8 +85,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, in
-    :func:`window_order` over the recorded driver rows."""
-    return {n: QUERIES[n] for n in window_order(list(QUERIES), correctness_rows())}
+    :func:`window_order` over the recorded driver rows.  Each entry first
+    calls ``chkpt.release()``, so the driver's one session holds one
+    query's barrier blocks at a time."""
+
+    def released(fn):
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release()
+            return fn(spark, sf_dir)
+
+        return build
+
+    order = window_order(list(QUERIES), correctness_rows())
+    return {n: released(QUERIES[n]) for n in order}
 
 
 def oracle_sql() -> dict[str, str]:

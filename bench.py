@@ -16,6 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from magi_etl_spark.chkpt import release  # noqa: E402
 from magi_etl_spark.queries import QUERIES  # noqa: E402
 from magi_etl_spark.session import get_spark  # noqa: E402
 
@@ -349,20 +350,6 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _isolate(spark) -> None:
-    """Per-query isolation: drop every cached table and persistent RDD
-    left behind by the previous query.  Operators persist/localCheckpoint
-    deliberately and their OWN runs pay (and may reuse) that cost, but without this the
-    residue accumulates across the 139-query session and executor memory
-    pressure bleeds into LATER queries' timings — the r8 first run
-    measured q107-q109 at 5×+ their standalone wall purely from
-    neighbor pollution.  Production runs one query per job; the bench
-    should time that."""
-    spark.catalog.clearCache()
-    for _id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-        rdd.unpersist()
-
-
 # The 13 queries BENCH_r01 measured, in its order — the cross-round 2x
 # comparison set.  `python bench.py --subset-r01` runs ONLY these in a
 # fresh session and writes BENCH_R01_SUBSET.json, so the r01 comparison
@@ -430,18 +417,12 @@ def main() -> None:
         ]
     # warm the JVM + parquet footers once so timings measure the queries
     _materialize(QUERIES[names[0]](spark, sf_dir))
-    _isolate(spark)
+    release()
     for name in names:
-        # isolation boundary is BETWEEN queries, not between a query's
-        # own runs: run 2 may reuse run 1's persisted intermediates
-        # (Spark's CacheManager matches canonicalized subtrees), which is
-        # exactly the best-of-2 semantics every prior round's numbers
-        # were measured under — so ratios vs BENCH_r01/r07 stay
-        # like-for-like while neighbor pollution stays out.
-        # fingerprint the COLD plan, before any run: computed afterwards
-        # it would see the query's own persisted subtrees as
-        # InMemoryTableScan nodes, making the fingerprint depend on run
-        # order (observed drifting across the three r8 runs)
+        # release() after each query keeps its barrier blocks from slowing
+        # LATER queries (r8 measured q107-q109 at 5×+ their standalone wall
+        # from such neighbors); the plan is fingerprinted COLD, before any
+        # run, so run order cannot move it (it drifted across r8's runs)
         cold_plan = (
             QUERIES[name](spark, sf_dir)
             ._jdf.queryExecution()
@@ -466,7 +447,7 @@ def main() -> None:
         runs[name] = walls
         timings[name] = min(walls)
         load_during.append(os.getloadavg()[0])
-        _isolate(spark)
+        release()
         spread = max(walls) - min(walls)
         print(
             f"# {name}: best={timings[name]:.3f}s spread={spread:.3f}s "

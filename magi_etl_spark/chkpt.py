@@ -1,50 +1,39 @@
-"""Checkpoint-mode knob: one switch deciding HOW iterative / fan-out
-operators materialize bounded intermediates (r14 VERDICT item 4).
+"""The one materialization path: every barrier an operator or query
+puts into its plan goes through :func:`materialize`, and :func:`release`
+drops what those barriers hold.
 
-The engine's standard idiom for (a) driver-side iterative loops whose
-lineage would otherwise grow exponentially (PageRank, k-core, label
-propagation, IPF raking, quantile-regression coordinate descent) and
-(b) lazy frames fanned out to N downstream subtrees (Friedman cell
-frames, set-similarity element sets — each reference recompiles the
-whole upstream subtree otherwise; AQE's ReusedExchange recovers only
-about half) is an EAGER materialization barrier.  ``localCheckpoint``
-is the right barrier for the local[32] sandbox — no checkpoint
-directory needed, executor-local blocks, truncates lineage — but it is
-NOT fault-tolerant: blocks live only in executor storage, so on a real
-cluster one executor loss kills the job instead of recomputing.  At
-100 TB the same shape wants either a RELIABLE checkpoint (HDFS/S3
-checkpoint dir; fault-tolerant AND truncates lineage) or a
-DISK_ONLY persist (keeps lineage, so lost partitions recompute — right
-for fan-out reuse, wrong for deep iteration where the kept lineage is
-itself the problem).
-
-Modes (``SPARK_GRAFT_CHECKPOINT_MODE`` env var or
+Driver-side iterative loops (PageRank, k-core, label propagation, IPF
+raking) use the eager default to truncate lineage each round; lazy
+frames fanned out to N downstream subtrees (Friedman cells, token and
+shingle arrays that interpreted higher-order functions would recompute
+per reference) pass ``eager=False`` so the first action fills the
+barrier.  How a barrier is held is a deployment property, so it is one
+process-wide mode (``SPARK_GRAFT_CHECKPOINT_MODE`` or
 :func:`set_checkpoint_mode`):
 
-- ``local``    — ``df.localCheckpoint(eager=...)``.  Sandbox default.
+- ``local``    — ``df.localCheckpoint(eager=...)``.  Default; no
+  checkpoint dir, but one executor loss fails the job.
 - ``reliable`` — ``df.checkpoint(eager=...)``.  Cluster posture for
-  iterative loops; requires ``spark.sparkContext.setCheckpointDir``
-  (raises a loud error otherwise — Spark's own message says exactly
-  that).
-- ``persist``  — ``df.persist(StorageLevel.DISK_ONLY)`` (+ a
-  ``count()`` when eager).  Cluster posture for fan-out reuse:
-  fault-tolerant via kept lineage.
-- ``off``      — identity.  Plan-only consumers (cold-plan
-  fingerprinting, ``tools/scan_audit.py``, schema lints) opt out of
-  construction-time jobs; NOT a correctness mode for iterative
-  operators at scale (lineage grows unchecked).
+  iterative loops; needs ``spark.sparkContext.setCheckpointDir``.
+- ``persist``  — ``df.persist(StorageLevel.DISK_ONLY)`` (+ a ``count()``
+  when eager).  Cluster posture for fan-out reuse: lost partitions
+  recompute from the kept lineage, which deep iteration cannot afford.
+- ``off``      — identity, for plan-only consumers; not a correctness
+  mode at scale.
 
-Operators route their barriers through :func:`materialize`; a guard
-test (``tests/test_chkpt_single_path.py``) rejects raw
-``.localCheckpoint(`` / ``.checkpoint(`` calls anywhere else, and pins
-the count of raw ``.persist(`` / ``.cache(`` sites per module.  The knob is
-process-wide because the choice is a deployment property, not a
-per-call one.
+``local`` and ``persist`` barriers are recorded in one process-wide list
+(under a lock: ``run_concurrent`` materializes from worker threads).
+Operators never release their own barriers, since the frames they
+return read them: whoever runs the action calls :func:`release` after
+it, and ``__spark_entry__.queries()`` calls it before each build, so a
+session holds one query's blocks at a time.  ``tests/test_chkpt_single_path.py``
+guards against raw barrier or unpersist calls elsewhere in the package.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -54,6 +43,9 @@ if _mode not in _MODES:
     raise ValueError(
         f"SPARK_GRAFT_CHECKPOINT_MODE={_mode!r} is not one of {_MODES}"
     )
+# (mode, barrier frame) since the last release()
+_held: list[tuple[str, DataFrame]] = []
+_held_lock = threading.Lock()
 
 
 def checkpoint_mode() -> str:
@@ -86,15 +78,41 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     the eager form followed by a count.  ``reliable`` took 3 either
     way, since it writes its checkpoint files in a job of their own.
     """
-    if _mode == "off":
+    mode = _mode
+    if mode == "off":
         return df
-    if _mode == "persist":
+    if mode == "reliable":
+        # the checkpoint files belong to the caller's checkpoint dir
+        return df.checkpoint(eager=eager)
+    if mode == "persist":
         from pyspark import StorageLevel
 
-        out = df.persist(StorageLevel.DISK_ONLY)
+        cached = df.storageLevel != StorageLevel.NONE  # the caller's to release
+        out = df if cached else df.persist(StorageLevel.DISK_ONLY)
         if eager:
             out.count()
-        return out
-    if _mode == "reliable":
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        if cached:
+            return out
+    else:
+        out = df.localCheckpoint(eager=eager)
+    with _held_lock:
+        _held.append((mode, out))
+    return out
+
+
+def release() -> None:
+    """Drop the blocks of every barrier :func:`materialize` returned
+    since the last call.  Frames built on those barriers must not run
+    again afterwards (a local checkpoint's blocks are its only copy)."""
+    global _held
+    with _held_lock:
+        held, _held = _held, []
+    # newest first: uncaching a frame makes Spark rebuild the cache
+    # entries of persisted frames built on it
+    for mode, out in reversed(held):
+        if out.sparkSession.sparkContext._jsc is None:
+            continue  # the stopped context took its blocks with it
+        if mode == "persist":
+            out.unpersist()
+        else:
+            out._jdf.logicalPlan().rdd().unpersist(False)

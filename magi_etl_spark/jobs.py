@@ -372,6 +372,7 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument("--nonce", default="release-0")
 
     args = ap.parse_args(argv)
+    from magi_etl_spark.chkpt import release
     from magi_etl_spark.session import get_spark
     from magi_etl_spark.telemetry import RunTelemetry
 
@@ -392,6 +393,7 @@ def main(argv: list[str] | None = None) -> int:
     run_id = f"{args.job}-{os.getpid()}"
     telemetry.start_run(args.job, run_id)
     paths = runner(spark, args)
+    release()  # the pipeline's writes are done: drop its barrier blocks
     duration = telemetry.end_run(args.job, run_id)
     print(
         json.dumps(

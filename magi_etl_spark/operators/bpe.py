@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
+
 _WORD_RE = "[a-z]+"
 
 
@@ -112,14 +114,14 @@ def bpe_train(
     if word_freqs is not None:
         # prebuilt (already materialized by the caller) — see
         # bpe_train_local's word_freqs note
-        base, own = word_freqs, False
+        base = word_freqs
     else:
-        base, own = bpe_word_freqs(df, text_col).persist(), True
-        base.count()  # materialize the corpus pass once
+        base = materialize(bpe_word_freqs(df, text_col), eager=False)
+        base.count()  # fills the barrier: the corpus pass runs once
     # r15 optimization (guide §1.4/§5): the merge loop used to persist
     # + count + unpersist the rewritten vocabulary EVERY round — three
     # sequential jobs per merge, with the persisted frame re-serialized
-    # each time.  The rewrite chain is kept LAZY over the one persisted
+    # each time.  The rewrite chain is kept LAZY over the one materialized
     # base instead: round i's pair-count plan is base -> i chained
     # ``replace`` columns -> explode -> aggregate, so each round is ONE
     # job (the 1-row argmax collect).  Re-running i cheap string
@@ -142,8 +144,6 @@ def bpe_train(
         l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((i, l, r, l + r, cnt))
         vocab = _merge_once(vocab, l, r)
-    if own:
-        base.unpersist(blocking=False)
     return spark.createDataFrame(
         merges, "merge_rank int, l string, r string, merged string, pair_freq bigint"
     )
@@ -295,8 +295,6 @@ def bpe_train_and_segment(
     vocabulary internally; segmentation reuses the same single corpus
     pass.  ``trainer="local"`` (default) trains driver-side in 2 Spark
     jobs; the merge table is identical to the distributed loop's."""
-    from magi_etl_spark.chkpt import materialize
-
     # ONE materialized corpus pass shared by train and apply (r15 —
     # left lazy, the train guard/collect and the segmentation each
     # re-ran the corpus word count)
@@ -355,8 +353,6 @@ def bpe_encode_docs(
     single-partition ``dense_rank`` window is safe ONLY because the
     symbol table is |alphabet|+|merges| rows; corpus-sized frames must
     use the range-partitioned prefix-sum rank instead."""
-    from magi_etl_spark.chkpt import materialize
-
     # ONE materialized corpus word-count pass (r15): it feeds the train
     # guard + collect, the segmentation apply, AND (via the segmented
     # vocab) the symbol table and the encode join — left lazy each of

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.functions.text import tokens
 
 
@@ -25,9 +26,9 @@ def chunk_documents(
     """One row per (document, window): 1-indexed start grid stepping by
     ``stride``; the final window may be short and is kept only at
     ``min_chunk_tokens`` or more."""
-    toks_df = df.select(
+    toks_df = df.select(  # HOFs: tokenize once, slice many
         F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks")
-    ).where(F.size("toks") > 0).persist()  # HOFs: tokenize once, slice many
+    ).where(F.size("toks") > 0).transform(materialize, eager=False)
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(stride))
     exploded = toks_df.select(
         "doc_id",

@@ -48,7 +48,7 @@ def connected_components(
     fwd = edges.select(F.col(src).alias("v"), F.col(dst).alias("n"))
     sym = fwd.union(
         edges.select(F.col(dst).alias("v"), F.col(src).alias("n"))
-    ).persist()
+    ).transform(materialize, eager=False)
     # eager barrier: iterative driver loops must truncate lineage each
     # round, or round k re-executes rounds 1..k-1 and the plan grows
     # without bound
@@ -67,7 +67,7 @@ def connected_components(
         # jumping halves the remaining distance to the component minimum
         # each round — convergence in O(log diameter), not O(diameter).
         # (r15 measured: splitting the pointer edge into its own
-        # vertex-scale join — hoping to keep the persisted sym side
+        # vertex-scale join — hoping to keep the materialized sym side
         # exchange-free — was tried and REVERTED: sym carries no hash
         # partitioning on the join key, so the split saved no exchange
         # and the extra join per round cost ~35% on the dbscan path.)
@@ -95,7 +95,6 @@ def connected_components(
         labels = step.select("v", F.col("new_label").alias("label"))
         if changed == 0:
             break
-    sym.unpersist(blocking=False)
     return labels.select(F.col("v").alias("vertex"), F.col("label").alias("component"))
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.functions.vectors import as_double
 
 
@@ -57,12 +58,12 @@ def kcenter_select(
     (0.0 for the seed) — a k-row result by construction, so the
     driver-side list is the bounded-collect idiom, not a corpus
     collect."""
-    # persisted across the k rounds (r15, guide §5): every round scans
+    # one barrier for the k rounds (r15, guide §5): every round scans
     # the same (id, vector) projection; left lazy each round re-read
     # the source — a k-fold scan bill at any scale
     corpus = df.select(
         F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("_v")
-    ).persist()
+    ).transform(materialize, eager=False)
     seed = corpus.orderBy("_id").limit(1).collect()[0]
     chosen = [{"rank": 1, "id": seed["_id"], "sq_dist": 0.0}]
     centers = [list(seed["_v"])]
@@ -90,7 +91,6 @@ def kcenter_select(
             break
         chosen.append({"rank": r, "id": far["_id"], "sq_dist": far["_d"]})
         centers.append(list(far["_v"]))
-    corpus.unpersist(blocking=False)
     return chosen
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.operators.dedup import with_shingles
 
 
@@ -54,7 +55,7 @@ def contamination_pairs(
             F.size("shingles").alias("b_n_sh"),
             F.explode("shingles").alias("shingle"),
         )
-        .persist()
+        .transform(materialize, eager=False)
     )
     d_post = d.select("doc_id", F.explode("shingles").alias("shingle"))
     matched = d_post.join(F.broadcast(b), "shingle")

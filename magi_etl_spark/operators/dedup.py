@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.functions.text import salted_min_hashes, tokens, word_shingles
 
 
@@ -65,16 +66,17 @@ def with_shingles(
 ) -> DataFrame:
     """(id, shingles array) projection; distinct shingle sets for Jaccard.
 
-    The token array is persisted before shingling: higher-order functions
+    The token array is materialized before shingling: higher-order functions
     run interpreted (CodegenFallback, no common-subexpression elimination),
     so an inlined ``tokens(text)`` would re-tokenize the document for every
     ``element_at`` inside the shingle lambda — measured O(shingles)
-    blowup.  Persisting bounds it to one tokenization per document; at
+    blowup.  The barrier bounds it to one tokenization per document; at
     cluster scale this spills to local disk, which is still far cheaper.
     """
     toks = _fan_out(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-    ).select("doc_id", tokens(F.col(text_col)).alias("toks")).persist()
+    ).select("doc_id", tokens(F.col(text_col)).alias("toks"))
+    toks = materialize(toks, eager=False)
     sh = word_shingles(F.col("toks"), n)
     if distinct:
         sh = F.array_distinct(sh)
@@ -104,7 +106,7 @@ def ngram_jaccard_pairs(
     """
     sets = with_shingles(df, id_col, text_col, n).where(
         F.size("shingles") > 0
-    ).persist()
+    ).transform(materialize, eager=False)
     sizes = sets.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sets.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_doc_freq is not None:
@@ -163,7 +165,7 @@ def containment_pairs(
     integers, so the threshold cut is engine-portable."""
     sets = with_shingles(df, id_col, text_col, n).where(
         F.size("shingles") > 0
-    ).persist()
+    ).transform(materialize, eager=False)
     sizes = sets.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sets.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_doc_freq is not None:
@@ -213,12 +215,12 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature columns m0..m{k-1} (md5-based, portable).
 
-    The shingle arrays are persisted before fanning out into k min-hash
+    The shingle arrays are materialized before fanning out into k min-hash
     columns — otherwise Catalyst inlines the tokenize/shingle expression
     into every one of the k projections (k-fold recompute)."""
     sets = with_shingles(df, id_col, text_col, n).where(
         F.size("shingles") > 0
-    ).persist()
+    ).transform(materialize, eager=False)
     return sets.select("doc_id", *salted_min_hashes(F.col("shingles"), n_hashes))
 
 
@@ -263,16 +265,16 @@ def minhash_lsh_dedup(
     """Full MinHash→LSH→verify pipeline: signatures → banded candidates →
     exact Jaccard verification of candidates only."""
     # Materialize the tokenize->shingle->md5 work once: Catalyst inlines
-    # projection aliases, so without persist() the whole expression tree is
+    # projection aliases, so without the barrier the whole expression tree is
     # re-evaluated on EVERY side of every self-join (measured 4x cost).
     # Both intermediates are small: signatures are 4 hashes/doc, shingle
     # sets are the tokenized docs.
     sets = with_shingles(df, id_col, text_col, n).where(
         F.size("shingles") > 0
-    ).persist()
+    ).transform(materialize, eager=False)
     sigs = sets.select(
         "doc_id", *salted_min_hashes(F.col("shingles"), n_hashes)
-    ).persist()
+    ).transform(materialize, eager=False)
     bands = [
         [f"m{j}" for j in range(i, min(i + band_size, n_hashes))]
         for i in range(0, n_hashes, band_size)

@@ -69,7 +69,7 @@ def pagerank(
         e.select(F.col("src").alias("v"))
         .union(e.select(F.col("dst").alias("v")))
         .distinct()
-        .persist()
+        .transform(materialize, eager=False)
     )
     n = vertices.count()
     if reset_vertices is None:
@@ -95,11 +95,11 @@ def pagerank(
     # tiny.  On a real cluster with edge-scale links, cache the links
     # frame hash-partitioned by src so the loop-invariant side never
     # re-exchanges.
-    reset = reset.persist()
+    reset = materialize(reset, eager=False)
     out_deg = materialize(
         e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     )
-    links = e.join(out_deg, "src").persist()
+    links = materialize(e.join(out_deg, "src"), eager=False)
     ranks = reset.select("v", F.col("_rp").alias("rank"))
     for _ in range(iterations):
         contribs = (
@@ -131,9 +131,6 @@ def pagerank(
             )
             .transform(materialize)
         )
-    vertices.unpersist(blocking=False)
-    links.unpersist(blocking=False)
-    reset.unpersist(blocking=False)
     return ranks.select(F.col("v").alias("vertex"), "rank")
 
 

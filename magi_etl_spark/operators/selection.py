@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
+
 
 def _prepared(df: DataFrame, col: str) -> DataFrame:
     """The single-column long projection the selection rounds scan."""
@@ -52,17 +54,12 @@ def kth_smallest(
     integer column, via histogram-narrowing rounds.  Raises on an empty
     frame or out-of-range ``k``.
 
-    The projected column is persisted for the duration of the call
-    (MEMORY_AND_DISK, so it spills rather than OOMs): every narrowing
-    round re-aggregates the same single-column frame, and without the
-    persist each of the ~log_bins(range) rounds would re-read the
-    source scan — a 12× source-scan bill at 100 TB for a 3-quantile
-    call."""
-    vals = _prepared(df, col).persist()
-    try:
-        return _kth_prepared(vals, k, n_bins)
-    finally:
-        vals.unpersist()
+    The projected column is a lazy ``chkpt`` barrier, filled by the
+    first round: every narrowing round re-aggregates the same
+    single-column frame, and without the barrier each of the
+    ~log_bins(range) rounds would re-read the source scan — a 12×
+    source-scan bill at 100 TB for a 3-quantile call."""
+    return _kth_prepared(materialize(_prepared(df, col), eager=False), k, n_bins)
 
 
 def _kth_prepared(vals: DataFrame, k: int, n_bins: int = 256) -> int:
@@ -124,111 +121,107 @@ def exact_quantiles(
     """Exact quantiles at ratios ``num/den`` (e.g. ``(1, 2)`` = median,
     ``(9, 10)`` = p90) as ``q_num, q_den, k, value`` — the lower
     empirical quantile convention ``k = ceil(q * n)`` (exact integer
-    arithmetic, no float boundary).  The projected column is persisted
+    arithmetic, no float boundary).  The projected column is materialized
     ONCE across all ratios (see :func:`kth_smallest` for why), and the
     narrowing rounds for ALL ratios run in LOCKSTEP (r15 optimization):
     each round is ONE aggregation computing a histogram per DISTINCT
     active [lo, hi] range (ratios sharing a range — always true in
     round 1 — share one histogram with no row expansion; diverged
     ranges are tagged and unioned through one explode), prefixed by the
-    union-of-ranges filter so the cached-batch stats prune later
-    rounds' scans exactly as the old per-ratio WHERE did.  The old
+    union-of-ranges filter, as the old per-ratio WHERE was.  The old
     shape ran an independent round loop per ratio (~4 passes per ratio
     instead of ~4 total).  The per-ratio walk is unchanged, so every
     returned order statistic is identical."""
     spark: SparkSession = df.sparkSession
-    vals = _prepared(df, col).persist()
-    try:
-        row = vals.agg(
-            F.min("_v").alias("lo"), F.max("_v").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        n = int(row["n"])
-        if n == 0:
-            raise ValueError("exact_quantiles on an empty frame")
-        glo, ghi = int(row["lo"]), int(row["hi"])
-        # state per ratio: (k remaining, lo, hi)
-        state: list[list[int]] = []
-        for num, den in qs:
-            k = max(1, -((-num * n) // den))  # ceil(num*n/den), ints only
-            state.append([k, glo, ghi])
-        while any(lo < hi for _, lo, hi in state):
-            # distinct active ranges; ratios sharing a range share a
-            # histogram (identical width => identical bin ids)
-            ranges: dict[tuple[int, int], list[int]] = {}
-            for i, s in enumerate(state):
-                if s[1] < s[2]:
-                    ranges.setdefault((s[1], s[2]), []).append(i)
-            rlist = sorted(ranges)
-            in_any = None
-            for lo, hi in rlist:
-                c = (F.col("_v") >= lo) & (F.col("_v") <= hi)
-                in_any = c if in_any is None else (in_any | c)
-            scoped = vals.where(in_any)
+    vals = materialize(_prepared(df, col), eager=False)
+    row = vals.agg(
+        F.min("_v").alias("lo"), F.max("_v").alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    n = int(row["n"])
+    if n == 0:
+        raise ValueError("exact_quantiles on an empty frame")
+    glo, ghi = int(row["lo"]), int(row["hi"])
+    # state per ratio: (k remaining, lo, hi)
+    state: list[list[int]] = []
+    for num, den in qs:
+        k = max(1, -((-num * n) // den))  # ceil(num*n/den), ints only
+        state.append([k, glo, ghi])
+    while any(lo < hi for _, lo, hi in state):
+        # distinct active ranges; ratios sharing a range share a
+        # histogram (identical width => identical bin ids)
+        ranges: dict[tuple[int, int], list[int]] = {}
+        for i, s in enumerate(state):
+            if s[1] < s[2]:
+                ranges.setdefault((s[1], s[2]), []).append(i)
+        rlist = sorted(ranges)
+        in_any = None
+        for lo, hi in rlist:
+            c = (F.col("_v") >= lo) & (F.col("_v") <= hi)
+            in_any = c if in_any is None else (in_any | c)
+        scoped = vals.where(in_any)
 
-            def bin_expr(lo: int, width: int) -> F.Column:
-                # same exact-integer bin id as _kth_prepared: decimal
-                # subtraction (wrap-free under ANSI), floor division
-                return F.expr(
-                    f"(CAST(_v AS DECIMAL(38,0))"
-                    f" - CAST({lo} AS DECIMAL(38,0))) DIV {width}"
-                ).cast("long")
+        def bin_expr(lo: int, width: int) -> F.Column:
+            # same exact-integer bin id as _kth_prepared: decimal
+            # subtraction (wrap-free under ANSI), floor division
+            return F.expr(
+                f"(CAST(_v AS DECIMAL(38,0))"
+                f" - CAST({lo} AS DECIMAL(38,0))) DIV {width}"
+            ).cast("long")
 
-            hists: dict[int, dict[int, int]] = {}
-            if len(rlist) == 1:
-                (lo, hi), width = rlist[0], (rlist[0][1] - rlist[0][0]) // n_bins + 1
-                hists[0] = {
-                    int(r["_b"]): int(r["c"])
-                    for r in scoped.groupBy(
-                        bin_expr(lo, width).alias("_b")
-                    ).agg(F.count(F.lit(1)).alias("c")).collect()
-                }
-            else:
-                branches = []
-                for ri, (lo, hi) in enumerate(rlist):
-                    width = (hi - lo) // n_bins + 1
-                    branches.append(
-                        F.when(
-                            (F.col("_v") >= lo) & (F.col("_v") <= hi),
-                            F.struct(
-                                F.lit(ri).alias("i"),
-                                bin_expr(lo, width).alias("b"),
-                            ),
+        hists: dict[int, dict[int, int]] = {}
+        if len(rlist) == 1:
+            (lo, hi), width = rlist[0], (rlist[0][1] - rlist[0][0]) // n_bins + 1
+            hists[0] = {
+                int(r["_b"]): int(r["c"])
+                for r in scoped.groupBy(
+                    bin_expr(lo, width).alias("_b")
+                ).agg(F.count(F.lit(1)).alias("c")).collect()
+            }
+        else:
+            branches = []
+            for ri, (lo, hi) in enumerate(rlist):
+                width = (hi - lo) // n_bins + 1
+                branches.append(
+                    F.when(
+                        (F.col("_v") >= lo) & (F.col("_v") <= hi),
+                        F.struct(
+                            F.lit(ri).alias("i"),
+                            bin_expr(lo, width).alias("b"),
+                        ),
+                    )
+                )
+            for r in (
+                scoped.select(
+                    F.explode(
+                        F.filter(
+                            F.array(*branches), lambda s: s.isNotNull()
                         )
-                    )
-                for r in (
-                    scoped.select(
-                        F.explode(
-                            F.filter(
-                                F.array(*branches), lambda s: s.isNotNull()
-                            )
-                        ).alias("s")
-                    )
-                    .groupBy(F.col("s.i").alias("i"), F.col("s.b").alias("b"))
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .collect()
-                ):
-                    hists.setdefault(int(r["i"]), {})[int(r["b"])] = int(r["c"])
-            for ri, (rlo, rhi) in enumerate(rlist):
-                width = (rhi - rlo) // n_bins + 1
-                hist = hists.get(ri, {})
-                for i in ranges[(rlo, rhi)]:
-                    k = state[i][0]
-                    acc = 0
-                    for b in range(n_bins + 1):
-                        c = hist.get(b, 0)
-                        if acc + c >= k:
-                            state[i][0] = k - acc
-                            state[i][1] = rlo + b * width
-                            state[i][2] = min(rhi, rlo + b * width + width - 1)
-                            break
-                        acc += c
-        rows = [
-            (num, den, max(1, -((-num * n) // den)), state[j][1])
-            for j, (num, den) in enumerate(qs)
-        ]
-    finally:
-        vals.unpersist()
+                    ).alias("s")
+                )
+                .groupBy(F.col("s.i").alias("i"), F.col("s.b").alias("b"))
+                .agg(F.count(F.lit(1)).alias("c"))
+                .collect()
+            ):
+                hists.setdefault(int(r["i"]), {})[int(r["b"])] = int(r["c"])
+        for ri, (rlo, rhi) in enumerate(rlist):
+            width = (rhi - rlo) // n_bins + 1
+            hist = hists.get(ri, {})
+            for i in ranges[(rlo, rhi)]:
+                k = state[i][0]
+                acc = 0
+                for b in range(n_bins + 1):
+                    c = hist.get(b, 0)
+                    if acc + c >= k:
+                        state[i][0] = k - acc
+                        state[i][1] = rlo + b * width
+                        state[i][2] = min(rhi, rlo + b * width + width - 1)
+                        break
+                    acc += c
+    rows = [
+        (num, den, max(1, -((-num * n) // den)), state[j][1])
+        for j, (num, den) in enumerate(qs)
+    ]
     return spark.createDataFrame(
         rows, "q_num int, q_den int, k long, value long"
     )

@@ -13,6 +13,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.functions.vectors import as_double, cosine, dot, l2_norm
 
 
@@ -69,7 +70,7 @@ def blocked_neardup_pairs(
 
     The block key (a label, an LSH bucket, a shard) turns O(n^2) into
     sum-of-squares-per-bucket.  Two scale measures on top:
-    - norms are computed ONCE per vector (persisted), not per pair — the
+    - norms are computed ONCE per vector (materialized), not per pair — the
       per-pair expression is a single dot product;
     - the join key is salted: the a-side gets ``id % S`` and the b-side is
       replicated S times, so a block with millions of vectors spreads over
@@ -86,7 +87,7 @@ def blocked_neardup_pairs(
             F.col(id_col), F.col(block_col).alias("block"), as_double(F.col(vec_col)).alias("_v")
         ),
         width=1,
-    ).withColumn("_norm", l2_norm(F.col("_v"))).persist()
+    ).withColumn("_norm", l2_norm(F.col("_v"))).transform(materialize, eager=False)
     a = side.withColumn("_salt", F.pmod(F.col(id_col), F.lit(salt_buckets)))
     b = side.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
@@ -144,16 +145,16 @@ def ivf_index(
 
     feat = _fan_out(
         df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
-    ).withColumn("_feat", array_to_vector("_v")).persist()
+    ).withColumn("_feat", array_to_vector("_v")).transform(materialize, eager=False)
     if n_lists is None:
-        # one 1-row aggregate over the (persisted) feature frame
+        # one 1-row aggregate over the (materialized) feature frame
         n_lists = auto_n_lists(feat.count(), floor=16)
     model = KMeans(k=n_lists, seed=seed, featuresCol="_feat", predictionCol="list_id").fit(feat)
     assigned = model.transform(feat).select(
         id_col, F.col("_v"), F.col("list_id")
     )
     centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-    return assigned.persist(), centroids
+    return materialize(assigned, eager=False), centroids
 
 
 def _farthest_point_select(cands: list, n: int) -> list:
@@ -241,7 +242,7 @@ def ivf_index_sampled(
         raise ValueError(f"unknown IVF init {init!r}")
     centroids = [[float(x) for x in r["_v"]] for r in rows]
     assigned = assign_to_centroids(base, centroids, id_col, vec_col="_v")
-    return assigned.persist(), centroids
+    return materialize(assigned, eager=False), centroids
 
 
 def assign_to_centroids(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.functions.text import char_shingles, tokens
 
 # Small, fixed stopword inventories for the language-ID heuristic.  Scores
@@ -29,14 +30,14 @@ def token_stats(
 ) -> DataFrame:
     """Token count + average token length (integer-exact ratios).
 
-    The token array is projected + persisted once (interpreted HOFs skip
+    The token array is projected + materialized once (interpreted HOFs skip
     CSE, so the three stats would otherwise re-split every document —
     see ``quality_scores``)."""
     base = df.select(
         F.col(id_col),
         F.length(F.col(text_col)).alias("_len"),
         tokens(F.col(text_col)).alias("_t"),
-    ).persist()
+    ).transform(materialize, eager=False)
     t = F.col("_t")
     toklen_sum = F.aggregate(
         F.transform(t, lambda x: F.length(x)), F.lit(0), lambda acc, x: acc + x
@@ -55,7 +56,7 @@ def quality_scores(
     """Heuristic document quality: length, stopword ratio, lexical
     diversity, blended 0..1 score (training-data filtering primitive).
 
-    The token array is projected and PERSISTED once: higher-order
+    The token array is projected and MATERIALIZED once: higher-order
     functions run interpreted (no common-subexpression elimination), so
     computing each stat straight off the text would re-split every
     document ~5 times — measured 8x wall at the 32x scale probe before
@@ -63,7 +64,7 @@ def quality_scores(
     (``operators/dedup.py``)."""
     base = df.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_t")
-    ).where(F.size("_t") > 0).persist()
+    ).where(F.size("_t") > 0).transform(materialize, eager=False)
     t = F.col("_t")
     n = F.size(t)
     stop_ratio = _hits(t, LANG_MARKERS["en"]) / n
@@ -89,13 +90,13 @@ def language_id(
     order).  A real model would be a broadcast n-gram table; the operator
     shape — per-row scoring against broadcast constants — is the same.
 
-    The token array is projected + persisted once: the vote expression
+    The token array is projected + materialized once: the vote expression
     references the hit count of every language, which would otherwise
     re-tokenize each document once per language (interpreted HOFs skip
     CSE — see ``quality_scores``)."""
     base = df.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_t")
-    ).persist()
+    ).transform(materialize, eager=False)
     t = F.col("_t")
     hit_cols = {lang: _hits(t, m) for lang, m in LANG_MARKERS.items()}
     best = F.greatest(*hit_cols.values())

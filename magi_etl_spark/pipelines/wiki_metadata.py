@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from magi_etl_spark.calendar import AnchorCalendar
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.functions.strings import (
     canonical_page_metadata,
     split_part,
@@ -287,11 +288,12 @@ def wiki_metadata_pipeline(
     complete = wikis_complete(traffic, meta)
 
     flat = taxonomy_flatten(taxonomy)
-    unity = events_taxonomy_unity(events, flat, anchor_date).persist()
+    unity = materialize(events_taxonomy_unity(events, flat, anchor_date), eager=False)
     tax_cols = {}
     feature_parts = []
     for attr in ("theme", "genre", "subgenre"):
-        conf = wiki_attribute_confidences(unity, attr, confidence_threshold).persist()
+        conf = wiki_attribute_confidences(unity, attr, confidence_threshold)
+        conf = materialize(conf, eager=False)
         tax_cols[f"taxonomy_{attr}s"] = attribute_json_strings(conf)
         # canonical string ids + max-confidence dedupe: the same value can
         # appear at several confidences, which would duplicate the feature

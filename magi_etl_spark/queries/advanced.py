@@ -11,6 +11,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magi_etl_spark.chkpt import materialize
 from magi_etl_spark.queries import query
 from magi_etl_spark.tables import load_table
 
@@ -51,7 +52,7 @@ def q32_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
             ).alias("hs"),
         )
-        .persist()  # HOFs are interpreted: bound the 16 bit-counts to one hash pass
+        .transform(materialize, eager=False)  # interpreted HOFs: hash once
     )
     ones = lambda b: F.size(  # noqa: E731
         F.filter(F.col("hs"), lambda x: x.bitwiseAND(F.lit(1 << b)) != 0)
@@ -87,7 +88,7 @@ def q43_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches (bit_count of xor).  At corpus scale the pair generation is
     banded (join on sketch bytes) instead of this exact all-pairs form;
     the sketch comparison itself is identical."""
-    sigs = q32_simhash(spark, sf_dir).persist()
+    sigs = materialize(q32_simhash(spark, sf_dir), eager=False)
     a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"))
     b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sb"))
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
@@ -394,7 +395,7 @@ def q39_token_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode("toks").alias("feature"),
             (F.lit(1.0) / F.sqrt(F.size("toks"))).alias("value"),
         )
-        .persist()
+        .transform(materialize, eager=False)
     )
     return cosine_similarity_pairs(
         feats, min_similarity=0.9, max_feature_doc_freq=0.76
@@ -440,7 +441,7 @@ def q51_exact_token_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode("toks").alias("feature"),
             (F.lit(1.0) / F.sqrt(F.size("toks"))).alias("value"),
         )
-        .persist()
+        .transform(materialize, eager=False)
     )
     return cosine_similarity_pairs(feats, min_similarity=0.9).select(
         "id_a", "id_b", F.round("similarity", 6).alias("similarity")

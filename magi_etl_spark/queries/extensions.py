@@ -1208,7 +1208,6 @@ def q115_incremental_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(root, "ivf")
     assigned, centroids = ivf_index_sampled(hist, n_lists=8, init="first")
     save_ivf_index(assigned, centroids, path)
-    assigned.unpersist(blocking=False)
     n_appended = append_to_ivf_index(inc, path)
     assert n_appended > 0
     plan = probe_plan(spark, path, [0, 1])

@@ -52,6 +52,9 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 # about twice the classes one registry sweep compiles (module docstring)
 CODEGEN_CACHE_ENTRIES = 8192
+# half the physical memory, at most 24g (a fixed 24g outgrew a 15 GB host)
+_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+DEFAULT_DRIVER_MEMORY = f"{min(_RAM_MB // 2, 24 * 1024)}m"
 
 
 def get_spark(
@@ -89,7 +92,7 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", DEFAULT_DRIVER_MEMORY))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -408,6 +408,8 @@ def run_foreach_batch_lsh_index(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # not chkpt: these blocks live for this call only, on the stream's
+        # own thread, so chkpt.release() must neither keep nor drop them
         batch_df = batch_df.persist()
         try:
             if not os.path.exists(os.path.join(index_path, "_lsh_params.json")):

@@ -11,7 +11,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from magi_etl_spark.session import get_spark
 
-    s = get_spark(app_name="magi-etl-tests", driver_memory="8g")
+    s = get_spark(app_name="magi-etl-tests")
     yield s
     s.stop()
 

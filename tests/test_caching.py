@@ -1,4 +1,4 @@
-"""Operators persist their reuse intermediates (the dedup family)."""
+"""Operators materialize their reuse intermediates (the dedup family)."""
 
 from __future__ import annotations
 

@@ -1,15 +1,15 @@
-"""One materialization path: eager barriers go through
-``chkpt.materialize``.
+"""One materialization path: barriers go through ``chkpt.materialize``
+and are dropped by ``chkpt.release``.
 
 1. A guard over the package source: no module but ``chkpt.py`` may call
-   ``.localCheckpoint(`` or ``.checkpoint(`` directly — such a barrier
-   would ignore ``SPARK_GRAFT_CHECKPOINT_MODE``.  The raw ``.persist(``
-   and ``.cache(`` sites still outside ``chkpt.py`` are pinned by count
-   per module until they are routed too, so no new one can land.
+   ``.localCheckpoint(``, ``.checkpoint(``, ``.persist(``, ``.cache(``
+   or ``.unpersist(`` (barriers that ignore the mode, release bookkeeping
+   ``chkpt.release`` replaces), bar the streaming micro-batch pair.
 2. The fault-tolerant modes against the DuckDB oracles: one registered
-   query per operator module whose barriers were routed through
-   ``chkpt``, run under ``persist`` and ``reliable`` (the same query
-   under two session configs, compared with the oracle).
+   query per operator module whose barriers route through ``chkpt``,
+   run under ``persist`` and ``reliable`` (the same query under two
+   session configs, compared with the oracle).
+3. ``release`` leaves a frame the caller cached itself alone.
 """
 
 from __future__ import annotations
@@ -19,33 +19,22 @@ from pathlib import Path
 
 import pytest
 
+from pyspark.sql import functions as F
+
 import magi_etl_spark
+from magi_etl_spark import chkpt
 from magi_etl_spark.queries import ORACLE, QUERIES
 from tests.oracle_harness import compare, duckdb_connection
 
-_RAW_BARRIERS = {"localCheckpoint", "checkpoint", "persist", "cache"}
-# raw persists not yet routed through chkpt: module -> count (may only
-# shrink)
-_RAW_PERSISTS = {
-    "operators/bpe.py": 1,
-    "operators/chunking.py": 1,
-    "operators/components.py": 1,
-    "operators/coreset.py": 1,
-    "operators/decontaminate.py": 1,
-    "operators/dedup.py": 6,
-    "operators/graph.py": 3,
-    "operators/selection.py": 2,
-    "operators/similarity.py": 4,
-    "operators/text.py": 3,
-    "pipelines/wiki_metadata.py": 2,
-    "queries/advanced.py": 4,
-    "streaming/events_stream.py": 1,
-}
+_RAW_BARRIERS = {"localCheckpoint", "checkpoint", "persist", "cache", "unpersist"}
+# module -> raw sites allowed, for persist/cache and for unpersist: the
+# micro-batch pair that lives for one foreachBatch call
+_RAW_PERSISTS = {"streaming/events_stream.py": 1}
 
 
 def test_no_raw_barrier_outside_chkpt():
     root = Path(magi_etl_spark.__file__).parent
-    offenders, persists = [], {}
+    offenders, raw = [], {"persist": {}, "unpersist": {}}
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         if rel == "chkpt.py":
@@ -57,17 +46,16 @@ def test_no_raw_barrier_outside_chkpt():
                 and node.func.attr in _RAW_BARRIERS
             ):
                 continue
-            if node.func.attr in ("persist", "cache"):
-                persists[rel] = persists.get(rel, 0) + 1
+            kind = "persist" if node.func.attr == "cache" else node.func.attr
+            if kind in raw:
+                raw[kind][rel] = raw[kind].get(rel, 0) + 1
             else:
                 offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
     assert not offenders, (
         "raw barriers bypass chkpt.materialize: " + ", ".join(offenders)
     )
-    # a module above its pin gained a raw persist; one below it routed
-    # some: lower the pin
-    assert persists == _RAW_PERSISTS, (
-        f"raw .persist(/.cache( sites per module changed: {persists}"
+    assert raw == {"persist": _RAW_PERSISTS, "unpersist": _RAW_PERSISTS}, (
+        f"raw .persist(/.cache(/.unpersist( sites per module changed: {raw}"
     )
 
 
@@ -86,7 +74,19 @@ _MODE_QUERIES = [
     "q256_friedman_dow",  # friedman
     "q179_entity_resolution",  # components
     "q241_bh_fdr",  # prefix.ranked_prefix_sum
+    "q25_minhash_lsh_neardup",  # dedup
+    "q20_token_stats",  # text
+    "q41_ivf_topk",  # similarity
+    "q233_exact_quantiles",  # selection
+    "q220_kcenter_coreset",  # coreset
+    "q55_decontaminate",  # decontaminate
+    "q49_chunking",  # chunking
+    "q117_bpe_merges",  # bpe
 ]
+# q116 (graph) under reliable only: PageRank reads last round's ranks
+# twice, so under persist (lineage kept) its plan doubles per round
+_MODE_CASES = [(m, q) for m in ("persist", "reliable") for q in _MODE_QUERIES]
+_MODE_CASES.append(("reliable", "q116_pagerank"))
 
 
 @pytest.fixture(scope="module")
@@ -96,11 +96,8 @@ def con(sf_dir):
     c.close()
 
 
-@pytest.mark.parametrize("name", _MODE_QUERIES)
-@pytest.mark.parametrize("mode", ["persist", "reliable"])
+@pytest.mark.parametrize("mode,name", _MODE_CASES)
 def test_fault_tolerant_modes_match_oracle(mode, name, spark, sf_dir, con, tmp_path):
-    from magi_etl_spark import chkpt
-
     assert name in QUERIES and name in ORACLE
     if mode == "reliable":
         spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
@@ -110,6 +107,23 @@ def test_fault_tolerant_modes_match_oracle(mode, name, spark, sf_dir, con, tmp_p
         assert ok, f"{name} under {mode}: {msg}"
     finally:
         chkpt.set_checkpoint_mode(prev)
-        # persist mode registers cache entries by design; the suite's
-        # "cache manager stays empty" hygiene tests need a clean session
-        spark.catalog.clearCache()
+        # drops persist mode's cache entries (the cache-manager hygiene tests check it)
+        chkpt.release()
+
+
+@pytest.mark.parametrize("mode", ["local", "persist"])
+def test_release_keeps_frames_the_caller_cached(mode, spark):
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    chkpt.release()  # only this test's barriers are recorded
+    own = spark.range(50).withColumn("m", F.col("id") % 7).persist()
+    own.count()
+    own_rdds = set(rdds().keySet().toArray())
+    prev = chkpt.set_checkpoint_mode(mode)
+    try:
+        chkpt.materialize(own)  # persist: the caller's cache is the barrier
+        chkpt.materialize(own.groupBy("m").count()).collect()
+    finally:
+        chkpt.set_checkpoint_mode(prev)
+    chkpt.release()
+    assert set(rdds().keySet().toArray()) == own_rdds and own.count() == 50
+    own.unpersist()

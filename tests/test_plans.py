@@ -60,7 +60,9 @@ def test_blocked_neardup_spreads_join_input(spark, sf_dir):
     explicit width hint must force a round-robin spread to
     defaultParallelism — without it the pair scan pins to one core and
     the whole embedding-dedup family runs ~8x slower (observed at
-    sf0.1 when the hint was missing)."""
+    sf0.1 when the hint was missing).  Built under ``off`` mode, so the
+    exchange is not hidden inside the operator's ``chkpt`` barrier."""
+    from magi_etl_spark import chkpt
     from magi_etl_spark.operators.similarity import (
         blocked_neardup_pairs,
         srp_lsh_buckets,
@@ -71,7 +73,11 @@ def test_blocked_neardup_spreads_join_input(spark, sf_dir):
     em = load_table(spark, sf_dir, "embeddings")
     buckets = srp_lsh_buckets(em, seed_planes=_dedup_planes())
     blocked = em.join(buckets, "vec_id")
-    out = blocked_neardup_pairs(blocked, "bucket", threshold=0.95)
+    prev = chkpt.set_checkpoint_mode("off")
+    try:
+        out = blocked_neardup_pairs(blocked, "bucket", threshold=0.95)
+    finally:
+        chkpt.set_checkpoint_mode(prev)
     p = out._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in p, p[:2000]
 

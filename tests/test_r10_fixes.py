@@ -269,7 +269,6 @@ def test_ivf_kmeans_default_derives_n_lists(spark, sf_dir):
     n = em.count()
     assigned, centroids = ivf_index(em, seed=42)
     assert len(centroids) == auto_n_lists(n, floor=16)
-    assigned.unpersist()
 
 
 def test_ivf_sampled_default_derives_n_lists(spark, sf_dir):
@@ -286,4 +285,3 @@ def test_ivf_sampled_default_derives_n_lists(spark, sf_dir):
     assert assigned.select(F.countDistinct("list_id")).first()[0] <= len(
         centroids
     )
-    assigned.unpersist()

@@ -5,7 +5,7 @@ the robustness probe the round gates use:
 
     TZ=America/New_York python tools/driver_probe.py [--sf-dir DIR]
 
-Prints one PASS/FAIL line per query and a final summary line.
+Prints one PASS/FAIL line per query and a summary line (peak persistent RDDs).
 """
 
 from __future__ import annotations
@@ -47,6 +47,7 @@ def main() -> None:
     con = duckdb_connection(sf_dir)
     qs, osql = E.queries(), E.oracle_sql()
     fails: list[str] = []
+    peak_rdds = 0
     t0 = time.time()
     for name in qs:
         try:
@@ -56,12 +57,14 @@ def main() -> None:
                 ok, msg = qs[name](spark, sf_dir).count() >= 0, "rows-only"
         except Exception as e:  # noqa: BLE001 — a probe reports, never aborts
             ok, msg = False, f"err: {e}"
+        peak_rdds = max(peak_rdds, spark.sparkContext._jsc.getPersistentRDDs().size())
         print(("PASS " if ok else "FAIL ") + name + " " + str(msg), flush=True)
         if not ok:
             fails.append(name)
     print(
         f"SUMMARY {len(qs) - len(fails)}/{len(qs)} pass "
-        f"({time.time() - t0:.0f}s, sf_dir={sf_dir}, TZ={os.environ.get('TZ')})"
+        f"({time.time() - t0:.0f}s, sf_dir={sf_dir}, TZ={os.environ.get('TZ')}, "
+        f"peak persistent RDDs {peak_rdds})"
     )
     sys.exit(1 if fails else 0)
 

@@ -33,14 +33,6 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
-def _release(spark) -> None:
-    """Drop every cached table and persistent RDD the last query left,
-    so blocks do not pile up in the driver's heap across the registry."""
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-
-
 def _jvm_alive(spark) -> bool:
     from py4j.protocol import Py4JError
 
@@ -64,6 +56,7 @@ def main() -> None:
     from oracle_harness import compare, duckdb_connection
     from source_fingerprint import load_ledger, query_fingerprint, save_ledger
 
+    from magi_etl_spark.chkpt import release
     from magi_etl_spark.queries import ORACLE, QUERIES
     from magi_etl_spark.session import get_spark
 
@@ -76,9 +69,7 @@ def main() -> None:
     # taken before any query runs, from the sources this process imported
     fps = {n: query_fingerprint(QUERIES[n], ORACLE.get(n)) for n in todo}
 
-    # with the session default heap (24g) the JVM outgrew a 15 GB host at
-    # sf0.1 and was killed; bound it as the test suite does
-    spark = get_spark(app_name="magi-parity-sweep", driver_memory="8g")
+    spark = get_spark(app_name="magi-parity-sweep")
     con = duckdb_connection(sf_dir)
     fails: list[str] = []
     lost: str | None = None
@@ -90,14 +81,14 @@ def main() -> None:
                 ok, msg = fn(spark, sf_dir).count() >= 0, "rows-only"
             else:
                 ok, msg = compare(fn(spark, sf_dir), con, sql)
-            _release(spark)
+            release()
         except Exception as e:  # noqa: BLE001 — a sweep reports, never aborts
             if not _jvm_alive(spark):
                 lost = name
                 print(f"LOST JVM during {name}: {str(e)[:400]}", flush=True)
                 break
             ok, msg = False, f"err: {e}"
-            _release(spark)
+            release()
         ledger.setdefault(name, {})[scale] = {"fp": fps[name], "ok": ok}
         if not ok:
             fails.append(name)

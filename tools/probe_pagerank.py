@@ -1,6 +1,6 @@
 """Interleaved ABAB probe for the q116/q160 pagerank shapes (r16,
 VERDICT item 1): current barriers (materialized edges + out-degree)
-vs the pre-e39a37e lazy shape vs a persist-based middle shape.
+vs the pre-e39a37e lazy shape.
 
 Usage: python tools/probe_pagerank.py [n_rounds]
 
@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from magi_etl_spark.chkpt import materialize  # noqa: E402
+from magi_etl_spark.chkpt import materialize, release  # noqa: E402
 from magi_etl_spark.session import get_spark  # noqa: E402
 from magi_etl_spark.tables import load_table  # noqa: E402
 
@@ -30,20 +30,18 @@ def pagerank_v(
     damping: float = 0.85,
     iterations: int = 10,
     reset_vertices: DataFrame | None = None,
-    edge_mode: str = "ckpt",  # ckpt | lazy | persist
+    edge_mode: str = "ckpt",  # ckpt | lazy
     deg_mode: str = "ckpt",  # ckpt | lazy
     iter_times: list | None = None,
 ) -> DataFrame:
     e = edges.select(F.col("src"), F.col("dst"))
     if edge_mode == "ckpt":
         e = materialize(e)
-    elif edge_mode == "persist":
-        e = e.persist()
     vertices = (
         e.select(F.col("src").alias("v"))
         .union(e.select(F.col("dst").alias("v")))
         .distinct()
-        .persist()
+        .transform(materialize, eager=False)
     )
     n = vertices.count()
     if reset_vertices is None:
@@ -60,11 +58,11 @@ def pagerank_v(
             .otherwise(F.lit(0.0))
             .alias("_rp"),
         )
-    reset = reset.persist()
+    reset = materialize(reset, eager=False)
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     if deg_mode == "ckpt":
         out_deg = materialize(out_deg)
-    links = e.join(out_deg, "src").persist()
+    links = materialize(e.join(out_deg, "src"), eager=False)
     ranks = reset.select("v", F.col("_rp").alias("rank"))
     for _ in range(iterations):
         t0 = time.perf_counter()
@@ -95,9 +93,6 @@ def pagerank_v(
         )
         if iter_times is not None:
             iter_times.append(round(time.perf_counter() - t0, 3))
-    vertices.unpersist(blocking=False)
-    links.unpersist(blocking=False)
-    reset.unpersist(blocking=False)
     return ranks.select(F.col("v").alias("vertex"), "rank")
 
 
@@ -135,16 +130,9 @@ def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _isolate(spark):
-    spark.catalog.clearCache()
-    for _id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-        rdd.unpersist()
-
-
 ARMS = {
     "A_cur(ckpt,ckpt)": dict(edge_mode="ckpt", deg_mode="ckpt"),
     "B_old(lazy,lazy)": dict(edge_mode="lazy", deg_mode="lazy"),
-    "C_mid(persist,ckpt)": dict(edge_mode="persist", deg_mode="ckpt"),
 }
 
 
@@ -154,7 +142,7 @@ def main() -> None:
     spark = get_spark(app_name="pagerank-probe")
     # warm-up
     _noop(_q116(spark, sf_dir, **ARMS["A_cur(ckpt,ckpt)"]))
-    _isolate(spark)
+    release()
     walls: dict[str, dict[str, list[float]]] = {
         q: {a: [] for a in ARMS} for q in ("q116", "q160")
     }
@@ -166,7 +154,7 @@ def main() -> None:
                 _noop(fn(spark, sf_dir, **kw))
                 w = round(time.perf_counter() - t0, 3)
                 walls[qname][arm].append(w)
-                _isolate(spark)
+                release()
                 print(f"round {r} {qname} {arm}: {w}s", flush=True)
     print("\n=== summary (min / median) ===")
     for qname in walls:
@@ -185,7 +173,7 @@ def main() -> None:
             f"{arm}: total={round(time.perf_counter() - t0, 3)} iters={it}",
             flush=True,
         )
-        _isolate(spark)
+        release()
     spark.stop()
 
 

@@ -4,27 +4,14 @@ defect class: a lazy frame referenced by N downstream frames compiles
 to N copies of its subtree, re-scanning the corpus per reference —
 invisible at sf0.1 walls, a real multiplier at 100 TB).
 
-r15 upgrade: the r14 version counted ``"Scan parquet"`` substrings in
-the plan STRING, which over-reports persisted frames — every
-``InMemoryTableScan`` reference prints its ``InMemoryRelation``'s
-cached child plan (parquet scan included), but that child executes
-ONCE at cache fill, not per reference.  The audit now walks the live
-physical-plan TREE (descending through AQE/QueryStage wrappers;
-``InMemoryTableScanExec`` is a leaf, so cached-plan internals never
-count; ``ReusedExchange`` subtrees execute once and are skipped) and
-reports:
+The audit walks the live physical-plan TREE, not the plan string
+(descending through AQE/QueryStage wrappers; ``ReusedExchange``
+subtrees execute once and are skipped; a ``chkpt`` barrier is an RDD
+scan leaf, so the plan that filled it never counts) and reports:
 
 - ``live``  — FileSourceScan nodes that genuinely execute per plan run
   (the 100 TB multiplier; the number that must stay ~input-arity)
-- ``imts``  — cached-frame reads (cheap; the backing scan ran once)
-- ``ckpt``  — RDD-scan leaves from localCheckpoint barriers (ditto)
-
-Adjudicated r14 candidates (tree-walked at r15): q39_token_cosine_pairs
-(12 string-counted -> 0 live, 12 imts), q137_containment_pairs (28 -> 0
-live, 7 imts), q202_lsh_candidate_eval (32 -> 0 live, 6 imts) are
-BY DESIGN — their fan-out frames are persisted, so the string count was
-re-printing one cache fill.  q147/q157/q175 had REAL live fan-out and
-were fixed (chkpt barriers) in the same round.
+- ``ckpt``  — RDD-scan leaves of ``chkpt`` barriers (the backing scan ran once)
 
 Usage:
     python tools/scan_audit.py [--sf-dir DIR] [--top N] [--threshold K]
@@ -58,17 +45,15 @@ def _children(node):
 
 
 def count_plan_leaves(plan) -> dict[str, int]:
-    """{'live': n, 'imts': n, 'ckpt': n, 'exchanges': n} over the live
+    """{'live': n, 'ckpt': n, 'exchanges': n} over the live
     execution tree of a physical plan (see module docstring)."""
-    out = {"live": 0, "imts": 0, "ckpt": 0, "exchanges": 0}
+    out = {"live": 0, "ckpt": 0, "exchanges": 0}
     stack = [plan]
     while stack:
         node = stack.pop()
         cn = node.getClass().getSimpleName()
         if "FileSourceScan" in cn:
             out["live"] += 1
-        elif "InMemoryTableScan" in cn:
-            out["imts"] += 1
         elif cn in ("RDDScanExec", "ExternalRDDScanExec"):
             out["ckpt"] += 1
         elif "Exchange" in cn and "Reused" not in cn:
@@ -102,17 +87,12 @@ def main() -> None:
         except Exception as e:  # report, keep auditing
             print(f"ERR {name}: {e}", file=sys.stderr)
             continue
-        rows.append(
-            (c["live"], c["imts"], c["ckpt"], c["exchanges"], name)
-        )
+        rows.append((c["live"], c["ckpt"], c["exchanges"], name))
     rows.sort(reverse=True)
-    for live, imts, ckpt, ex, name in rows[:top]:
-        print(
-            f"{live:3d} live {imts:3d} imts {ckpt:3d} ckpt "
-            f"{ex:3d} exchanges  {name}"
-        )
+    for live, ckpt, ex, name in rows[:top]:
+        print(f"{live:3d} live {ckpt:3d} ckpt {ex:3d} exchanges  {name}")
     if threshold is not None:
-        over = [r[4] for r in rows if r[0] > threshold]
+        over = [r[3] for r in rows if r[0] > threshold]
         if over:
             print(f"OVER THRESHOLD ({threshold}): {over}", file=sys.stderr)
             sys.exit(1)
