@@ -166,9 +166,22 @@ def _sort_unordered_lists(s: str) -> str:
 def canonical_plan(plan: str) -> str:
     """The canonical string :func:`plan_fingerprint` hashes: ``plan`` (a
     physical plan's ``toString()``) with run-specific details stripped,
-    the synthetic ``gid`` values masked and unordered lists sorted."""
+    the synthetic ``gid`` values masked and unordered lists sorted.
+
+    Two renderings depend on the session's history, not on the plan:
+    PySpark names lambda variables ``x_<n>`` from a JVM-wide counter, so
+    the suffix is dropped; and Spark cuts a long ``DataFilters`` list at
+    a fixed length before the ``#id`` digits are stripped, so where it is
+    cut moves with the id width.  A cut list becomes one token (the
+    ``Filter`` above the scan keeps the full condition; ``PushedFilters``
+    carries no ids)."""
     s = _canon_v1(plan)
     s = re.sub(r"\(gid# = \d+L?\)", "(gid# = <g>)", s)
+    s = re.sub(r"\blambda (\w+)_\d+\b", r"lambda \1_", s)
+    s = re.sub(
+        r"DataFilters: \[(?:(?!\], [A-Z]\w*: ).)*?\.\.\.(?=, [A-Z]\w*: )",
+        "DataFilters: <cut>", s,
+    )
     return _sort_unordered_lists(s)
 
 

@@ -19,6 +19,7 @@ r10 ADVICE items, each pinned here:
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 from pyspark.sql import functions as F
 
@@ -195,16 +196,32 @@ def test_weighted_quantiles_threshold_survives_huge_weights(spark):
     assert got == {0.5: 2}
 
 
-def test_plan_fingerprint_still_stable_on_distinct_rewrite_queries(spark):
+def _one_digit_wider(plan: str) -> str:
+    """``plan`` as Spark renders it once every expression id has one more
+    digit, as later in a long session: Spark keeps the first 97
+    characters of a long ``DataFilters`` list and appends "...", so a
+    cut list is cut again at the same length."""
+    wide = re.sub(r"#(\d)", r"#1\1", plan)
+    return re.sub(
+        r"(DataFilters: )(\[[^\n]*?)\.\.\.(?=, Format: )",
+        lambda m: m.group(1) + m.group(2)[:97] + "...",
+        wide,
+    )
+
+
+def test_plan_fingerprint_still_stable_on_distinct_rewrite_queries(spark, sf_dir):
     """The two queries whose v1 hashes were compile-order coin flips
     (r10 finding: q184 4-of-4 distinct, q208 2-of-6) must stay stable
-    under v3, which no longer strips digits globally."""
-    from magi_etl_spark.plans import plan_fingerprint
+    under v3, which no longer strips digits globally.  q40 names its
+    lambda variables from a JVM-wide counter and has a cut DataFilters
+    list, so every build renders both anew; q02's cut list must hash
+    alike at a wider expression-id width."""
+    from magi_etl_spark.plans import _physical, plan_fingerprint
     from magi_etl_spark.queries import QUERIES
 
-    for qn in ["q184_active_user_stickiness", "q208_chi_square"]:
-        fps = {
-            plan_fingerprint(QUERIES[qn](spark, "/root/testdata/sf0.001"))
-            for _ in range(6)
-        }
+    for qn in ["q184_active_user_stickiness", "q208_chi_square", "q40_corpus_pipeline"]:
+        fps = {plan_fingerprint(QUERIES[qn](spark, sf_dir)) for _ in range(6)}
         assert len(fps) == 1, f"{qn} fingerprint flaky under v3: {fps}"
+    plan = _physical(QUERIES["q02_filter_project"](spark, sf_dir))
+    assert "..., Format: " in plan, "q02's DataFilters list is no longer cut"
+    assert plan_fingerprint(None, plan) == plan_fingerprint(None, _one_digit_wider(plan))

@@ -1,2381 +1,164 @@
-"""Scale probe: run the shuffle-heavy operator families at Nx the bench
-scale and report the runtime ratio vs 1x.
+"""Scale report: every registered query at 1x and at Nx of a catalog.
 
-The bench tables are small enough that fixed job overhead dominates; this
-probe is the evidence that the PLANS scale — runtime should grow roughly
-linearly with input for the LSH/dedup/text family (banded joins, map-side
-combined aggs) rather than quadratically (all-pairs) or worse (driver
-loops).  Data is synthesized by unioning the sf0.1 tables against
-themselves with shifted ids, which preserves value distributions (and for
-documents keeps duplicate families duplicated, so dedup has real work at
-every scale).
+The engine's plans must show that they scale.  This report runs each
+registered query, in registration order, on the catalog at ``--sf-dir``
+and on an ``N``-fold id-shifted copy of it (:func:`replicate`), and
+reports per query the median wall of each side with its min-max, the
+wall ratio Nx/1x and the output-rows ratio Nx/1x.  A plan that scales
+with its output keeps the wall ratio at or below the rows ratio; the
+wall ratio divided by the rows ratio is the cost-per-output-row growth
+(for the pair families, the cost per produced pair).
 
-Usage: python tools/scale_probe.py [N] [--only fam1,fam2]   (default 8)
-Writes one JSON line: {"probe": ..., "scale": N, "timings": {...}}
-``--only`` restricts to the named families.  Four families are
-deliberately quadratic under wholesale replication and are excluded
-from the 32x sweep (run them at 8x with output-size accounting, see
-COVERAGE.md): embedding_neardup and containment (every copy duplicates
-every shingle/vector family), image_phash (copies saturate the 16-bit
-hash space), fs_linkage (block occupancy grows n, so candidate pairs
-grow n^2).
+Per query: one untimed warm-up at 1x (a cold first build compiles its
+generated classes), then ``RUNS`` timed runs per side, interleaving 1x
+and Nx, each written to the ``noop`` sink and followed by
+``chkpt.release()``; the output rows are counted once per side, off the
+clock.  Parity at larger scale stays ``tools/parity_sweep.py``'s job.
+
+Usage (from the repo root, so the Python workers import the UDF
+queries' modules):
+    python tools/scale_probe.py [N] [--sf-dir DIR] [--only qA,qB,...]
+
+``N`` defaults to 8 and ``DIR`` to the sf0.01 test catalog; ``--only``
+keeps the queries whose name equals or starts with one of the entries.
+One stderr line per query; the last stdout line is one JSON object.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
+import tempfile
 import time
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, functions as F  # noqa: E402
+from magi_etl_spark.chkpt import release  # noqa: E402
 
-from magi_etl_spark.session import get_spark  # noqa: E402
-from magi_etl_spark.tables import load_table  # noqa: E402
+STRIDE = 10_000_000  # id shift between copies, above every key of sf0.1
+# key domain -> the (table, column) pairs holding it; a copy shifts every
+# column of a domain alike, so each join matches within its own copy
+KEY_DOMAINS = {
+    "orderkey": (("orders", "o_orderkey"), ("lineitem", "l_orderkey")),
+    "custkey": (("customer", "c_custkey"), ("orders", "o_custkey")),
+    "partkey": (("part", "p_partkey"), ("lineitem", "l_partkey")),
+    "suppkey": (("supplier", "s_suppkey"), ("lineitem", "l_suppkey")),
+    "event_id": (("events", "event_id"),),
+    "user_id": (("events", "user_id"),),
+    "doc_id": (("documents", "doc_id"),),
+    "vec_id": (("embeddings", "vec_id"),),
+}
+RUNS = 3  # timed runs per side
 
 
-def replicate(df: DataFrame, id_cols: list[str], n: int, stride: int) -> DataFrame:
-    """n shifted copies of ``df``: copy k adds ``k * stride`` to every id
-    column, keeping join relationships intact within each copy."""
-    copies = F.explode(F.array(*[F.lit(k) for k in range(n)])).alias("_k")
-    rep = df.select("*", copies)
-    for c in id_cols:
-        rep = rep.withColumn(c, F.col(c) + F.col("_k").cast("long") * stride)
-    return rep.drop("_k")
+def replicate(src_dir: str, out_dir: str, n: int) -> None:
+    """Write ``n`` id-shifted copies of every table of ``src_dir`` that
+    holds a key column to ``out_dir``; a table with none (``region``,
+    ``nation``) is copied once.  The parquet schema is the source's, so
+    ``load_table`` reads the copy unchanged."""
+    shifted: dict[str, set[str]] = {}
+    for pairs in KEY_DOMAINS.values():
+        for table, col in pairs:
+            shifted.setdefault(table, set()).add(col)
+    os.makedirs(out_dir, exist_ok=True)
+    for fname in sorted(os.listdir(src_dir)):
+        if not fname.endswith(".parquet"):
+            continue
+        base = pq.read_table(os.path.join(src_dir, fname))
+        keys = shifted.get(fname[: -len(".parquet")], set())
+        copies = [base] if not keys else [
+            pa.Table.from_arrays([
+                pc.add(base[c], pa.scalar(k * STRIDE, base[c].type))
+                if c in keys else base[c]
+                for c in base.column_names
+            ], schema=base.schema)
+            for k in range(n)
+        ]
+        pq.write_table(pa.concat_tables(copies), os.path.join(out_dir, fname))
 
 
-def timed(label: str, fn, timings: dict) -> None:
+def _once(spark, fn, sf_dir: str, count: bool = False) -> float | int:
+    """Build ``fn`` on ``sf_dir`` and run it: its row count, or the wall
+    of construction plus the ``noop`` sink.  Releases its barriers."""
     t0 = time.perf_counter()
-    fn().write.format("noop").mode("overwrite").save()
-    timings[label] = round(time.perf_counter() - t0, 3)
-    print(f"# {label}: {timings[label]:.3f}s", file=sys.stderr)
+    try:
+        df = fn(spark, sf_dir)
+        if count:
+            return df.count()
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+    finally:
+        release()
+
+
+def measure(spark, fn, one: str, big: str) -> dict:
+    """The per-query row of the report (see the module docstring)."""
+    _once(spark, fn, one)  # warm-up
+    walls: dict[str, list[float]] = {one: [], big: []}
+    for _ in range(RUNS):
+        for d in (one, big):
+            walls[d].append(_once(spark, fn, d))
+    rows = {d: _once(spark, fn, d, count=True) for d in (one, big)}
+    med = {d: statistics.median(ws) for d, ws in walls.items()}
+    return {
+        "wall_1x_s": round(med[one], 3),
+        "range_1x_s": [round(min(walls[one]), 3), round(max(walls[one]), 3)],
+        "wall_nx_s": round(med[big], 3),
+        "range_nx_s": [round(min(walls[big]), 3), round(max(walls[big]), 3)],
+        "rows_1x": rows[one],
+        "rows_nx": rows[big],
+        "wall_ratio": round(med[big] / med[one], 2),
+        "rows_ratio": round(rows[big] / rows[one], 2) if rows[one] else None,
+    }
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    only: set[str] | None = None
-    for a in sys.argv[1:]:
-        if a.startswith("--only"):
-            only = set(a.split("=", 1)[1].split(",")) if "=" in a else set(
-                sys.argv[sys.argv.index(a) + 1].split(",")
-            )
-    n = int(args[0]) if args else 8
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="magi-scale-probe")
-
-    docs1 = load_table(spark, sf, "documents")
-    events1 = load_table(spark, sf, "events")
-    emb1 = load_table(spark, sf, "embeddings")
-    docsN = replicate(docs1, ["doc_id"], n, 10_000_000).persist()
-    eventsN = replicate(events1, ["event_id", "user_id"], n, 10_000_000).persist()
-    embN = replicate(emb1, ["vec_id"], n, 10_000_000).persist()
-    print(
-        f"# docs {docs1.count()} -> {docsN.count()}, "
-        f"events {events1.count()} -> {eventsN.count()}, "
-        f"embeddings {emb1.count()} -> {embN.count()}",
-        file=sys.stderr,
-    )
-
-    from magi_etl_spark.operators import dedup as D
-    from magi_etl_spark.operators.components import connected_components
-    from magi_etl_spark.operators.skew import key_skew_profile
-
-    def lsh(d):
-        return lambda: D.minhash_lsh_dedup(
-            d, "doc_id", "text", n=3, n_hashes=4, band_size=2, threshold=0.5
-        )
-
-    def clusters(d):
-        def run():
-            pairs = D.minhash_lsh_dedup(
-                d, "doc_id", "text", n=3, n_hashes=4, band_size=2, threshold=0.5
-            ).select("doc_a", "doc_b")
-            return connected_components(pairs)
-
-        return run
-
-    def funnel(e):
-        def run():
-            first = lambda t: F.min(  # noqa: E731
-                F.when(F.col("event_type") == t, F.unix_micros("ts"))
-            )
-            stages = e.groupBy("user_id").agg(
-                first("signup").alias("s"),
-                first("click").alias("c"),
-                first("purchase").alias("p"),
-            )
-            stage = (
-                F.when(F.col("s").isNull(), 0)
-                .when(F.col("c").isNull() | (F.col("c") <= F.col("s")), 1)
-                .when(F.col("p").isNull() | (F.col("p") <= F.col("c")), 2)
-                .otherwise(3)
-            )
-            return (
-                stages.select(stage.alias("stage"))
-                .groupBy("stage")
-                .agg(F.count("*").alias("users"))
-            )
-
-        return run
-
-    def skew(e):
-        return lambda: key_skew_profile(e, ["user_id"], top_k=20)
-
-    def emb_neardup(em):
-        from magi_etl_spark.operators.similarity import (
-            blocked_neardup_pairs,
-            srp_lsh_buckets,
-        )
-        from magi_etl_spark.queries.similarity import _dedup_planes
-
-        # replicated copies are exact duplicates of each other, so the
-        # blocked pair space grows quadratically in n WITHIN each bucket —
-        # the probe shows salting+blocking keeps even that contained
-        def run():
-            buckets = srp_lsh_buckets(em, seed_planes=_dedup_planes())
-            blocked = em.join(buckets, "vec_id")
-            return blocked_neardup_pairs(blocked, "bucket", threshold=0.95)
-
-        return run
-
-    # --- r4 operator extensions (pytest-only; queued for the r5 gate) ----
-    from magi_etl_spark.operators.joins import (
-        fuzzy_join,
-        prefix_block,
-        salted_join,
-        sorted_neighborhood_pairs,
-    )
-    from magi_etl_spark.operators.sampling import temperature_mix
-    from magi_etl_spark.operators.stats import winsorize
-
-    def snm(d):
-        # sort on a 24-char prefix: candidate budget is exactly N*window
-        return lambda: sorted_neighborhood_pairs(
-            d, "doc_id", F.substring("text", 1, 24), window=4
-        )
-
-    def tmix(d):
-        src = d.withColumn("_src", (F.col("doc_id") % 7).cast("string"))
-        return lambda: temperature_mix(src, "_src", "doc_id", alpha=0.3)
-
-    def winz(e):
-        # approx bounds are the 100 TB mode (exact buffers a per-group sort)
-        return lambda: winsorize(
-            e, ["event_type"], "value", 0.01, 0.99, approx=True
-        )
-
-    def salted(e):
-        # event_type is 5 keys over millions of rows — every key is hot;
-        # the salt spreads each over 32 partitions
-        dim = e.select("event_type").distinct().withColumn(
-            "type_wgt", F.length("event_type").cast("double")
-        )
-        def run():
-            j = salted_join(e, dim, ["event_type"], salt_buckets=32)
-            return j.groupBy("event_type").agg(
-                F.count("*").alias("n"), F.sum("type_wgt").alias("w")
-            )
-        return run
-
-    part1 = load_table(spark, sf, "part")
-
-    def semdedup(em):
-        from magi_etl_spark.operators.similarity import semantic_dedup
-
-        # same worst-case caveat as embedding_neardup: replicated copies
-        # are exact duplicates, so within-list pair count grows n^2 per
-        # family — the salted block join + small components absorb it
-        return lambda: semantic_dedup(em, threshold=0.98, n_lists=8, seed=7)
-
-    def pq(em):
-        from magi_etl_spark.operators.pq import pq_encode, pq_train
-
-        # train is a bounded driver-side sample (size-invariant); encode
-        # is the scan-wide pandas-UDF pass being probed
-        def run():
-            books = pq_train(em, m=16, k=16, seed=7)
-            return pq_encode(em, books)
-
-        return run
-
-    def paradedup(d):
-        from magi_etl_spark.operators.text import paragraph_dedup
-
-        # replication makes every paragraph cross-document boilerplate,
-        # so the rebuild emits empty texts — the full explode/aggregate/
-        # join/rebuild path still runs at the replicated scale
-        def run():
-            d2 = d.withColumn(
-                "text",
-                F.when(
-                    F.col("doc_id") % 3 == 0,
-                    F.concat(
-                        F.col("text"),
-                        F.lit("\n\nSubscribe to our newsletter today!"),
-                    ),
-                ).otherwise(F.col("text")),
-            )
-            return paragraph_dedup(d2, "doc_id", "text")
-
-        return run
-
-    def unigram(d):
-        from magi_etl_spark.operators.text import unigram_logprob_scores
-
-        return lambda: unigram_logprob_scores(d, "doc_id", "text")
-
-    def tfidf(d):
-        from magi_etl_spark.operators.ranking import tfidf_keywords
-
-        return lambda: tfidf_keywords(d, k=5)
-
-    def curation(d):
-        from magi_etl_spark.pipelines.curation import curate_corpus
-
-        # end-to-end flagship DAG; replication multiplies every LSH
-        # family (same worst-case caveat as the dedup probes)
-        def run():
-            curated, _report = curate_corpus(
-                d, min_tokens=5, min_quality=0.3, near_dup_threshold=0.5
-            )
-            return curated.select("doc_id", "split")
-
-        return run
-
-    def bpe(d):
-        from magi_etl_spark.operators.bpe import bpe_train
-
-        # merge loop cost rides the WORD VOCABULARY, not the corpus —
-        # replication multiplies word frequencies but adds few new
-        # words, so runtime should be nearly flat in N (the corpus-scan
-        # word-count pass is the only linear term)
-        return lambda: bpe_train(d, n_merges=5)
-
-    def bigram(d):
-        from magi_etl_spark.operators.ngram_lm import bigram_logprob_scores
-
-        return lambda: bigram_logprob_scores(d, "doc_id", "text")
-
-    def ngrams(d):
-        from magi_etl_spark.operators.ngram_lm import top_ngrams
-
-        return lambda: top_ngrams(d, n=3, k=25)
-
-    def oot(e):
-        from magi_etl_spark.operators.splits import out_of_time_split
-
-        def run():
-            s = out_of_time_split(e, ["user_id"], "ts", "event_id", 80)
-            return s.groupBy("user_id", "split").agg(F.count("*").alias("n"))
-
-        return run
-
-    def dsir(d):
-        from magi_etl_spark.operators.importance import dsir_scores
-
-        return lambda: dsir_scores(d, d.where(F.col("lang") == "en"))
-
-    def novelty(d):
-        from magi_etl_spark.operators.importance import ngram_novelty
-
-        # replication makes every gram cross-copy duplicated (df >= N),
-        # so novel_frac collapses to 0 — the full distinct/df/rollup
-        # path still runs at the replicated scale
-        return lambda: ngram_novelty(d, n=3)
-
-    def png_pipeline(d):
-        from magi_etl_spark.operators.multimodal import (
-            extract_features,
-            synthesize_test_images,
-        )
-
-        return lambda: extract_features(
-            synthesize_test_images(d.select("doc_id")), on_error="raise"
-        )
-
-    def merge(e):
-        from magi_etl_spark.operators.merge import merge_into
-
-        def run():
-            base = e.select("event_id", "user_id", "event_type", "value")
-            src = base.where(F.col("event_id") % 3 == 0).select(
-                "event_id",
-                "user_id",
-                F.lit("merged").alias("event_type"),
-                (F.col("value") + 1).alias("value"),
-                (F.col("event_id") % 5 == 0).alias("_del"),
-            )
-            return merge_into(base, src, ["event_id"], delete_col="_del")
-
-        return run
-
-    def spans(d):
-        from magi_etl_spark.operators.importance import duplicated_spans
-
-        # replication duplicates every shingle across copies (df >= N),
-        # so every position flags dup and the gaps-and-islands window
-        # runs over maximal runs — the worst-case span workload
-        return lambda: duplicated_spans(d, n=5)
-
-    def wsample(d):
-        from magi_etl_spark.operators.sampling import weighted_sample_n_per_group
-
-        # group count is FIXED (languages); per-group rows grow Nx, the
-        # honest axis for a per-group top-n window
-        return lambda: weighted_sample_n_per_group(
-            d.select("doc_id", "lang", "n_chars"),
-            ["lang"],
-            "n_chars",
-            n=5,
-            id_col="doc_id",
-            seed="wsample",
-        )
-
-    def tokpack(d):
-        from magi_etl_spark.operators.bpe import bpe_encode_docs
-        from magi_etl_spark.operators.packing import pack_chunks
-
-        # the q132 capstone end to end: train rides the (replication-
-        # invariant) word vocabulary, encode/pack ride the corpus
-        def run():
-            enc = bpe_encode_docs(d, n_merges=10).select(
-                "doc_id",
-                F.lit(0).alias("chunk_idx"),
-                F.col("n_tokens").cast("int").alias("n_chunk_tokens"),
-            )
-            return pack_chunks(
-                enc, budget=2048, n_buckets=16, bucket_expr=F.col("doc_id") % 16
-            )
-
-        return run
-
-    def lshidx(d):
-        # INCREMENTAL axis: the increment is FIXED (the x1 docs slice)
-        # while the on-disk index history grows Nx — the ratio measures
-        # how the daily-increment pass degrades with corpus history,
-        # which the design says should be far sub-linear (only the
-        # band join touches history, and only in matching buckets).
-        # The index build itself is setup, not the timed pass.
-        import tempfile
-
-        from magi_etl_spark.operators.lsh_index import (
-            build_lsh_index,
-            incremental_lsh_pairs,
-        )
-
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="magi_probe_lshidx_"), "idx"
-        )
-        build_lsh_index(d.where(F.col("doc_id") % 10 != 0), path)
-        inc = docs1.where(F.col("doc_id") % 10 == 0).withColumn(
-            "doc_id", F.col("doc_id") + 99_000_000
-        )
-        return lambda: incremental_lsh_pairs(inc, path)
-
-    def fuzzy(p):
-        # linkage shape: N part rows against a FIXED 64-name dictionary —
-        # candidates grow linearly with the big side
-        names = part1.select(F.col("p_name").alias("dict_name")).distinct()
-        def run():
-            j = fuzzy_join(
-                p.select("p_partkey", "p_name"),
-                names,
-                prefix_block("p_name", 4),
-                prefix_block("dict_name", 4),
-                "p_name",
-                "dict_name",
-                max_distance=3,
-            )
-            return j.groupBy("dict_name").agg(F.count("*").alias("n"))
-        return run
-
-    partN_op = replicate(part1, ["p_partkey"], n, 10_000_000)
-
-    # --- r6 wave: sketches / containment / curriculum / hard negatives ---
-    def kmv(e):
-        from magi_etl_spark.operators.sketches import kmv_distinct
-
-        return lambda: kmv_distinct(e, ["event_type"], "user_id", k=64)
-
-    def hll(e):
-        from magi_etl_spark.operators.sketches import hll_distinct
-
-        return lambda: hll_distinct(e, ["event_type"], "user_id")
-
-    def cms(d):
-        from magi_etl_spark.operators.sketches import cms_counts
-
-        def run():
-            words = (
-                d.select(F.explode(F.split("text", r"\s+")).alias("w"))
-                .groupBy("w")
-                .agg(F.count("*").alias("n"))
-            )
-            return cms_counts(words, "w", "n")
-
-        return run
-
-    def containment(d):
-        from magi_etl_spark.operators.dedup import containment_pairs
-
-        # same wholesale-replication caveat as embedding_neardup: every
-        # copy's shingle set is identical, so cross-copy pairs grow n^2
-        # per duplicate family — exclude at 32x like the other
-        # deliberately-quadratic stressors
-        return lambda: containment_pairs(
-            d, "doc_id", "text", n=3, threshold=0.4, max_doc_freq=0.01
-        )
-
-    def curriculum(d):
-        from magi_etl_spark.operators.mixing import curriculum_order
-
-        return lambda: curriculum_order(
-            d.where(F.col("n_chars").isNotNull()).select(
-                "doc_id", "lang", "n_chars"
-            ),
-            F.least(F.floor(F.col("n_chars") / 500), F.lit(9)),
-            "doc_id",
-        )
-
-    def hardneg(em):
-        from magi_etl_spark.operators.similarity import hard_negatives
-
-        # fixed broadcast query side, one map-side scoring scan
-        return lambda: hard_negatives(
-            em, emb1.where(F.col("vec_id") < 3), lo=0.2, hi=0.3, k=5
-        )
-
-    # --- behavior / drift / association / projection wave ---------------
-    from magi_etl_spark.operators.behavior import (
-        cohort_retention,
-        funnel_stages,
-        markov_transitions,
-        rfm_segments,
-    )
-
-    def funnel_op(e):
-        # the real q139 operator (the older "funnel" family is the
-        # conditional-agg paraphrase kept for history comparability)
-        return lambda: funnel_stages(
-            e, ["view", "click", "purchase"], max_gap_s=43200
-        )
-
-    def cohort(e):
-        return lambda: cohort_retention(e, max_offset=4)
-
-    def markov(e):
-        # per-user window: replication grows USER COUNT, per-user state
-        # fixed — the honest axis for a keyed sequence window
-        return lambda: markov_transitions(e)
-
-    def psi(e):
-        from magi_etl_spark.operators.drift import psi_drift
-
-        return lambda: psi_drift(e, split_ts="2024-01-16")
-
-    def rproj(em):
-        from magi_etl_spark.operators.projection import random_projection
-
-        return lambda: random_projection(em, "embedding", out_dim=8).select(
-            "vec_id", *[f"p{j}" for j in range(8)]
-        )
-
-    lineitem1 = load_table(spark, sf, "lineitem")
-    lineitemN = replicate(lineitem1, ["l_orderkey"], n, 10_000_000)
-    orders_b = load_table(spark, sf, "orders")
-    ordersN_b = replicate(orders_b, ["o_orderkey", "o_custkey"], n, 10_000_000)
-
-    def copurchase(li):
-        from magi_etl_spark.operators.association import copurchase_pairs
-
-        # basket ids shift per copy, so baskets (and pairs) grow
-        # linearly — pair enumeration stays within-basket by key
-        return lambda: copurchase_pairs(li, min_co=2)
-
-    def mad(o):
-        from magi_etl_spark.operators.drift import mad_outliers
-
-        def run():
-            daily = o.groupBy(
-                F.date_trunc("day", "o_orderdate").cast("date").alias("day")
-            ).agg(F.sum("o_totalprice").alias("rev"))
-            return mad_outliers(daily, ["day"], "rev")
-
-        return run
-
-    def rfm(o):
-        # custkey shifts per copy: GROUP COUNT grows, per-group fixed
-        return lambda: rfm_segments(o)
-
-    def triangles(li):
-        from magi_etl_spark.operators.graph import triangle_count
-
-        # basket ids shift per copy: the co-purchase graph is n disjoint
-        # copies — edges, wedges, and triangles all grow linearly
-        def run():
-            baskets = li.select(
-                F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-            ).distinct()
-            a = baskets.select("bk", F.col("it").alias("u"))
-            b = baskets.select("bk", F.col("it").alias("v"))
-            edges = (
-                a.join(b, "bk")
-                .filter(F.col("u") < F.col("v"))
-                .groupBy("u", "v")
-                .agg(F.count("*").alias("_n"))
-                .filter(F.col("_n") >= 2)
-                .select("u", "v")
-            )
-            return triangle_count(edges, "u", "v")
-
-        return run
-
-    def attribution(e):
-        from magi_etl_spark.operators.behavior import last_touch_attribution
-
-        return lambda: last_touch_attribution(
-            e, ["view", "click"], "purchase", lookback_s=604800
-        )
-
-    def kmv_overlap(e):
-        from magi_etl_spark.operators.sketches import kmv_set_overlap
-
-        return lambda: kmv_set_overlap(
-            e, "event_type", "user_id", "view", "purchase"
-        )
-
-    def ols(o):
-        from magi_etl_spark.operators.stats import group_ols_trend
-
-        def run():
-            daily = o.groupBy(
-                "o_orderpriority",
-                F.date_trunc("day", "o_orderdate").cast("date").alias("_day"),
-            ).agg(F.round(F.sum("o_totalprice"), 2).alias("y"))
-            daily = daily.withColumn(
-                "x",
-                F.datediff(
-                    "_day", F.lit("1995-01-01").cast("date")
-                ).cast("double"),
-            )
-            return group_ols_trend(daily, ["o_orderpriority"], "x", "y")
-
-        return run
-
-    def ab(e):
-        from magi_etl_spark.operators.stats import ab_assign_and_compare
-
-        def run():
-            units = e.groupBy("user_id").agg(
-                F.max(
-                    (F.col("event_type") == "purchase").cast("long")
-                ).alias("converted")
-            )
-            return ab_assign_and_compare(
-                units, "user_id", F.col("converted") == 1
-            )
-
-        return run
-
-    def benford(o):
-        from magi_etl_spark.operators.drift import benford_deviation
-
-        return lambda: benford_deviation(
-            o, ["o_orderpriority"], "o_totalprice"
-        )
-
-    def mutinfo(e):
-        from magi_etl_spark.operators.stats import mutual_information
-
-        return lambda: mutual_information(e, "event_type", F.hour("ts"))
-
-    def hhi(o):
-        from magi_etl_spark.operators.stats import concentration
-
-        # per-customer pre-aggregate bounds the ranked frame; custkey
-        # shifts per copy so keys (and the window's groups' state) grow
-        # linearly
-        def run():
-            per = o.groupBy(
-                F.lit("all").alias("seg"), "o_custkey"
-            ).agg(F.round(F.sum("o_totalprice"), 2).alias("v"))
-            return concentration(per, ["seg"], "o_custkey", "v", top_k=4)
-
-        return run
-
-    cust1 = load_table(spark, sf, "customer")
-    custN = replicate(cust1, ["c_custkey"], n, 10_000_000)
-
-    def ppr_probe(o, li):
-        from magi_etl_spark.operators.graph import pagerank
-
-        # orders replicate (custkeys shift), lineitem side stays x1:
-        # the graph gains vertices linearly; 3 iterations bound the
-        # probe (per-iteration cost is the measured axis)
-        def run():
-            edges = o.select("o_orderkey", "o_custkey").join(
-                li.select("l_orderkey", "l_suppkey"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            ).select(
-                F.col("o_custkey").alias("src"),
-                (F.col("l_suppkey") + 900_000_000).alias("dst"),
-            )
-            seeds = edges.select(F.col("src").alias("v")).distinct().where(
-                F.col("v") % 50 == 0
-            )
-            return pagerank(
-                edges, iterations=3, reset_vertices=seeds
-            )
-
-        return run
-
-    def fs_probe(c):
-        from magi_etl_spark.operators.linkage import fs_linkage_score
-
-        # (nation, segment) blocks: replication multiplies block
-        # OCCUPANCY, so candidate pairs grow ~n^2 per block — the
-        # honest axis is the pure-map scoring cost per candidate, and
-        # the caveat is the blocking key's selectivity, as with every
-        # blocked-linkage family
-        def run():
-            a = c.select(
-                F.col("c_custkey").alias("id_a"),
-                F.col("c_nationkey").alias("_nk"),
-                F.col("c_mktsegment").alias("_seg"),
-                F.col("c_acctbal").alias("_ba"),
-            )
-            b = c.select(
-                F.col("c_custkey").alias("id_b"),
-                F.col("c_nationkey").alias("_nk"),
-                F.col("c_mktsegment").alias("_seg"),
-                F.col("c_acctbal").alias("_bb"),
-            )
-            pairs = (
-                a.join(b, ["_nk", "_seg"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select(
-                    "id_a",
-                    "id_b",
-                    (F.abs(F.col("_ba") - F.col("_bb")) <= 50.0).alias(
-                        "agree_close"
-                    ),
-                    ((F.col("_ba") >= 0) == (F.col("_bb") >= 0)).alias(
-                        "agree_sign"
-                    ),
-                )
-            )
-            return fs_linkage_score(
-                pairs, {"agree_close": (0.95, 0.05), "agree_sign": (0.8, 0.3)}
-            ).where(F.col("fs_score") >= 2.0)
-
-        return run
-
-    def seasonality(o):
-        from magi_etl_spark.operators.timeseries import dow_seasonal_index
-
-        def run():
-            daily = o.groupBy(
-                "o_orderpriority",
-                F.date_trunc("day", "o_orderdate").cast("date").alias("day"),
-            ).agg(F.round(F.sum("o_totalprice"), 2).alias("y"))
-            return dow_seasonal_index(daily, ["o_orderpriority"], "day", "y")
-
-        return run
-
-    def corrmat(li):
-        from magi_etl_spark.operators.stats import correlation_matrix
-
-        return lambda: correlation_matrix(
-            li,
-            ["l_returnflag"],
-            ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-        )
-
-    def phash(d):
-        from magi_etl_spark.operators.multimodal import (
-            average_hash,
-            phash_near_dup_pairs,
-            synthesize_test_images,
-        )
-
-        # real encode+decode per row (Arrow-batched map); the banded
-        # pair join rides the hash table.  Replication caveat: copies
-        # share the 16-bit hash space, so pair families grow with the
-        # square of bucket occupancy — the banding contains it
-        def run():
-            imgs = synthesize_test_images(d.select("doc_id"))
-            return phash_near_dup_pairs(
-                average_hash(imgs), max_dist=2, bits=16
-            )
-
-        return run
-
-    def gridq(e):
-        from magi_etl_spark.operators.sketches import grid_quantiles
-
-        # rows grow, groups fixed (5 event types): the mergeable
-        # histogram state is 128 ints/group — the probe shows the
-        # map-side combine carrying the growth
-        return lambda: grid_quantiles(
-            e, ["event_type"], "value", [0.5, 0.9, 0.99], lo=0.0, hi=350.0
-        )
-
-    def triples(li):
-        from magi_etl_spark.operators.association import frequent_triples
-
-        # basket ids shift per copy: baskets (and per-basket C(k,3)
-        # candidates) grow linearly; the A-priori prune bounds fan-out
-        return lambda: frequent_triples(li, min_support=2)
-
-    def kn(d):
-        from magi_etl_spark.operators.ngram_lm import kneser_ney_logprob_scores
-
-        # replication duplicates text verbatim, so bigram TYPES are
-        # fixed while the scored doc stream grows linearly — the model
-        # joins ride vocabulary-sized frames at every scale
-        return lambda: kneser_ney_logprob_scores(d, "doc_id", "text")
-
-    def shardplan(d):
-        from magi_etl_spark.operators.shards import shard_by_size
-
-        # caveat: source count is fixed, so per-group window state
-        # grows linearly — acceptable because the operator targets
-        # file-manifest metadata frames, not data-scale rows
-        def run():
-            sh = shard_by_size(d, ["source"], "n_chars", "doc_id", 20000)
-            return sh.groupBy("source", "shard_id").agg(
-                F.count(F.lit(1)).alias("n_docs")
-            )
-
-        return run
-
-    def paths(e):
-        from magi_etl_spark.operators.behavior import top_event_paths
-
-        # user ids shift per copy: user-day groups grow linearly,
-        # per-group collect state bounded by events-per-user-day
-        return lambda: top_event_paths(e)
-
-    def phrase(d):
-        from magi_etl_spark.operators.phrase import phrase_search
-
-        # postings legs are term-frequency-sized (filter precedes the
-        # join); match positions grow linearly with replication
-        return lambda: phrase_search(d, "table scan")
-
-    # --- r7 staged families --------------------------------------------
-
-    def stickiness(e):
-        from magi_etl_spark.operators.engagement import rolling_active_users
-
-        # user ids shift per copy: distinct user-day pairs grow
-        # linearly; the x30 explode rides the COLLAPSED frame
-        return lambda: rolling_active_users(e)
-
-    def concurrency(e):
-        from magi_etl_spark.operators.engagement import concurrency_profile
-
-        # (user, day) sessions grow linearly; the global running sum
-        # rides the range-partitioned prefix sum
-        return lambda: concurrency_profile(e)
-
-    def decay(e):
-        from magi_etl_spark.operators.engagement import decay_engagement_scores
-
-        return lambda: decay_engagement_scores(e)
-
-    def gini(o, c):
-        from magi_etl_spark.operators.inequality import gini_by_group
-
-        # custkeys shift per copy: entity count per segment grows
-        # linearly, rank window partitioned by segment
-        def run():
-            j = o.join(
-                F.broadcast(c.select("c_custkey", "c_mktsegment")),
-                o.o_custkey == c.c_custkey,
-            )
-            return gini_by_group(
-                j.select(
-                    F.col("c_mktsegment").alias("segment"),
-                    "o_custkey",
-                    F.round(F.col("o_totalprice") * 100)
-                    .cast("long")
-                    .alias("_m"),
-                ),
-                ["segment"],
-                "o_custkey",
-                F.col("_m"),
-            )
-
-        return run
-
-    def target_enc(o):
-        from magi_etl_spark.operators.mlprep import target_encode_kfold
-
-        # category x fold cells are FIXED; rows per cell grow — the
-        # keyed aggregate absorbs growth map-side
-        return lambda: target_encode_kfold(
-            o,
-            "o_orderpriority",
-            (F.col("o_orderstatus") == "F").cast("int"),
-            F.col("o_orderkey"),
-        )
-
-    def quota(d):
-        from magi_etl_spark.operators.mlprep import quota_sample
-
-        # strata fixed, rows per stratum grow: the per-stratum rank
-        # window is the same shape as weighted_sample
-        return lambda: quota_sample(
-            d.select("doc_id", "lang", "source"),
-            ["lang", "source"],
-            "doc_id",
-            500,
-        )
-
-    def cusum(e):
-        from magi_etl_spark.operators.changepoint import cusum_profile
-
-        # series count (event types) and day count are FIXED: the
-        # recursion input never grows — only the pre-aggregation scans
-        # the replicated stream
-        def run():
-            daily = e.groupBy(
-                F.col("event_type").alias("series"),
-                F.to_date("ts").alias("day"),
-            ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("x"))
-            return cusum_profile(daily, "series", "day", "x")
-
-        return run
-
-    def winnow(d):
-        from magi_etl_spark.operators.winnow import winnow_fingerprints
-
-        # per-document windows: gram and fingerprint counts grow
-        # linearly with the corpus
-        def run():
-            fps = winnow_fingerprints(d)
-            return fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-
-        return run
-
-    def winnow_pairs_probe(d):
-        from magi_etl_spark.operators.winnow import (
-            fingerprint_pairs,
-            winnow_fingerprints,
-        )
-
-        # STRESSOR under wholesale replication: every copy shares every
-        # fingerprint with its n-1 siblings, so the pair set itself
-        # grows ~n^2 per duplicate family (8x-only, output accounting)
-        return lambda: fingerprint_pairs(winnow_fingerprints(d))
-
-    def simjoin(d):
-        from fractions import Fraction
-
-        from magi_etl_spark.operators.setjoin import (
-            shingle_sets,
-            similarity_join,
-        )
-
-        # STRESSOR under wholesale replication (J=1 sibling pairs grow
-        # n^2 per family) — 8x-only with output accounting
-        return lambda: similarity_join(shingle_sets(d), Fraction(1, 2))
-
-    def script_prof(d):
-        from magi_etl_spark.operators.textsignals import script_profile
-
-        return lambda: script_profile(d)
-
-    def summary(d):
-        from magi_etl_spark.operators.textsignals import extractive_summary
-
-        return lambda: extractive_summary(d)
-
-    def asof_enrich(o, li):
-        from magi_etl_spark.operators.dimjoin import (
-            asof_dimension_join,
-            priority_dimension_from_orders,
-        )
-
-        # custkeys shift per copy: versions-per-key fixed, key count
-        # grows linearly — the honest axis for the keyed as-of join
-        def run():
-            facts = li.join(
-                o.select("o_orderkey", "o_custkey"),
-                li.l_orderkey == o.o_orderkey,
-            ).select(
-                "l_orderkey",
-                "l_linenumber",
-                F.col("o_custkey").alias("custkey"),
-                "l_shipdate",
-                "l_extendedprice",
-            )
-            return asof_dimension_join(
-                facts,
-                priority_dimension_from_orders(o),
-                key="custkey",
-                fact_time="l_shipdate",
-                attrs=["priority"],
-            )
-
-        return run
-
-    def kcore_probe(li):
-        from magi_etl_spark.operators.kcore import k_core, undirected_edges
-
-        # orderkey AND suppkey shift per copy: the co-order graph is n
-        # disjoint copies — edges and cores grow linearly
-        def run():
-            base = li.select("l_orderkey", "l_suppkey").distinct()
-            a = base.alias("x")
-            b = base.alias("y")
-            pairs = a.join(
-                b,
-                (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-            ).select(
-                F.col("x.l_suppkey").alias("s1"),
-                F.col("y.l_suppkey").alias("s2"),
-            )
-            return k_core(undirected_edges(pairs, "s1", "s2"), k=3)
-
-        return run
-
-    def lsh_eval(d):
-        from magi_etl_spark.operators import dedup as DD
-        from magi_etl_spark.operators.retrieval_eval import (
-            candidate_metrics,
-            lsh_band_candidates,
-        )
-
-        # STRESSOR (both pair sets quadratic under replication) —
-        # 8x-only with output accounting
-        def run():
-            sigs = DD.minhash_signatures(d, "doc_id", "text", n=3, n_hashes=4)
-            cand = lsh_band_candidates(
-                sigs, "doc_id", ["m0", "m1", "m2", "m3"], band_size=2
-            )
-            truth = DD.ngram_jaccard_pairs(
-                d, "doc_id", "text", n=3, threshold=0.5
-            ).select("doc_a", "doc_b")
-            return candidate_metrics(cand, truth)
-
-        return run
-
-    def ecdf(e):
-        from magi_etl_spark.operators.mlprep import ecdf_normalize
-
-        return lambda: ecdf_normalize(
-            e.select("event_type", "event_id", "value"),
-            ["event_type"],
-            "value",
-            "event_id",
-        )
-
-    def chi2(e):
-        from magi_etl_spark.operators.contingency import chi_square
-
-        return lambda: chi_square(
-            e, F.col("event_type"), F.weekday("ts").cast("int")
-        )
-
-    def survival(e):
-        from magi_etl_spark.operators.survival import survival_curve
-
-        return lambda: survival_curve(e)
-
-    def common_runs(d):
-        from fractions import Fraction
-
-        from magi_etl_spark.operators.setjoin import (
-            longest_common_runs,
-            shingle_positions,
-            shingle_sets,
-            similarity_join,
-        )
-
-        # STRESSOR like simjoin: the pair set itself grows ~n^2 per
-        # duplicate family under replication (8x-only)
-        def run():
-            pairs = similarity_join(shingle_sets(d), Fraction(1, 2))
-            return longest_common_runs(pairs, shingle_positions(d))
-
-        return run
-
-    def negatives(o, li):
-        from magi_etl_spark.operators.negatives import negative_edge_samples
-
-        # custkeys and partkeys shift per copy: src and dst vertex sets
-        # both grow linearly, buckets refill proportionally
-        def run():
-            edges = (
-                o.join(li, o.o_orderkey == li.l_orderkey)
-                .select(
-                    F.col("o_custkey").alias("src"),
-                    F.col("l_partkey").alias("dst"),
-                )
-                .distinct()
-            )
-            return negative_edge_samples(edges, "src", "dst")
-
-        return run
-
-    def rendezvous_probe(d):
-        from magi_etl_spark.operators.rendezvous import (
-            shard_assignment_profile,
-        )
-
-        return lambda: shard_assignment_profile(d, "doc_id", 16)
-
-    # --- r8 staged families ----------------------------------------------
-
-    def kcenter(em):
-        from magi_etl_spark.operators.coreset import kcenter_trace
-
-        # k fixed (8 rounds), corpus grows: each round is one broadcast
-        # + one max_by aggregate, so runtime should track the scan
-        return lambda: kcenter_trace(em, k=8)
-
-    def labelprop_probe(o, li):
-        from magi_etl_spark.operators.labelprop import label_propagation
-
-        # custkeys shift per copy, suppkeys fixed: the bipartite graph
-        # gains customer vertices linearly; 3 rounds of join+agg
-        def run():
-            edges = (
-                o.join(li, o.o_orderkey == li.l_orderkey)
-                .select(
-                    F.col("o_custkey").alias("src"),
-                    # negated supplier range: disjoint from customer ids
-                    # at every scale (matches the q221 operator fix)
-                    (-F.col("l_suppkey")).alias("dst"),
-                )
-                .distinct()
-            )
-            return label_propagation(edges, n_rounds=3)
-
-        return run
-
-    def good_turing_probe(d):
-        from magi_etl_spark.operators.spectrum import good_turing
-
-        # replication multiplies token FREQUENCIES (r -> n·r) but not
-        # types: the spectrum shifts, stays O(sqrt) rows; runtime rides
-        # the two corpus aggregations
-        return lambda: good_turing(d)
-
-    def epoch_plan_probe(d):
-        from magi_etl_spark.operators.epochs import epoch_mixture_plan
-        from magi_etl_spark.operators.hashing_trick import _h32
-
-        def run():
-            weights = d.select("source").distinct().select(
-                "source", ((_h32(F.lit("w"), F.col("source")) % 3) + 1).alias("weight")
-            )
-            return epoch_mixture_plan(d, weights, token_budget=1_000_000)
-
-        return run
-
-    def feature_hash_probe(d):
-        from magi_etl_spark.operators.hashing_trick import bucket_profile
-
-        return lambda: bucket_profile(d, n_buckets=256)
-
-    def rare_bigram_probe(d):
-        from magi_etl_spark.operators.fluency import rare_bigram_band
-
-        # replication multiplies every bigram's corpus count, so "rare"
-        # empties out — the full window/count/join/verdict path still
-        # runs at the replicated scale
-        return lambda: rare_bigram_band(d)
-
-    def twap(e):
-        from magi_etl_spark.operators.engagement import time_weighted_average
-
-        return lambda: time_weighted_average(e, ["event_type"])
-
-    # --- r9 staged families ----------------------------------------------
-
-    def kl_novelty(d):
-        from magi_etl_spark.operators.novelty import source_kl_novelty
-
-        # replication multiplies per-(source, token) counts, not types:
-        # both keyed aggregations stay vocabulary-sized after map-side
-        # combine; runtime rides the token-stream scan
-        return lambda: source_kl_novelty(d)
-
-    def dispersion_probe(d):
-        from magi_etl_spark.operators.dispersion import token_dispersion
-
-        # (doc, token) pairs grow linearly with the corpus; the per-token
-        # rollup stays vocabulary-sized
-        return lambda: token_dispersion(d, min_df=5, top_n=200)
-
-    def wquantile_probe(li):
-        from magi_etl_spark.operators.wquantile import weighted_quantiles
-
-        # per-(group, value) collapse grows with distinct values; the
-        # window partitions by group, never global
-        def run():
-            f = li.select(
-                F.col("l_returnflag").alias("rf"),
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .alias("v"),
-                F.col("l_quantity").cast("long").alias("w"),
-            )
-            return weighted_quantiles(f, ["rf"], "v", "w", [0.25, 0.5, 0.9])
-
-        return run
-
-    def conformal_probe(o):
-        from magi_etl_spark.operators.conformal import split_conformal
-
-        # folds split the replicated keys ~evenly; the calibration
-        # window partitions by group
-        def run():
-            base = o.select(
-                F.col("o_orderpriority").alias("prio"),
-                "o_orderkey",
-                "o_totalprice",
-            )
-            return split_conformal(
-                base,
-                ["prio"],
-                "o_orderkey",
-                F.round(F.col("o_totalprice") * 100),
-                alpha=0.1,
-                seed="probe",
-            )
-
-        return run
-
-    def maxcover_probe(d):
-        from magi_etl_spark.operators.maxcover import vocab_cover_trace
-
-        # k fixed greedy rounds; each is one anti-join + one aggregate
-        # over the (doc, bigram) pairs, which grow linearly
-        return lambda: vocab_cover_trace(d, k=4)
-
-    def hill_probe(d):
-        from magi_etl_spark.operators.tailindex import hill_tail_index
-
-        # one token aggregation + TakeOrdered top-k per requested k;
-        # replication multiplies frequencies, not types
-        return lambda: hill_tail_index(d, ks=[50, 100])
-
-    # --- r10 wave --------------------------------------------------------
-    def cuped_probe(o):
-        from magi_etl_spark.operators.cuped import cuped_adjust
-
-        # custkey shifts per copy: UNIT COUNT grows, per-unit fixed —
-        # two keyed aggregations + a 1-row pooled broadcast
-        def run():
-            cents = F.round(F.col("o_totalprice") * 100).cast("long")
-            pre = F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-            per_cust = (
-                o.groupBy("o_custkey")
-                .agg(
-                    F.sum(F.when(pre, cents).otherwise(F.lit(0))).alias("x"),
-                    F.sum(F.when(~pre, cents).otherwise(F.lit(0))).alias("y"),
-                )
-                .select(
-                    (F.pmod(F.xxhash64("o_custkey"), F.lit(2)))
-                    .cast("int")
-                    .alias("arm"),
-                    "x",
-                    "y",
-                )
-            )
-            return cuped_adjust(per_cust, "arm", F.col("y"), F.col("x"))
-
-        return run
-
-    def selection_probe(li):
-        from magi_etl_spark.operators.selection import exact_quantiles
-
-        # per-round histogram aggregation over the scan: rounds are
-        # range-bounded (constant), so cost tracks the scan linearly
-        def run():
-            v = li.select(
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .alias("v")
-            )
-            return exact_quantiles(v, "v", [(1, 2), (99, 100)])
-
-        return run
-
-    def invindex_probe(d):
-        from magi_etl_spark.operators.invindex import (
-            boolean_and_query,
-            build_postings,
-        )
-
-        # postings build is one (doc, token) agg; the AND query touches
-        # three posting lists only
-        return lambda: boolean_and_query(
-            build_postings(d), ["merge", "scan", "sort"]
-        )
-
-    def kstest_probe(e):
-        from magi_etl_spark.operators.kstest import ks_two_sample
-
-        # the window input is one row per (day, distinct cent value) —
-        # bounded by value cardinality, not the row count
-        def run():
-            ev = e.select(
-                F.to_date("ts").alias("day"),
-                "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            return ks_two_sample(
-                ev, ["day"], "event_type", "cents", "click", "purchase"
-            )
-
-        return run
-
-    def logrank_probe(e):
-        from magi_etl_spark.operators.logrank import logrank_test
-
-        # user count grows with replication; the at-risk window runs
-        # over (week, distinct duration) rows — bounded by the calendar
-        def run():
-            per_user = e.groupBy("user_id").agg(
-                F.min(F.to_date("ts")).alias("_fd"),
-                F.max(F.to_date("ts")).alias("_ld"),
-                F.max(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).alias("_isp"),
-            )
-            horizon = e.agg(F.max(F.to_date("ts")).alias("_gd"))
-            users = per_user.join(F.broadcast(horizon)).select(
-                F.date_trunc("week", F.col("_fd")).cast("date").alias("wk"),
-                F.when(F.col("_isp") == 1, "p").otherwise("np").alias("grp"),
-                F.datediff(F.col("_ld"), F.col("_fd")).alias("t"),
-                F.when(F.col("_ld") < F.date_sub(F.col("_gd"), 7), 1)
-                .otherwise(0)
-                .alias("e"),
-            )
-            return logrank_test(users, ["wk"], "grp", "t", "e", "p", "np")
-
-        return run
-
-    def deltamethod_probe(e):
-        from magi_etl_spark.operators.deltamethod import ratio_metric_ci
-
-        # one unit-grain aggregation + one group aggregation
-        return lambda: ratio_metric_ci(
-            e,
-            ["event_type"],
-            "user_id",
-            F.round(F.col("value") * 100).cast("long"),
-            F.lit(1),
-        )
-
-    def auc_probe(e):
-        from magi_etl_spark.operators.auc import group_auc
-
-        # one (day, cents) count agg collapses the corpus; the window
-        # runs over distinct cents per day — bounded by value cardinality
-        def run():
-            ev = e.where(
-                F.col("event_type").isin(["click", "purchase"])
-            ).select(
-                F.to_date("ts").alias("day"),
-                "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            return group_auc(
-                ev,
-                ["day"],
-                F.col("cents"),
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0),
-            )
-
-        return run
-
-    def spatial_probe(c, k):
-        from magi_etl_spark.operators.spatial import grid_blocked_eps_join
-
-        # wholesale replication multiplies point DENSITY, so a fixed
-        # radius grows output (and candidates) ~n^2 — physics, not a
-        # plan defect (the fs_linkage/embedding_neardup class).  The
-        # operator-scaling probe keeps expected pairs PER POINT constant
-        # by shrinking eps ~ 1/sqrt(k); cost should then track n.
-        eps = int(1_500_000 / (k**0.5))
-
-        def run():
-            def md5mod(salt: str, mod: int, shift: int):
-                return (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(salt),
-                                    F.col("c_custkey").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % mod
-                    - shift
-                )
-
-            pts = c.select(
-                "c_custkey",
-                md5mod("geo|x|", 120_000_000, 60_000_000).alias("x"),
-                md5mod("geo|y|", 360_000_000, 180_000_000).alias("y"),
-            )
-            return grid_blocked_eps_join(
-                pts.select(F.col("c_custkey").alias("c1"), "x", "y"),
-                pts.select(F.col("c_custkey").alias("c2"), "x", "y"),
-                eps,
-                ["c1"],
-                ["c2"],
-            ).where(F.col("c1") < F.col("c2"))
-
-        return run
-
-    def acf_probe(e):
-        from magi_etl_spark.operators.acf import autocorrelation
-
-        # the corpus collapses to one row per (event_type, day) before
-        # any window; series length is calendar-bounded
-        def run():
-            daily = e.groupBy(
-                "event_type", F.to_date("ts").alias("day")
-            ).agg(F.count(F.lit(1)).alias("x"))
-            return autocorrelation(daily, ["event_type"], "day", F.col("x"), 7)
-
-        return run
-
-    def fdr_probe(e):
-        from magi_etl_spark.operators.fdr import bh_summary
-
-        # one hypothesis per (event_type, user_id) — the hypothesis
-        # count grows with replication, exercising the range-partitioned
-        # global rank at n x
-        def run():
-            hyp = e.groupBy("event_type", "user_id").agg(
-                F.count(F.lit(1)).alias("n_events")
-            )
-            p = hyp.select(
-                "event_type",
-                "user_id",
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit("fdrp|"),
-                                    F.col("event_type"),
-                                    F.lit("|"),
-                                    F.col("user_id").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % 1_000_001
-                ).alias("p_micro"),
-            )
-            return bh_summary(p, "p_micro", ["event_type", "user_id"], 1, 20)
-
-        return run
-
-    def cmh_probe(o):
-        from magi_etl_spark.operators.cmh import cmh_test
-
-        # one keyed count agg (map-side combinable) to calendar-bounded
-        # strata, then per-stratum arithmetic and a scalar merge
-        def run():
-            base = o.select(
-                F.date_trunc("month", F.col("o_orderdate")).alias("mth"),
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit("cmh|"),
-                                    F.col("o_custkey").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % 2
-                )
-                .cast("int")
-                .alias("arm"),
-                F.when(
-                    F.round(F.col("o_totalprice") * 100).cast("long")
-                    > 25_000_000,
-                    1,
-                )
-                .otherwise(0)
-                .alias("y"),
-            )
-            return cmh_test(base, ["mth"], F.col("arm"), F.col("y"), 1, 0)
-
-        return run
-
-    def ndcg_probe(d):
-        from magi_etl_spark.operators.invindex import build_postings
-        from magi_etl_spark.operators.ndcg import ndcg_at_k
-
-        # candidates are the three terms' posting lists (never the
-        # corpus); per-query windows grow with each term's list
-        def run():
-            docs = d
-            postings = build_postings(docs).where(
-                F.col("tok").isin(["data", "merge", "query"])
-            )
-            cand = postings.join(
-                docs.select("doc_id", "n_chars"), "doc_id"
-            ).select(
-                "tok",
-                "doc_id",
-                "n_chars",
-                F.least(F.lit(3), F.col("tf")).alias("rel"),
-            )
-            return ndcg_at_k(
-                cand,
-                ["tok"],
-                [F.desc("n_chars"), F.asc("doc_id")],
-                F.col("rel"),
-                10,
-            )
-
-        return run
-
-    # --- r12 wave --------------------------------------------------------
-    def dbscan_probe(c):
-        import math
-
-        from magi_etl_spark.operators.dbscan import grid_dbscan
-
-        # the COUNT-DERIVED coordinate domain (m ~ sqrt(N) * U) keeps
-        # point density constant as the corpus replicates, so the
-        # expected neighborhood size — and with it the per-point work —
-        # is scale-invariant; cost should track N, not N^2
-        def run():
-            m = math.ceil(math.sqrt(c.count())) * 6_000_000
-
-            def md5coord(salt: str):
-                return (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(salt),
-                                    F.col("c_custkey").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % m
-                    - m // 2
-                )
-
-            pts = c.select(
-                F.col("c_custkey").alias("id"),
-                md5coord("dbx|").alias("x"),
-                md5coord("dby|").alias("y"),
-            )
-            return grid_dbscan(pts, 4_000_000, 4)
-
-        return run
-
-    def rankcorr_probe(e):
-        from magi_etl_spark.operators.rankcorr import (
-            kendall_tau_b,
-            spearman_rho,
-        )
-
-        # replication multiplies per-day COUNTS, not days: the daily
-        # collapse is the only corpus-sized stage; ranks and cell pairs
-        # ride the fixed-length series
-        def run():
-            daily = (
-                e.where(F.col("value").isNotNull())
-                .groupBy("event_type", F.to_date("ts").alias("day"))
-                .agg(
-                    F.count(F.lit(1)).alias("x"),
-                    F.sum(
-                        F.round(F.col("value") * 100).cast("long")
-                    ).alias("y"),
-                )
-            )
-            rho = spearman_rho(daily, ["event_type"], F.col("x"), F.col("y"))
-            tau = kendall_tau_b(
-                daily, ["event_type"], F.col("x"), F.col("y")
-            )
-            return rho.join(tau.select("event_type", "tau_b"), "event_type")
-
-        return run
-
-    def mannkendall_probe(e):
-        from magi_etl_spark.operators.mannkendall import mann_kendall_trend
-
-        # same shape: the pairwise S join runs over the CALENDAR-bounded
-        # daily series, unchanged under replication; the scan dominates
-        def run():
-            daily = e.groupBy(
-                "event_type", F.to_date("ts").alias("day")
-            ).agg(F.count(F.lit(1)).alias("x"))
-            return mann_kendall_trend(daily, ["event_type"], "day", F.col("x"))
-
-        return run
-
-    def mcnemar_probe(e):
-        from magi_etl_spark.operators.mcnemar import mcnemar_test
-
-        # replication shifts user ids: SUBJECT count grows linearly,
-        # per-subject work fixed — two keyed aggregations
-        def run():
-            half = F.lit("2024-01-16").cast("date")
-            subj = (
-                e.groupBy("user_id")
-                .agg(
-                    F.max(
-                        F.when(
-                            (F.col("event_type") == "purchase")
-                            & (F.to_date("ts") < half),
-                            1,
-                        ).otherwise(0)
-                    ).alias("x1"),
-                    F.max(
-                        F.when(
-                            (F.col("event_type") == "purchase")
-                            & (F.to_date("ts") >= half),
-                            1,
-                        ).otherwise(0)
-                    ).alias("x2"),
-                )
-                .select((F.col("user_id") % 3).alias("cohort"), "x1", "x2")
-            )
-            return mcnemar_test(subj, ["cohort"], F.col("x1"), F.col("x2"))
-
-        return run
-
-    def kappa_probe(d):
-        from magi_etl_spark.operators.kappa import cohens_kappa
-
-        # confusion cells are bounded by lang x 4x4 buckets; the item
-        # scan is the only corpus-sized stage
-        def run():
-            rated = d.select(
-                "lang",
-                F.least(F.expr("n_chars DIV 400"), F.lit(3)).alias("r1"),
-                F.least(
-                    F.expr(
-                        "size(regexp_extract_all(lower(text), '[a-z]+', 0))"
-                        " DIV 60"
-                    ).cast("long"),
-                    F.lit(3),
-                ).alias("r2"),
-            )
-            return cohens_kappa(rated, ["lang"], F.col("r1"), F.col("r2"))
-
-        return run
-
-    def rmst_probe(e):
-        from magi_etl_spark.operators.rmst import restricted_mean_survival
-
-        # user count grows linearly under replication; one keyed
-        # lifespan aggregate + one arm aggregate
-        def run():
-            ev = e.withColumn(
-                "arm",
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit("rmst|"),
-                                    F.col("user_id").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % 2
-                ).cast("int"),
-            )
-            return restricted_mean_survival(ev, ["arm"], "user_id", "ts", 14)
-
-        return run
-
-    # --- r13 wave --------------------------------------------------------
-    def raking_probe(e):
-        from magi_etl_spark.operators.raking import rake_weights
-
-        # cells/marginals are bounded by event_type x 7 day-indices; the
-        # corpus is touched once per marginal build and once for the
-        # cells — every IPF round rides the tiny cell table
-        def run():
-            ev = (
-                e.where(F.col("ts").isNotNull())
-                .select(
-                    "event_type",
-                    (
-                        F.datediff(
-                            F.to_date("ts"), F.lit("2024-01-01").cast("date")
-                        )
-                        % 7
-                    ).alias("di7"),
-                    F.to_date("ts").alias("day"),
-                )
-            )
-            first = ev.where(
-                F.col("day") < F.lit("2024-01-16").cast("date")
-            ).select("event_type", "di7")
-            rt = ev.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("target")
-            )
-            ct = ev.groupBy("di7").agg(F.count(F.lit(1)).alias("target"))
-            return rake_weights(first, "event_type", "di7", rt, ct, rounds=3)
-
-        return run
-
-    def kruskal_probe(e):
-        from magi_etl_spark.operators.kruskal import kruskal_wallis
-
-        # replication multiplies per-value COUNTS, not distinct cents:
-        # ranks ride distinct values, so the rank window is
-        # scale-invariant and the scans are the linear part
-        def run():
-            base = (
-                e.where(
-                    F.col("value").isNotNull() & F.col("user_id").isNotNull()
-                )
-                .select(
-                    "event_type",
-                    (F.col("user_id") % 5).alias("cohort"),
-                    F.round(F.col("value") * 100).cast("long").alias("cents"),
-                )
-            )
-            return kruskal_wallis(
-                base, ["event_type"], "cohort", F.col("cents")
-            )
-
-        return run
-
-    def cusumloc_probe(e):
-        from magi_etl_spark.operators.pagehinkley import cusum_change_point
-
-        # the daily collapse is the only corpus-sized stage; the window
-        # and argmax ride the calendar-bounded series
-        def run():
-            daily = (
-                e.where(F.col("value").isNotNull() & F.col("ts").isNotNull())
-                .groupBy("event_type", F.to_date("ts").alias("day"))
-                .agg(
-                    F.sum(
-                        F.round(F.col("value") * 100).cast("long")
-                    ).alias("x")
-                )
-            )
-            return cusum_change_point(daily, ["event_type"], "day", F.col("x"))
-
-        return run
-
-    def brier_probe(d):
-        from magi_etl_spark.operators.brier import reliability_brier_bins
-
-        # one map-side-combinable agg over (source, bin); the text scan
-        # (regexp count) is the linear part
-        def run():
-            rated = d.select(
-                "source",
-                F.least(
-                    F.expr(
-                        "size(regexp_extract_all(lower(text), 'the', 0))"
-                    ).cast("long")
-                    * 20000,
-                    F.lit(1000000).cast("long"),
-                ).alias("p"),
-                (F.col("lang") == "en").alias("y"),
-            )
-            return reliability_brier_bins(
-                rated, ["source"], F.col("p"), F.col("y"), n_bins=10
-            )
-
-        return run
-
-    def wkappa_probe(d):
-        from magi_etl_spark.operators.wkappa import weighted_kappa
-
-        # confusion cells bounded by lang x 4x4 buckets, marginal cross
-        # by lang x 4 x 4; the item scan is the only corpus-sized stage
-        def run():
-            rated = d.select(
-                "lang",
-                F.least(F.expr("n_chars DIV 400"), F.lit(3)).alias("r1"),
-                F.least(
-                    F.expr(
-                        "size(regexp_extract_all(lower(text), '[a-z]+', 0))"
-                        " DIV 60"
-                    ).cast("long"),
-                    F.lit(3),
-                ).alias("r2"),
-            )
-            return weighted_kappa(
-                rated, ["lang"], F.col("r1"), F.col("r2"), "quadratic"
-            )
-
-        return run
-
-    def dbprofile_probe(c):
-        import math
-
-        from magi_etl_spark.operators.dbscan import grid_dbscan
-        from magi_etl_spark.operators.dbstability import (
-            dbscan_cluster_profile,
-        )
-
-        # q255's denser geometry (eps = U, mean neighborhood ~pi) over
-        # the count-derived domain: density stays constant under
-        # replication, and the profile adds one keyed agg on top of the
-        # already-probed dbscan dataflow
-        def run():
-            m = math.ceil(math.sqrt(c.count())) * 6_000_000
-
-            def md5coord(salt: str):
-                return (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(salt),
-                                    F.col("c_custkey").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % m
-                    - m // 2
-                )
-
-            pts = c.select(
-                F.col("c_custkey").alias("id"),
-                md5coord("dbsx|").alias("x"),
-                md5coord("dbsy|").alias("y"),
-            )
-            return dbscan_cluster_profile(grid_dbscan(pts, 6_000_000, 4))
-
-        return run
-
-    # --- r14 wave --------------------------------------------------------
-    def friedman_probe(e):
-        from magi_etl_spark.operators.friedman import friedman_test
-
-        # replication multiplies the daily COUNTS; blocks x treatments
-        # (weeks x 7) stay calendar-bounded, so the checkpointed cell
-        # frame and everything after it are scale-invariant — the daily
-        # collapse is the only corpus-sized stage
-        def run():
-            daily = (
-                e.where(F.col("ts").isNotNull())
-                .select(
-                    "event_type",
-                    F.datediff(
-                        F.to_date("ts"), F.lit("2024-01-01").cast("date")
-                    ).alias("di"),
-                )
-                .groupBy(
-                    "event_type",
-                    F.expr("di DIV 7").alias("week"),
-                    (F.col("di") % 7).alias("dow"),
-                )
-                .agg(F.count(F.lit(1)).alias("x"))
-            )
-            return friedman_test(
-                daily, ["event_type"], "week", "dow", F.col("x")
-            )
-
-        return run
-
-    def jonckheere_probe(e):
-        from magi_etl_spark.operators.jonckheere import jonckheere_terpstra
-
-        # replication multiplies cell COUNTS, not distinct (cohort,
-        # bucket) cells: the bounded value range caps the cell cross,
-        # so the pair stage is scale-invariant and the scan is linear
-        def run():
-            base = (
-                e.where(
-                    F.col("value").isNotNull() & F.col("user_id").isNotNull()
-                )
-                .select(
-                    "event_type",
-                    (F.col("user_id") % 5).alias("cohort"),
-                    F.expr("CAST(ROUND(value * 100) AS LONG) DIV 1000").alias(
-                        "bucket"
-                    ),
-                )
-            )
-            return jonckheere_terpstra(
-                base, ["event_type"], "cohort", F.col("bucket"),
-                max_cells=None,
-            )
-
-        return run
-
-    def cliffs_probe(d):
-        from magi_etl_spark.operators.cliffsdelta import cliffs_delta
-
-        # group_auc's shape: the count collapse is corpus-sized, the
-        # cumulative window rides distinct n_chars per source
-        def run():
-            docs = d.where(
-                F.col("n_chars").isNotNull() & F.col("lang").isNotNull()
-            )
-            return cliffs_delta(
-                docs,
-                ["source"],
-                F.col("n_chars"),
-                F.when(F.col("lang") == "en", 1).otherwise(0),
-            )
-
-        return run
-
-    def cucconi_probe(e):
-        from magi_etl_spark.operators.cucconi import cucconi_test
-
-        # pooled ranks ride distinct cents (scale-invariant under
-        # replication); one cell collapse + one keyed aggregation
-        def run():
-            base = (
-                e.where(
-                    F.col("value").isNotNull() & F.col("user_id").isNotNull()
-                )
-                .select(
-                    "event_type",
-                    (F.col("user_id") % 2 == 0).alias("even_user"),
-                    F.round(F.col("value") * 100).cast("long").alias("cents"),
-                )
-            )
-            return cucconi_test(
-                base, ["event_type"], F.col("even_user"), F.col("cents")
-            )
-
-        return run
-
-    def quantreg_probe(e):
-        from magi_etl_spark.operators.quantreg import quantile_line
-
-        # the daily collapse + cell checkpoint are the corpus-sized
-        # stages; all 17 selections ride the calendar-bounded cell
-        # frame (replication multiplies x and y VALUES, not cells)
-        def run():
-            daily = (
-                e.where(F.col("ts").isNotNull() & F.col("value").isNotNull())
-                .groupBy("event_type", F.to_date("ts").alias("day"))
-                .agg(
-                    F.count(F.lit(1)).alias("x"),
-                    F.sum(
-                        F.round(F.col("value") * 100).cast("long")
-                    ).alias("y"),
-                )
-            )
-            return quantile_line(
-                daily, ["event_type"], F.col("x"), F.col("y"), 3, 4, rounds=8
-            )
-
-        return run
-
-    def ece_probe(d):
-        from magi_etl_spark.operators.brier import reliability_brier_bins
-        from magi_etl_spark.operators.ece import calibration_error
-
-        # one corpus-sized rating pass into source x 10 bins, then a
-        # bin-bounded summary aggregation
-        def run():
-            rated = d.where(
-                F.col("text").isNotNull() & F.col("lang").isNotNull()
-            ).select(
-                "source",
-                F.least(
-                    F.expr(
-                        "size(regexp_extract_all(lower(text), 'the', 0))"
-                    ).cast("long")
-                    * 20000,
-                    F.lit(1000000).cast("long"),
-                ).alias("p"),
-                (F.col("lang") == "en").alias("y"),
-            )
-            return calibration_error(
-                reliability_brier_bins(
-                    rated, ["source"], F.col("p"), F.col("y"), n_bins=10
-                ),
-                ["source"],
-            )
-
-        return run
-
-    def _weekly_cells(e):
-        return (
-            e.where(F.col("ts").isNotNull())
-            .select(
-                "event_type",
-                F.datediff(
-                    F.to_date("ts"), F.lit("2024-01-01").cast("date")
-                ).alias("di"),
-            )
-            .groupBy(
-                "event_type",
-                F.expr("di DIV 7").alias("week"),
-                (F.col("di") % 7).alias("dow"),
-            )
-            .agg(F.count(F.lit(1)).alias("x"))
-        )
-
-    def page_probe(e):
-        from magi_etl_spark.operators.pagetest import page_trend_test
-
-        # same frame as friedman_probe: replication multiplies daily
-        # COUNTS, the calendar bounds blocks x treatments, so only the
-        # daily collapse is corpus-sized
-        def run():
-            return page_trend_test(
-                _weekly_cells(e), ["event_type"], "week", "dow", F.col("x")
-            )
-
-        return run
-
-    def kendallw_probe(e):
-        from magi_etl_spark.operators.kendallw import kendalls_w
-
-        def run():
-            return kendalls_w(
-                _weekly_cells(e), ["event_type"], "week", "dow", F.col("x")
-            )
-
-        return run
-
-    def cochranq_probe(e):
-        from magi_etl_spark.operators.cochranq import cochran_q
-
-        # 29 buckets x 3 day classes per key: the grid is fixed-size,
-        # the parity collapse is the only corpus-sized stage
-        def run():
-            base = (
-                e.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-                .select(
-                    "event_type",
-                    (F.col("user_id") % 29).alias("bucket"),
-                    (
-                        F.datediff(
-                            F.to_date("ts"), F.lit("2024-01-01").cast("date")
-                        )
-                        % 3
-                    ).alias("cls"),
-                )
-                .groupBy("event_type", "bucket", "cls")
-                .agg((F.count(F.lit(1)) % 2).cast("int").alias("odd"))
-            )
-            return cochran_q(
-                base, ["event_type"], "bucket", "cls", F.col("odd")
-            )
-
-        return run
-
-    def bm_probe(e):
-        from magi_etl_spark.operators.brunnermunzel import brunner_munzel
-
-        # replication multiplies cell counts; distinct cents values are
-        # price-range-bounded, so both rank windows are scale-invariant
-        def run():
-            base = e.where(
-                F.col("value").isNotNull() & F.col("user_id").isNotNull()
-            ).select(
-                "event_type",
-                (F.col("user_id") % 2 == 0).alias("even_user"),
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            return brunner_munzel(
-                base, ["event_type"], F.col("even_user"), F.col("cents")
-            )
-
-        return run
-
-    def hl_probe(e):
-        from magi_etl_spark.operators.hodgeslehmann import (
-            hodges_lehmann_shift,
-        )
-
-        # dollar bins bound the cells, so the cells1 x cells2 difference
-        # join is scale-invariant; only the cell collapse sees the corpus
-        def run():
-            base = e.where(
-                F.col("value").isNotNull() & F.col("user_id").isNotNull()
-            ).select(
-                "event_type",
-                (F.col("user_id") % 2 == 0).alias("even_user"),
-                F.expr("CAST(ROUND(value * 100) AS LONG) DIV 100").alias(
-                    "dollars"
-                ),
-            )
-            return hodges_lehmann_shift(
-                base,
-                ["event_type"],
-                F.col("even_user"),
-                F.col("dollars"),
-                max_cells=None,
-            )
-
-        return run
-
-    def grubbs_probe(e):
-        from magi_etl_spark.operators.grubbs import grubbs_test
-
-        # daily collapse -> distinct-count cells -> sufficient stats:
-        # every stage after the first is calendar- or cell-bounded
-        def run():
-            daily = (
-                e.where(F.col("ts").isNotNull())
-                .groupBy("event_type", F.to_date("ts").alias("day"))
-                .agg(F.count(F.lit(1)).alias("x"))
-            )
-            return grubbs_test(daily, ["event_type"], F.col("x"))
-
-        return run
-
-    def ivf_default_probe(em):
-        # r10 scale-default: n_lists derives ~sqrt(n) at build time, so a
-        # fixed query set's probe cost (n_probe lists x n/n_lists rows
-        # per list) grows O(sqrt n) with the corpus instead of linearly.
-        # The index build (one narrow assignment pass) is setup, not the
-        # timed pass — mirroring the lsh_index_increment convention.
-        from magi_etl_spark.operators.similarity import (
-            ivf_index_sampled,
-            ivf_topk,
-        )
-
-        assigned, cents = ivf_index_sampled(em, init="hash", seed=7)
-        assigned.count()
-        q = emb1.where(F.col("vec_id") < 3)
-        return lambda: ivf_topk(assigned, cents, q, k=10, n_probe=2)
-
-    def srp_default_probe(em):
-        # r10 scale-default: plane count derives ceil(log2(n/64)), so
-        # bucket occupancy stays ~64 at any corpus size.  Expected ratio
-        # is slightly SUPER-linear (each row pays n_planes ~ log n dot
-        # products) — the price of a bucket count that tracks the data;
-        # the old default hashed the whole corpus into ONE bucket.
-        from magi_etl_spark.operators.similarity import srp_lsh_buckets
-
-        return lambda: (
-            srp_lsh_buckets(em).groupBy("bucket").agg(F.count("*").alias("n"))
-        )
-
-    def pack_default_probe(d):
-        # r10 scale-default: bucket count derives from the chunk count
-        # (~4096 chunks per bucket), so per-bucket greedy work is O(1)
-        # in corpus size — the old fixed-16 layout funneled the whole
-        # corpus through 16 pandas groups.
-        from magi_etl_spark.operators.packing import pack_chunks
-
-        def run():
-            chunks = d.select(
-                "doc_id",
-                F.lit(0).alias("chunk_idx"),
-                (F.coalesce(F.col("n_chars"), F.lit(100)) / 4)
-                .cast("int")
-                .alias("n_chunk_tokens"),
-            )
-            return pack_chunks(chunks, budget=2048)
-
-        return run
-
-    lineitemN_parts = replicate(
-        lineitem1, ["l_orderkey", "l_partkey"], n, 10_000_000
-    )
-
-    lineitemN_sup = replicate(
-        lineitem1, ["l_orderkey", "l_suppkey"], n, 10_000_000
-    )
-
-    timings: dict[str, float] = {}
-    for label, d1, dn in (
-        ("lsh_dedup", lsh(docs1), lsh(docsN)),
-        ("dedup_clusters", clusters(docs1), clusters(docsN)),
-        ("funnel", funnel(events1), funnel(eventsN)),
-        ("skew_profile", skew(events1), skew(eventsN)),
-        ("embedding_neardup", emb_neardup(emb1), emb_neardup(embN)),
-        ("snm_pairs", snm(docs1), snm(docsN)),
-        ("temperature_mix", tmix(docs1), tmix(docsN)),
-        ("winsorize", winz(events1), winz(eventsN)),
-        ("salted_join", salted(events1), salted(eventsN)),
-        ("fuzzy_linkage", fuzzy(part1), fuzzy(partN_op)),
-        ("semantic_dedup", semdedup(emb1), semdedup(embN)),
-        ("pq_encode", pq(emb1), pq(embN)),
-        ("paragraph_dedup", paradedup(docs1), paradedup(docsN)),
-        ("unigram_lm", unigram(docs1), unigram(docsN)),
-        ("tfidf_keywords", tfidf(docs1), tfidf(docsN)),
-        ("curation", curation(docs1), curation(docsN)),
-        ("bpe_train", bpe(docs1), bpe(docsN)),
-        ("bigram_lm", bigram(docs1), bigram(docsN)),
-        ("top_ngrams", ngrams(docs1), ngrams(docsN)),
-        ("oot_split", oot(events1), oot(eventsN)),
-        ("dsir", dsir(docs1), dsir(docsN)),
-        ("ngram_novelty", novelty(docs1), novelty(docsN)),
-        ("png_pipeline", png_pipeline(docs1), png_pipeline(docsN)),
-        ("merge_into", merge(events1), merge(eventsN)),
-        ("dup_spans", spans(docs1), spans(docsN)),
-        ("weighted_sample", wsample(docs1), wsample(docsN)),
-        ("tokenize_pack", tokpack(docs1), tokpack(docsN)),
-        ("lsh_index_increment", lshidx(docs1), lshidx(docsN)),
-        ("kmv_sketch", kmv(events1), kmv(eventsN)),
-        ("hll_sketch", hll(events1), hll(eventsN)),
-        ("cms_sketch", cms(docs1), cms(docsN)),
-        ("containment", containment(docs1), containment(docsN)),
-        ("curriculum", curriculum(docs1), curriculum(docsN)),
-        ("hard_negatives", hardneg(emb1), hardneg(embN)),
-        ("funnel_op", funnel_op(events1), funnel_op(eventsN)),
-        ("cohort", cohort(events1), cohort(eventsN)),
-        ("markov", markov(events1), markov(eventsN)),
-        ("psi_drift", psi(events1), psi(eventsN)),
-        ("rp_projection", rproj(emb1), rproj(embN)),
-        ("copurchase", copurchase(lineitem1), copurchase(lineitemN)),
-        ("mad_outliers", mad(orders_b), mad(ordersN_b)),
-        ("rfm", rfm(orders_b), rfm(ordersN_b)),
-        ("triangles", triangles(lineitem1), triangles(lineitemN)),
-        ("attribution", attribution(events1), attribution(eventsN)),
-        ("kmv_overlap", kmv_overlap(events1), kmv_overlap(eventsN)),
-        ("ols_trend", ols(orders_b), ols(ordersN_b)),
-        ("ab_compare", ab(events1), ab(eventsN)),
-        ("image_phash", phash(docs1), phash(docsN)),
-        ("benford", benford(orders_b), benford(ordersN_b)),
-        ("mutual_info", mutinfo(events1), mutinfo(eventsN)),
-        ("concentration", hhi(orders_b), hhi(ordersN_b)),
-        ("seasonality", seasonality(orders_b), seasonality(ordersN_b)),
-        ("corr_matrix", corrmat(lineitem1), corrmat(lineitemN)),
-        ("ppr", ppr_probe(orders_b, lineitem1), ppr_probe(ordersN_b, lineitemN)),
-        ("fs_linkage", fs_probe(cust1), fs_probe(custN)),
-        ("grid_quantiles", gridq(events1), gridq(eventsN)),
-        ("frequent_triples", triples(lineitem1), triples(lineitemN)),
-        ("kneser_ney", kn(docs1), kn(docsN)),
-        ("shard_plan", shardplan(docs1), shardplan(docsN)),
-        ("event_paths", paths(events1), paths(eventsN)),
-        ("phrase_search", phrase(docs1), phrase(docsN)),
-        ("stickiness", stickiness(events1), stickiness(eventsN)),
-        ("concurrency", concurrency(events1), concurrency(eventsN)),
-        ("decay_scores", decay(events1), decay(eventsN)),
-        ("gini", gini(orders_b, cust1), gini(ordersN_b, custN)),
-        ("target_encoding", target_enc(orders_b), target_enc(ordersN_b)),
-        ("quota_sample", quota(docs1), quota(docsN)),
-        ("cusum", cusum(events1), cusum(eventsN)),
-        ("winnow_profile", winnow(docs1), winnow(docsN)),
-        ("winnow_pairs", winnow_pairs_probe(docs1), winnow_pairs_probe(docsN)),
-        ("simjoin", simjoin(docs1), simjoin(docsN)),
-        ("script_profile", script_prof(docs1), script_prof(docsN)),
-        ("extract_summary", summary(docs1), summary(docsN)),
-        (
-            "asof_enrich",
-            asof_enrich(orders_b, lineitem1),
-            asof_enrich(ordersN_b, lineitemN),
-        ),
-        ("kcore", kcore_probe(lineitem1), kcore_probe(lineitemN_sup)),
-        ("lsh_eval", lsh_eval(docs1), lsh_eval(docsN)),
-        ("ecdf", ecdf(events1), ecdf(eventsN)),
-        ("chi_square", chi2(events1), chi2(eventsN)),
-        ("survival", survival(events1), survival(eventsN)),
-        ("common_runs", common_runs(docs1), common_runs(docsN)),
-        (
-            "negative_edges",
-            negatives(orders_b, lineitem1),
-            negatives(ordersN_b, lineitemN_parts),
-        ),
-        ("rendezvous", rendezvous_probe(docs1), rendezvous_probe(docsN)),
-        ("twap", twap(events1), twap(eventsN)),
-        ("kcenter", kcenter(emb1), kcenter(embN)),
-        (
-            "labelprop",
-            labelprop_probe(orders_b, lineitem1),
-            labelprop_probe(ordersN_b, lineitemN),
-        ),
-        ("good_turing", good_turing_probe(docs1), good_turing_probe(docsN)),
-        ("epoch_plan", epoch_plan_probe(docs1), epoch_plan_probe(docsN)),
-        ("feature_hash", feature_hash_probe(docs1), feature_hash_probe(docsN)),
-        ("rare_bigram", rare_bigram_probe(docs1), rare_bigram_probe(docsN)),
-        ("kl_novelty", kl_novelty(docs1), kl_novelty(docsN)),
-        ("dispersion", dispersion_probe(docs1), dispersion_probe(docsN)),
-        ("wquantile", wquantile_probe(lineitem1), wquantile_probe(lineitemN)),
-        ("conformal", conformal_probe(orders_b), conformal_probe(ordersN_b)),
-        ("maxcover", maxcover_probe(docs1), maxcover_probe(docsN)),
-        ("hill_tail", hill_probe(docs1), hill_probe(docsN)),
-        ("ivf_default", ivf_default_probe(emb1), ivf_default_probe(embN)),
-        ("srp_default", srp_default_probe(emb1), srp_default_probe(embN)),
-        ("pack_default", pack_default_probe(docs1), pack_default_probe(docsN)),
-        ("cuped", cuped_probe(orders_b), cuped_probe(ordersN_b)),
-        ("selection", selection_probe(lineitem1), selection_probe(lineitemN)),
-        ("invindex", invindex_probe(docs1), invindex_probe(docsN)),
-        ("kstest", kstest_probe(events1), kstest_probe(eventsN)),
-        ("logrank", logrank_probe(events1), logrank_probe(eventsN)),
-        ("deltamethod", deltamethod_probe(events1), deltamethod_probe(eventsN)),
-        ("auc", auc_probe(events1), auc_probe(eventsN)),
-        ("spatial", spatial_probe(cust1, 1), spatial_probe(custN, n)),
-        ("acf", acf_probe(events1), acf_probe(eventsN)),
-        ("fdr", fdr_probe(events1), fdr_probe(eventsN)),
-        ("cmh", cmh_probe(orders_b), cmh_probe(ordersN_b)),
-        ("ndcg", ndcg_probe(docs1), ndcg_probe(docsN)),
-        ("dbscan", dbscan_probe(cust1), dbscan_probe(custN)),
-        ("rankcorr", rankcorr_probe(events1), rankcorr_probe(eventsN)),
-        ("mannkendall", mannkendall_probe(events1), mannkendall_probe(eventsN)),
-        ("mcnemar", mcnemar_probe(events1), mcnemar_probe(eventsN)),
-        ("kappa", kappa_probe(docs1), kappa_probe(docsN)),
-        ("rmst", rmst_probe(events1), rmst_probe(eventsN)),
-        ("raking", raking_probe(events1), raking_probe(eventsN)),
-        ("kruskal", kruskal_probe(events1), kruskal_probe(eventsN)),
-        ("cusumloc", cusumloc_probe(events1), cusumloc_probe(eventsN)),
-        ("brier", brier_probe(docs1), brier_probe(docsN)),
-        ("wkappa", wkappa_probe(docs1), wkappa_probe(docsN)),
-        ("dbprofile", dbprofile_probe(cust1), dbprofile_probe(custN)),
-        ("friedman", friedman_probe(events1), friedman_probe(eventsN)),
-        ("jonckheere", jonckheere_probe(events1), jonckheere_probe(eventsN)),
-        ("cliffs", cliffs_probe(docs1), cliffs_probe(docsN)),
-        ("cucconi", cucconi_probe(events1), cucconi_probe(eventsN)),
-        ("quantreg", quantreg_probe(events1), quantreg_probe(eventsN)),
-        ("ece", ece_probe(docs1), ece_probe(docsN)),
-        ("page", page_probe(events1), page_probe(eventsN)),
-        ("kendallw", kendallw_probe(events1), kendallw_probe(eventsN)),
-        ("cochranq", cochranq_probe(events1), cochranq_probe(eventsN)),
-        ("bm", bm_probe(events1), bm_probe(eventsN)),
-        ("hl", hl_probe(events1), hl_probe(eventsN)),
-        ("grubbs", grubbs_probe(events1), grubbs_probe(eventsN)),
-    ):
-        if only is not None and label not in only:
-            continue
-        timed(f"{label}_x1", d1, timings)
-        timed(f"{label}_x{n}", dn, timings)
-        ratio = timings[f"{label}_x{n}"] / max(timings[f"{label}_x1"], 1e-9)
-        timings[f"{label}_ratio"] = round(ratio, 2)
-        print(f"# {label}: x{n} / x1 = {ratio:.2f}", file=sys.stderr)
-
-    # --- engine + text families, via the REGISTERED query surface --------
-    # Replicated tables are written to a temp parquet catalog and the
-    # query functions run unchanged against it, so the probe times the
-    # exact code path the driver gates (scan included) — not a paraphrase.
-    import tempfile
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("n", nargs="?", type=int, default=8)
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", default="")
+    args = ap.parse_args()
+    only = [s.strip() for s in args.only.split(",") if s.strip()]
 
     from magi_etl_spark.queries import QUERIES
+    from magi_etl_spark.session import get_spark
 
-    orders1 = load_table(spark, sf, "orders")
-    root = tempfile.mkdtemp(prefix="magi_probe_")
-
-    def write_catalog(tag: str, k: int) -> str:
-        path = os.path.join(root, tag)
-        for name, df, ids in (
-            ("events", events1, ["event_id", "user_id"]),
-            ("part", part1, ["p_partkey"]),
-            ("documents", docs1, ["doc_id"]),
-            ("orders", orders1, ["o_orderkey", "o_custkey"]),
-        ):
-            replicate(df, ids, k, 10_000_000).write.mode("overwrite").parquet(
-                f"{path}/{name}.parquet"
+    todo = [
+        q for q in QUERIES
+        if not only or any(q == o or q.startswith(o) for o in only)
+    ]
+    spark = get_spark(app_name="magi-scale-report")
+    report: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    t0 = time.time()
+    with tempfile.TemporaryDirectory(prefix="scale-report-") as big:
+        replicate(args.sf_dir, big, args.n)
+        for name in todo:
+            try:
+                r = report[name] = measure(spark, QUERIES[name], args.sf_dir, big)
+            except Exception as e:  # noqa: BLE001 — a report records, never aborts
+                errors[name] = (str(e) or repr(e)).splitlines()[0][:400]
+                print(f"{name}: ERROR {errors[name]}", file=sys.stderr, flush=True)
+                continue
+            print(
+                f"{name}: 1x {r['wall_1x_s']:.2f}s {r['range_1x_s']}  "
+                f"{args.n}x {r['wall_nx_s']:.2f}s {r['range_nx_s']}  "
+                f"wall x{r['wall_ratio']}  rows x{r['rows_ratio']}",
+                file=sys.stderr, flush=True,
             )
-        return path
-
-    dir1 = write_catalog("x1", 1)
-    dirN = write_catalog(f"x{n}", n)
-    for label, qname in (
-        ("metric_query", "q30_metric_query_events"),
-        ("helix", "q54_helix_generic"),
-        ("vocab_coverage", "q63_vocab_coverage"),
-        # r4 warehouse-ETL family: user_id shifts per copy, so the
-        # per-user frames (SCD2 versions, rolling windows, CDC keys)
-        # grow in GROUP COUNT, not per-group size — the honest linear
-        # scaling axis for keyed operators
-        ("scd2", "q87_scd2_intervals"),
-        ("rolling", "q89_rolling_7d"),
-        ("gapfill", "q91_gapfill_interpolate"),
-        ("cdc", "q92_cdc_apply"),
-        ("profile", "q90_profile_table"),
-        ("budget_select", "q94_token_budget_select"),
-    ):
-        if only is not None and label not in only:
-            continue
-        timed(f"{label}_x1", lambda q=qname: QUERIES[q](spark, dir1), timings)
-        timed(f"{label}_x{n}", lambda q=qname: QUERIES[q](spark, dirN), timings)
-        ratio = timings[f"{label}_x{n}"] / max(timings[f"{label}_x1"], 1e-9)
-        timings[f"{label}_ratio"] = round(ratio, 2)
-        print(f"# {label}: x{n} / x1 = {ratio:.2f}", file=sys.stderr)
-
-    # --- IVF recall at scale ---------------------------------------------
-    # Pure replication makes every copy an exact duplicate (cosine ties
-    # everywhere), so copies get a tiny per-element deterministic jitter —
-    # geometry preserved, exact duplication broken.  Recall@10 of the
-    # spread-init (k-means||-style) IVF vs the exact scan is the evidence
-    # that sampled centroids hold up when the corpus grows.
-    if only is not None and "ivf_spread" not in only:
-        print(json.dumps({"probe": "scale", "scale": n, "timings": timings}))
-        spark.stop()
-        return
-
-    from magi_etl_spark.operators.similarity import (
-        cosine_topk,
-        ivf_index_sampled,
-        ivf_topk,
-    )
-
-    jitter = F.transform(
-        "embedding",
-        lambda x, i: x
-        * (
-            F.lit(1.0)
-            + ((F.col("_k") * 37 + i) % 11 - 5).cast("double") * F.lit(1e-3)
-        ),
-    )
-    copies = F.explode(F.array(*[F.lit(k) for k in range(n)])).alias("_k")
-    embJ = (
-        emb1.select("*", copies)
-        .withColumn("embedding", jitter)
-        .withColumn("vec_id", F.col("vec_id") + F.col("_k").cast("long") * 10_000_000)
-        .drop("_k")
-        .persist()
-    )
-    queries_df = embJ.where(F.col("vec_id") < 5)
-    exact = {
-        (r.query_id, r.vec_id) for r in cosine_topk(embJ, queries_df, k=10).collect()
-    }
-    t0 = time.perf_counter()
-    assigned, cents = ivf_index_sampled(embJ, n_lists=16, init="spread", seed=7)
-    approx = ivf_topk(assigned, cents, queries_df, k=10, n_probe=4)
-    got = {(r.query_id, r.vec_id) for r in approx.collect()}
-    timings[f"ivf_spread_x{n}"] = round(time.perf_counter() - t0, 3)
-    recall = len(exact & got) / max(len(exact), 1)
-    timings[f"ivf_spread_recall_x{n}"] = round(recall, 3)
-    print(f"# ivf spread recall@10 at x{n}: {recall:.3f}", file=sys.stderr)
-
-    print(json.dumps({"probe": "scale", "scale": n, "timings": timings}))
     spark.stop()
+    print(json.dumps({
+        "report": "scale", "n": args.n, "sf_dir": args.sf_dir,
+        "wall_s": round(time.time() - t0, 1), "queries": report, "errors": errors,
+    }))
+    sys.exit(1 if errors else 0)
 
 
 if __name__ == "__main__":
