@@ -7,19 +7,49 @@ keyed by the config's md5 (30-day TTL), a not-exists lock with its own TTL
 so concurrent identical queries compute once.  Here the store is Parquet +
 a JSON sidecar; the lock is an O_CREAT|O_EXCL lockfile.  On a cluster the
 same layout works on any shared filesystem / object store prefix.
+
+The sidecar ``<key>.meta.json`` holds ``created_at`` (the clock at fill,
+for the TTL), ``key`` and ``schema`` (the result's ``StructType`` as
+JSON).  Every stored result is read with that schema, so a hit builds
+its frame without Spark's Parquet schema-inference job (which reads the
+footers in a job of its own) and runs exactly one job, the caller's
+action.  The read schema equals the inferred one: Spark makes every
+field of a file source nullable either way.  A sidecar without
+``schema`` is a miss: the result is computed again and the sidecar
+rewritten.  Sidecars are written to a temporary file and renamed into
+place, so a polling caller or ``evict_expired`` never reads half of one.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_TTL_SECONDS = 60 * 60 * 24 * 30  # reference connectors.py:381
 LOCK_TTL_SECONDS = 3600  # reference connectors.py:416
+
+
+def _read_json(path: str) -> dict:
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_json(path: str, obj: dict) -> None:
+    # temp file + rename: a reader sees the old file or the whole new one
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _read_stored(spark: SparkSession, path: str, schema: dict) -> DataFrame:
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
 
 
 class ResultCache:
@@ -40,15 +70,14 @@ class ResultCache:
 
     def lookup(self, spark: SparkSession, key: str) -> DataFrame | None:
         path, meta, _ = self._paths(key)
-        if not os.path.exists(meta):
-            return None
         try:
-            created = json.load(open(meta))["created_at"]
+            sidecar = _read_json(meta)
+            created, schema = sidecar["created_at"], sidecar["schema"]
         except (ValueError, KeyError, OSError):
             return None
         if self.clock() - created > self.ttl_seconds:
             return None
-        return spark.read.parquet(path)
+        return _read_stored(spark, path, schema)
 
     def _acquire_lock(self, lock: str) -> bool:
         # nx-with-expiry semantics: a stale lockfile (older than the lock
@@ -60,7 +89,8 @@ class ResultCache:
             return True
         except FileExistsError:
             try:
-                held_since = float(open(lock).read() or 0)
+                with open(lock) as f:
+                    held_since = float(f.read() or 0)
             except (OSError, ValueError):
                 held_since = 0.0
             if self.clock() - held_since > LOCK_TTL_SECONDS:
@@ -92,13 +122,16 @@ class ResultCache:
             try:
                 df = compute()
                 df.write.mode("overwrite").parquet(path)
-                json.dump({"created_at": self.clock(), "key": key}, open(meta, "w"))
+                schema = df.schema.jsonValue()
+                _write_json(
+                    meta, {"created_at": self.clock(), "key": key, "schema": schema}
+                )
             finally:
                 try:
                     os.unlink(lock)
                 except FileNotFoundError:
                     pass
-            return spark.read.parquet(path)
+            return _read_stored(spark, path, schema)
         deadline = self.clock() + wait_timeout_seconds
         while self.clock() < deadline:
             hit = self.lookup(spark, key)
@@ -119,7 +152,7 @@ class ResultCache:
             key = meta_name[: -len(".meta.json")]
             path, meta, _ = self._paths(key)
             try:
-                created = json.load(open(meta))["created_at"]
+                created = _read_json(meta)["created_at"]
             except (ValueError, KeyError, OSError):
                 created = 0
             if self.clock() - created > self.ttl_seconds:

@@ -137,3 +137,103 @@ def test_result_cache_ttl_and_singleflight(spark, tmp_path):
     assert "k1" in evicted and "k2" not in evicted
     assert cache.lookup(spark, "k1") is None
     assert cache.lookup(spark, "k2") is not None
+
+
+def _jobs_run(spark, group, action):
+    """``(action(), number of Spark jobs it ran)``, counted under a job
+    group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_result_cache_hit_runs_one_job(spark, tmp_path):
+    cache = ResultCache(str(tmp_path))
+    cache.get_or_compute(spark, "k", lambda: spark.range(5))
+    rows, jobs = _jobs_run(
+        spark,
+        "cache-hit-one-job",
+        lambda: cache.get_or_compute(spark, "k", lambda: spark.range(5)).collect(),
+    )
+    assert sorted(r.id for r in rows) == list(range(5))
+    # the collect only: the schema comes from the sidecar, not a footer job
+    assert jobs == 1
+
+
+def test_result_cache_fill_reads_without_inference(spark, tmp_path):
+    cache = ResultCache(str(tmp_path))
+
+    def compute():
+        return spark.range(5).selectExpr("id", "id * 2 AS twice")
+
+    _, write_jobs = _jobs_run(
+        spark,
+        "cache-plain-write",
+        lambda: compute().write.parquet(str(tmp_path / "plain")),
+    )
+    df, fill_jobs = _jobs_run(
+        spark, "cache-fill", lambda: cache.get_or_compute(spark, "k", compute)
+    )
+    # the fill runs the write's jobs and nothing else
+    assert fill_jobs == write_jobs
+    rows, read_jobs = _jobs_run(spark, "cache-fill-read", df.collect)
+    assert read_jobs == 1
+    assert sorted((r.id, r.twice) for r in rows) == [(i, 2 * i) for i in range(5)]
+
+
+def test_result_cache_schema_matches_inference(spark, tmp_path):
+    import decimal
+
+    cache = ResultCache(str(tmp_path))
+
+    def compute():
+        df = spark.createDataFrame(
+            [
+                (
+                    1,
+                    ["a", None],
+                    (2, "x"),
+                    {"k": 1.5},
+                    decimal.Decimal("12.34"),
+                    dt.datetime(2025, 2, 20, 12, 30),
+                )
+            ],
+            "id long not null, tags array<string>, "
+            "s struct<n: int not null, t: string>, m map<string, double>, "
+            "amount decimal(12, 2), ts timestamp",
+        )
+        return df.withColumn("nn", F.lit(7))  # a non-null literal column
+
+    assert not compute().schema["id"].nullable
+    cache.get_or_compute(spark, "k", compute)
+    hit = cache.lookup(spark, "k")
+    inferred = spark.read.parquet(str(tmp_path / "k"))
+    assert hit.schema == inferred.schema
+    assert hit.collect() == inferred.collect()
+
+
+def test_result_cache_sidecar_without_schema_is_a_miss(spark, tmp_path):
+    import json
+
+    cache = ResultCache(str(tmp_path))
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return spark.range(3)
+
+    cache.get_or_compute(spark, "k", compute)
+    meta = tmp_path / "k.meta.json"
+    old = json.loads(meta.read_text())
+    del old["schema"]
+    meta.write_text(json.dumps(old))
+    assert cache.lookup(spark, "k") is None
+    df = cache.get_or_compute(spark, "k", compute)
+    assert len(calls) == 2 and df.count() == 3
+    assert json.loads(meta.read_text())["schema"] == spark.range(3).schema.jsonValue()
+    assert [p.name for p in tmp_path.iterdir() if p.suffix == ".tmp"] == []
