@@ -5,8 +5,10 @@ Mirrors the reference's Redis cache/lock semantics
 (``run_queries_with_cache``, reference ``connectors.py:367-452``): result
 keyed by the config's md5 (30-day TTL), a not-exists lock with its own TTL
 so concurrent identical queries compute once.  Here the store is Parquet +
-a JSON sidecar; the lock is an O_CREAT|O_EXCL lockfile.  On a cluster the
-same layout works on any shared filesystem / object store prefix.
+a JSON sidecar; the lock is a lockfile hard-linked into place with its
+timestamp already written, so no contender ever reads an empty lock as
+stale.  On a cluster the same layout works on any shared filesystem
+that supports hard links.
 
 The sidecar ``<key>.meta.json`` holds ``created_at`` (the clock at fill,
 for the TTL), ``key`` and ``schema`` (the result's ``StructType`` as
@@ -82,24 +84,28 @@ class ResultCache:
     def _acquire_lock(self, lock: str) -> bool:
         # nx-with-expiry semantics: a stale lockfile (older than the lock
         # TTL) is broken, mirroring Redis set(nx=True, ex=3600)
+        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
+        with os.fdopen(fd, "w") as f:
+            f.write(str(self.clock()))
         try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(self.clock()).encode())
-            os.close(fd)
+            os.link(tmp, lock)  # fails if held; never exposes an empty lock
             return True
         except FileExistsError:
+            pass
+        finally:
+            os.unlink(tmp)
+        try:
+            with open(lock) as f:
+                held_since = float(f.read())
+        except (OSError, ValueError):
+            held_since = 0.0
+        if self.clock() - held_since > LOCK_TTL_SECONDS:
             try:
-                with open(lock) as f:
-                    held_since = float(f.read() or 0)
-            except (OSError, ValueError):
-                held_since = 0.0
-            if self.clock() - held_since > LOCK_TTL_SECONDS:
-                try:
-                    os.unlink(lock)
-                except FileNotFoundError:
-                    pass
-                return self._acquire_lock(lock)
-            return False
+                os.unlink(lock)
+            except FileNotFoundError:
+                pass
+            return self._acquire_lock(lock)
+        return False
 
     def get_or_compute(
         self,

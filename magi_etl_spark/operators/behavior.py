@@ -70,8 +70,8 @@ def funnel_stages(
     ``quantile_line``).  They follow the process-wide checkpoint mode:
     plan-only tooling opts out with
     ``magi_etl_spark.chkpt.set_checkpoint_mode("off")``, and a cluster
-    picks a fault-tolerant mode (``reliable`` or ``persist``) instead of
-    the executor-local default.
+    picks the fault-tolerant ``reliable`` mode instead of the
+    executor-local default.
     """
     if not stages:
         raise ValueError("funnel_stages needs at least one stage")

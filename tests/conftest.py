@@ -35,3 +35,33 @@ def built_query(spark, sf_dir):
         return frames[name]
 
     return build
+
+
+@pytest.fixture(scope="session")
+def jobs_run(spark):
+    """``jobs_run(group, action)`` returns ``(action(), n)``, where n is
+    the number of Spark jobs the action ran, counted under a job group
+    once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+
+    def run(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def checkpoint_mode():
+    """``checkpoint_mode(mode)`` sets the process-wide ``chkpt`` mode for
+    the rest of the test; the previous mode is restored at teardown."""
+    from magi_etl_spark import chkpt
+
+    prev = chkpt.checkpoint_mode()
+    yield chkpt.set_checkpoint_mode
+    chkpt.set_checkpoint_mode(prev)

@@ -46,7 +46,7 @@ LEDGER_SCALES = ("sf0.01", "sf0.1")
 # 46 dependents once the operator barriers were routed through
 # ``chkpt.materialize``; its extra gate is tests/test_chkpt_single_path.py
 # (every routed operator family against its oracle under the
-# ``persist`` and ``reliable`` modes) and tests/test_r15_fixes.py.
+# ``reliable`` mode) and tests/test_r15_fixes.py.
 EXEMPT = frozenset({
     "magi_etl_spark/chkpt.py",
     "magi_etl_spark/tables.py",

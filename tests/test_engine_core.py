@@ -4,6 +4,7 @@ AnchorCalendar, result cache."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -139,24 +140,10 @@ def test_result_cache_ttl_and_singleflight(spark, tmp_path):
     assert cache.lookup(spark, "k2") is not None
 
 
-def _jobs_run(spark, group, action):
-    """``(action(), number of Spark jobs it ran)``, counted under a job
-    group once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setJobGroup("", "")
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_result_cache_hit_runs_one_job(spark, tmp_path):
+def test_result_cache_hit_runs_one_job(spark, tmp_path, jobs_run):
     cache = ResultCache(str(tmp_path))
     cache.get_or_compute(spark, "k", lambda: spark.range(5))
-    rows, jobs = _jobs_run(
-        spark,
+    rows, jobs = jobs_run(
         "cache-hit-one-job",
         lambda: cache.get_or_compute(spark, "k", lambda: spark.range(5)).collect(),
     )
@@ -165,23 +152,37 @@ def test_result_cache_hit_runs_one_job(spark, tmp_path):
     assert jobs == 1
 
 
-def test_result_cache_fill_reads_without_inference(spark, tmp_path):
+def test_result_cache_lock_always_holds_its_timestamp(spark, tmp_path):
+    # whenever the holder reads the clock while the lock exists, a
+    # contender tries the lock: it must find it held, not empty and stale
+    lock, seen = str(tmp_path / "k.lock"), []
+    contender = ResultCache(str(tmp_path), clock=lambda: 1e9)
+
+    def clock():
+        if os.path.exists(lock):
+            seen.append(contender._acquire_lock(lock))
+        return 1e9
+
+    cache = ResultCache(str(tmp_path), clock=clock)
+    assert cache.get_or_compute(spark, "k", lambda: spark.range(3)).count() == 3
+    assert seen and not any(seen), seen
+
+
+def test_result_cache_fill_reads_without_inference(spark, tmp_path, jobs_run):
     cache = ResultCache(str(tmp_path))
 
     def compute():
         return spark.range(5).selectExpr("id", "id * 2 AS twice")
 
-    _, write_jobs = _jobs_run(
-        spark,
-        "cache-plain-write",
-        lambda: compute().write.parquet(str(tmp_path / "plain")),
+    _, write_jobs = jobs_run(
+        "cache-plain-write", lambda: compute().write.parquet(str(tmp_path / "plain"))
     )
-    df, fill_jobs = _jobs_run(
-        spark, "cache-fill", lambda: cache.get_or_compute(spark, "k", compute)
+    df, fill_jobs = jobs_run(
+        "cache-fill", lambda: cache.get_or_compute(spark, "k", compute)
     )
     # the fill runs the write's jobs and nothing else
     assert fill_jobs == write_jobs
-    rows, read_jobs = _jobs_run(spark, "cache-fill-read", df.collect)
+    rows, read_jobs = jobs_run("cache-fill-read", df.collect)
     assert read_jobs == 1
     assert sorted((r.id, r.twice) for r in rows) == [(i, 2 * i) for i in range(5)]
 

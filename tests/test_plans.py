@@ -53,7 +53,7 @@ def test_topk_uses_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in p
 
 
-def test_blocked_neardup_spreads_join_input(spark, sf_dir):
+def test_blocked_neardup_spreads_join_input(spark, sf_dir, checkpoint_mode):
     """Regression lock for the r4 fan_out fix: blocked_neardup_pairs
     feeds a bucket-JOIN output whose row count AQE coalesces to a few
     partitions, while the downstream cost is O(pairs-per-bucket).  The
@@ -62,7 +62,6 @@ def test_blocked_neardup_spreads_join_input(spark, sf_dir):
     the whole embedding-dedup family runs ~8x slower (observed at
     sf0.1 when the hint was missing).  Built under ``off`` mode, so the
     exchange is not hidden inside the operator's ``chkpt`` barrier."""
-    from magi_etl_spark import chkpt
     from magi_etl_spark.operators.similarity import (
         blocked_neardup_pairs,
         srp_lsh_buckets,
@@ -73,11 +72,8 @@ def test_blocked_neardup_spreads_join_input(spark, sf_dir):
     em = load_table(spark, sf_dir, "embeddings")
     buckets = srp_lsh_buckets(em, seed_planes=_dedup_planes())
     blocked = em.join(buckets, "vec_id")
-    prev = chkpt.set_checkpoint_mode("off")
-    try:
-        out = blocked_neardup_pairs(blocked, "bucket", threshold=0.95)
-    finally:
-        chkpt.set_checkpoint_mode(prev)
+    checkpoint_mode("off")
+    out = blocked_neardup_pairs(blocked, "bucket", threshold=0.95)
     p = out._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in p, p[:2000]
 

@@ -34,30 +34,25 @@ from pyspark.sql import functions as F
 # --- 1: q245 builds its plan with zero eager jobs ---------------------------
 
 
-def test_q245_constructs_lazily_no_guard_job(spark, sf_dir):
+def test_q245_constructs_lazily_no_guard_job(spark, sf_dir, jobs_run):
     from magi_etl_spark.queries.extensions_r12 import q245_rank_correlation
 
     # warm the memoized parquet catalog first: in a fresh session the
     # FIRST load_table runs one file-listing/schema job that is not the
     # guard pass this test pins
     q245_rank_correlation(spark, sf_dir)
-    sc = spark.sparkContext
-    group = "r14fix-q245-construct"
-    sc.setJobGroup(group, "q245 plan construction must be lazy")
-    try:
-        df = q245_rank_correlation(spark, sf_dir)
-        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], (
-            f"constructing q245 ran {len(jobs)} eager job(s) — the "
-            "max_cells guard pass is back inside the bench's timed region"
-        )
-    finally:
-        sc.setJobGroup("", "")
+    df, jobs = jobs_run(
+        "r14fix-q245-construct", lambda: q245_rank_correlation(spark, sf_dir)
+    )
+    assert jobs == 0, (
+        f"constructing q245 ran {jobs} eager job(s) — the "
+        "max_cells guard pass is back inside the bench's timed region"
+    )
     # and the plan still computes (the guard skip changed no semantics)
     assert {"event_type", "n", "rho", "tau_b"} <= set(df.columns)
 
 
-def test_kendall_max_cells_none_skips_guard_but_default_still_bites(spark):
+def test_kendall_max_cells_none_skips_guard_but_default_still_bites(spark, jobs_run):
     from magi_etl_spark.operators.rankcorr import kendall_tau_b
 
     df = spark.range(40).select(
@@ -69,14 +64,11 @@ def test_kendall_max_cells_none_skips_guard_but_default_still_bites(spark):
     with pytest.raises(ValueError, match="max_cells"):
         kendall_tau_b(df, ["g"], F.col("x"), F.col("y"), max_cells=10)
     # None skips the validation pass entirely: construction is lazy
-    sc = spark.sparkContext
-    group = "r14fix-kendall-none"
-    sc.setJobGroup(group, "max_cells=None must not run the guard job")
-    try:
-        out = kendall_tau_b(df, ["g"], F.col("x"), F.col("y"), max_cells=None)
-        assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
-    finally:
-        sc.setJobGroup("", "")
+    out, jobs = jobs_run(
+        "r14fix-kendall-none",
+        lambda: kendall_tau_b(df, ["g"], F.col("x"), F.col("y"), max_cells=None),
+    )
+    assert jobs == 0
     assert out.collect()[0].n == 40
 
 

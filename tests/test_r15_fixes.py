@@ -19,11 +19,11 @@ r14 ADVICE items, each pinned here:
    (a) documented at the operator API level (``funnel_stages``
    docstring) and (b) escapable via the new process-wide
    ``magi_etl_spark.chkpt`` knob — ``local`` (sandbox default),
-   ``reliable`` (cluster checkpoint dir), ``persist`` (DISK_ONLY,
-   fault-tolerant via kept lineage), ``off`` (plan-only tooling).
+   ``reliable`` (cluster checkpoint dir), ``off`` (plan-only tooling).
    The r14-wave operators route through ``chkpt.materialize``;
-   exercised here in local, persist, and off modes on ``friedman_test``
-   (the r14 VERDICT item-4 "one test exercising both modes").
+   exercised here in local and off modes on ``friedman_test`` (the r14
+   VERDICT item-4 "one test exercising both modes"); ``reliable`` runs
+   against the oracles in ``tests/test_chkpt_single_path.py``.
 """
 
 from __future__ import annotations
@@ -96,28 +96,18 @@ def _friedman(spark):
     return friedman_test(df, ["key"], "b", "g", F.col("v")).collect()
 
 
-def test_checkpoint_modes_agree_on_a_checkpointing_operator(spark):
-    from magi_etl_spark import chkpt
-
+def test_checkpoint_modes_agree_on_a_checkpointing_operator(spark, checkpoint_mode):
     base = _friedman(spark)
     assert base and base[0]["n_blocks"] == 4
-    for mode in ("persist", "off"):
-        prev = chkpt.set_checkpoint_mode(mode)
-        try:
-            assert _friedman(spark) == base, f"mode {mode} changed results"
-        finally:
-            chkpt.set_checkpoint_mode(prev)
-            # persist mode registers cache entries: release must drop them
-            # for the suite's "cache manager stays empty" tests to pass
-            chkpt.release()
+    checkpoint_mode("off")
+    assert _friedman(spark) == base, "mode off changed results"
 
 
-def test_checkpoint_mode_off_constructs_plan_only(spark):
+def test_checkpoint_mode_off_constructs_plan_only(spark, jobs_run, checkpoint_mode):
     """off-mode is the plan-only opt-out: constructing a routed
     operator's DataFrame must run ZERO Spark jobs."""
     from fractions import Fraction
 
-    from magi_etl_spark import chkpt
     from magi_etl_spark.operators.behavior import funnel_stages
     from magi_etl_spark.operators.friedman import friedman_test
     from magi_etl_spark.operators.prefix import ranked_prefix_sum
@@ -140,28 +130,23 @@ def test_checkpoint_mode_off_constructs_plan_only(spark):
         [(1, 0, "a"), (2, 0, "a")], "doc_id long, pos int, tok string"
     )
     pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    prev = chkpt.set_checkpoint_mode("off")
-    sc = spark.sparkContext
-    group = "r15fix-chkpt-off-construct"
-    sc.setJobGroup(group, "off-mode construction must be lazy")
-    try:
+
+    def construct():
         friedman_test(df, ["key"], "b", "g", F.col("v"))
         funnel_stages(events, ["view", "buy"])
         similarity_join(sets, Fraction(1, 2))
         longest_common_runs(pairs, positions)
         ranked_prefix_sum(sets, [F.col("doc_id"), F.col("tok")], "doc_id")
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], (
-            f"off-mode construction ran {len(jobs)} eager job(s)"
-        )
-    finally:
-        sc.setJobGroup("", "")
-        chkpt.set_checkpoint_mode(prev)
+
+    checkpoint_mode("off")
+    _, jobs = jobs_run("r15fix-chkpt-off-construct", construct)
+    assert jobs == 0, f"off-mode construction ran {jobs} eager job(s)"
 
 
 def test_checkpoint_mode_validates_names():
     from magi_etl_spark import chkpt
 
-    with pytest.raises(ValueError, match="not one of"):
-        chkpt.set_checkpoint_mode("banana")
-    assert chkpt.checkpoint_mode() in ("local", "reliable", "persist", "off")
+    for name in ("banana", "persist"):
+        with pytest.raises(ValueError, match="not one of"):
+            chkpt.set_checkpoint_mode(name)
+    assert chkpt.checkpoint_mode() in ("local", "reliable", "off")
