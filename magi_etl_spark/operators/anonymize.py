@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import md5_u32
+
 
 def bucketize(col: Column, width: float) -> Column:
     """Generalization helper: floor-bucket a numeric column into
@@ -94,12 +96,7 @@ def dp_noisy_counts(
         for c in group_cols
     ]
     key = F.concat_ws("\x1f", *parts)
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{seed}|"), key)), 1, 8), 16, 10
-        ).cast("long")
-        / F.lit(4294967296.0)
-    )
+    u = md5_u32(F.concat(F.lit(f"{seed}|"), key)) / F.lit(4294967296.0)
     x = u - F.lit(0.5)
     b = F.lit(1.0 / float(epsilon))
     noise = -b * F.signum(x) * F.log(

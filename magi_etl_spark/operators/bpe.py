@@ -39,8 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from magi_etl_spark.chkpt import materialize
-
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def _adjacent_pairs(syms: Column) -> Column:
@@ -64,12 +63,8 @@ def bpe_word_freqs(
     """``(word, freq, sym)``: the corpus word vocabulary with each word
     pre-segmented into characters in the padded double-space encoding.
     The ONLY corpus-scan pass of BPE training."""
-    words = df.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("word")
-    )
-    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+    stream = df.select(F.explode(words(F.col(text_col))).alias("word"))
+    vocab = stream.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     chars = F.filter(F.split(F.col("word"), ""), lambda x: x != "")
     return vocab.select(
         "word",
@@ -366,9 +361,7 @@ def bpe_encode_docs(
     seg = vocab.select("word", _syms(F.col("sym")).alias("word_syms"))
     toks = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("pos", "word"),
+        F.posexplode(words(F.col(text_col))).alias("pos", "word"),
     )
     flat = (
         toks.join(seg, "word")

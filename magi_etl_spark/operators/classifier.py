@@ -30,11 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
-
-def _tokens(text: Column) -> Column:
-    return F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 0)
 
 
 def nb_token_model(
@@ -51,7 +48,7 @@ def nb_token_model(
     the model is one aggregate + one narrow projection."""
     toks = seeds.select(
         F.col(label_col).cast("boolean").alias("is_pos"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(words(F.col(text_col))).alias("tok"),
     )
     counts = toks.groupBy("tok").agg(
         F.sum(F.when(F.col("is_pos"), 1).otherwise(0)).alias("c_pos"),
@@ -89,7 +86,7 @@ def nb_score(
     length-invariant and its magnitude rounding-stable.  Documents
     with no ``[a-z]+`` token at all drop out, as in the oracle."""
     toks = df.select(
-        F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("tok")
+        F.col(id_col), F.explode(words(F.col(text_col))).alias("tok")
     )
     return (
         toks.join(model.select("tok", "llr"), "tok", "left")

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def token_dispersion(
@@ -57,9 +57,7 @@ def token_dispersion(
     (zeros included analytically, never materialized)."""
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("tok"),
+        F.explode(words(F.col(text_col))).alias("tok"),
     )
     td = toks.groupBy("doc", "tok").agg(F.count(F.lit(1)).alias("c"))
     per_tok = td.groupBy("tok").agg(

@@ -18,14 +18,11 @@ stays exactly reproducible in SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
-
-def _n_tokens(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 0))
 
 
 def domain_stats(
@@ -40,7 +37,7 @@ def domain_stats(
     different operator)."""
     per = df.select(
         F.col(domain_col),
-        _n_tokens(F.col(text_col)).alias("n_toks"),
+        F.size(words(F.col(text_col))).alias("n_toks"),
         F.md5(F.col(text_col)).alias("fp"),
     )
     fpc = per.groupBy(domain_col, "fp").agg(F.count(F.lit(1)).alias("c"))

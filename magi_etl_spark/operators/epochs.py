@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from magi_etl_spark.functions import pinned_partition
-
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def source_token_counts(
@@ -35,11 +34,7 @@ def source_token_counts(
     """``source, available_tokens``: corpus token ledger per source."""
     return df.groupBy(F.col(source_col).alias("source")).agg(
         F.sum(
-            F.size(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(_WORD_RE), 0
-                )
-            ).cast("long")
+            F.size(words(F.col(text_col))).cast("long")
         ).alias("available_tokens")
     )
 

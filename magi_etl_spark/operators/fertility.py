@@ -14,9 +14,10 @@ costs one probe, not one re-segmentation) and rolls up per group.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import words
 from magi_etl_spark.operators.bpe import (
     _syms,
     bpe_apply,
@@ -24,11 +25,6 @@ from magi_etl_spark.operators.bpe import (
     bpe_word_freqs,
 )
 
-_WORD_RE = "[a-z]+"
-
-
-def _tokens(text: Column) -> Column:
-    return F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 0)
 
 
 def tokenizer_fertility(
@@ -54,7 +50,7 @@ def tokenizer_fertility(
         "word", F.size(_syms(F.col("sym"))).alias("n_sym")
     )
     stream = df.select(
-        F.col(by), F.explode(_tokens(F.col(text_col))).alias("word")
+        F.col(by), F.explode(words(F.col(text_col))).alias("word")
     )
     n_words = F.count(F.lit(1))
     n_toks = F.sum("n_sym")

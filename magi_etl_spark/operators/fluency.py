@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def doc_bigrams(
@@ -33,9 +33,7 @@ def doc_bigrams(
     """One row per in-document bigram occurrence: ``doc_id, bigram``."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("pos", "tok"),
+        F.posexplode(words(F.col(text_col))).alias("pos", "tok"),
     )
     byd = W.partitionBy("doc_id").orderBy("pos")
     return (

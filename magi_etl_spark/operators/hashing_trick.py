@@ -16,16 +16,10 @@ aggregation grain, no vocabulary table anywhere (that's the trick).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
-
-
-def _h32(*cols) -> Column:
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 8), 16, 10
-    ).cast("long")
+from magi_etl_spark.functions.text import md5_u32, words
 
 
 def hashed_tokens(
@@ -38,17 +32,15 @@ def hashed_tokens(
     """One row per token occurrence: ``doc_id, tok, bucket, sign``."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("tok"),
+        F.explode(words(F.col(text_col))).alias("tok"),
     )
+    bucket = md5_u32(F.concat_ws("|", F.lit(f"{seed}|b"), F.col("tok")))
+    sign = md5_u32(F.concat_ws("|", F.lit(f"{seed}|s"), F.col("tok")))
     return toks.select(
         "doc_id",
         "tok",
-        (_h32(F.lit(f"{seed}|b"), F.col("tok")) % n_buckets).alias("bucket"),
-        F.when(_h32(F.lit(f"{seed}|s"), F.col("tok")) % 2 == 0, 1)
-        .otherwise(-1)
-        .alias("sign"),
+        (bucket % n_buckets).alias("bucket"),
+        F.when(sign % 2 == 0, 1).otherwise(-1).alias("sign"),
     )
 
 

@@ -27,13 +27,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from magi_etl_spark.chkpt import materialize
+from magi_etl_spark.functions.text import words
 
-_WORD_RE = "[a-z]+"
 _HEX = "0123456789abcdef"
-
-
-def _tokens(text: Column) -> Column:
-    return F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 0)
 
 
 def _ngrams_of(col: str, n: int) -> Column:
@@ -74,7 +70,7 @@ def dsir_scores(
     bucket distributions.  Positive = target-like."""
     def hist(df: DataFrame, name: str) -> DataFrame:
         toks = df.select(
-            F.explode(_tokens(F.col(text_col))).alias("tok")
+            F.explode(words(F.col(text_col))).alias("tok")
         ).select(_bucket(F.col("tok"), n_buckets).alias("bucket"))
         return toks.groupBy("bucket").agg(F.count(F.lit(1)).alias(name))
 
@@ -114,7 +110,7 @@ def dsir_scores(
         ).alias("w"),
     )
     stream = raw.select(
-        F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("tok")
+        F.col(id_col), F.explode(words(F.col(text_col))).alias("tok")
     ).select(id_col, _bucket(F.col("tok"), n_buckets).alias("bucket"))
     return (
         stream.join(F.broadcast(w), "bucket")
@@ -151,7 +147,7 @@ def ngram_novelty(
     # skip CSE, so slicing the split EXPRESSION inside the lambda would
     # re-tokenize the document once per gram (measured 8x at sf0.1).
     garr = materialize(
-        df.select(F.col(id_col), _tokens(F.col(text_col)).alias("_tk"))
+        df.select(F.col(id_col), words(F.col(text_col)).alias("_tk"))
         .select(F.col(id_col), F.array_distinct(_ngrams_of("_tk", n)).alias("_g"))
         .where(F.size("_g") > 0)
     )
@@ -206,7 +202,7 @@ def duplicated_spans(
     # token array bound to a column first — see ngram_novelty's note on
     # interpreted HOFs skipping CSE
     sarr = materialize(
-        df.select(F.col(id_col), _tokens(F.col(text_col)).alias("_tk"))
+        df.select(F.col(id_col), words(F.col(text_col)).alias("_tk"))
         .select(F.col(id_col), _ngrams_of("_tk", n).alias("_s"))
         .where(F.size("_s") > 0)
     )
@@ -284,7 +280,7 @@ def remove_duplicated_spans(
     not a token-grain anti-join plus ordered re-aggregation.  The old
     shape exploded the corpus to token rows twice and shuffled them
     through an anti-join and a collect_list sort; identical output."""
-    toks = _tokens(F.col(text_col))
+    toks = words(F.col(text_col))
     tokf = materialize(
         df.select(F.col(id_col), toks.alias("_tk")).where(F.size("_tk") > 0)
     )

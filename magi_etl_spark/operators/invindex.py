@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def build_postings(
@@ -44,11 +44,7 @@ def build_postings(
     return (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(_WORD_RE), 0
-                )
-            ).alias("tok"),
+            F.explode(words(F.col(text_col))).alias("tok"),
         )
         .groupBy("tok", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))

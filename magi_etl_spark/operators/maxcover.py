@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magi_etl_spark.chkpt import materialize
-
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def _units(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -46,9 +45,7 @@ def _units(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     n-gram (n = 1 gives plain tokens)."""
     toks = df.select(
         F.col(id_col).alias("_doc"),
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(_WORD_RE), 0
-        ).alias("_tk"),
+        words(F.col(text_col)).alias("_tk"),
     )
     if n == 1:
         unit = F.explode("_tk").alias("_tok")

@@ -22,13 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import md5_u32
+
 
 def md5_fold(key: Column, n_folds: int, seed: str = "fold") -> Column:
     """Deterministic fold id in [0, n_folds): 32-bit md5 prefix mod n."""
-    h = F.md5(F.concat(F.lit(f"{seed}|"), key.cast("string")))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % n_folds).cast(
-        "int"
-    )
+    h = md5_u32(F.concat(F.lit(f"{seed}|"), key.cast("string")))
+    return (h % n_folds).cast("int")
 
 
 def target_encode_kfold(

@@ -34,12 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magi_etl_spark.chkpt import materialize
-
-
-def _h32(*cols) -> F.Column:
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 8), 16, 10
-    ).cast("long")
+from magi_etl_spark.functions.text import md5_u32
 
 
 def auto_bucket_count(n_dst: int, target: int = 64) -> int:
@@ -97,7 +92,10 @@ def negative_edge_samples(
         n_buckets = auto_bucket_count(dst.count())
     dstb = dst.select(
         "dst",
-        (_h32(F.lit(f"{seed}|b"), F.col("dst")) % n_buckets).alias("_b"),
+        (
+            md5_u32(F.concat_ws("|", F.lit(f"{seed}|b"), F.col("dst")))
+            % n_buckets
+        ).alias("_b"),
     )
     trials = src.select(
         "src",
@@ -106,10 +104,13 @@ def negative_edge_samples(
         ),
     ).withColumn(
         "_b",
-        _h32(F.lit(f"{seed}|t"), F.col("src"), F.col("trial")) % n_buckets,
+        md5_u32(F.concat_ws("|", F.lit(f"{seed}|t"), F.col("src"), F.col("trial")))
+        % n_buckets,
     )
-    rank = _h32(
-        F.lit(f"{seed}|p"), F.col("src"), F.col("trial"), F.col("dst")
+    rank = md5_u32(
+        F.concat_ws(
+            "|", F.lit(f"{seed}|p"), F.col("src"), F.col("trial"), F.col("dst")
+        )
     )
     # r15 optimization (guide §1.2 "per-task work"): the within-bucket
     # argmin was ``min_by(dst, struct(rank, dst))`` — a struct-ordered

@@ -9,10 +9,8 @@ map-side-combined aggregates over exploded tokens, the model tables are
 vocabulary-sized keyed frames joined back on the token keys, and
 nothing non-scalar is collected.
 
-Tokenization here is the deliberately simple lowercase ``[a-z]+`` used
-by the BPE trainer (``operators/bpe.py``) — self-contained so these
-modules do not perturb the gate-verified ``operators/text.py``
-surface.
+Tokenization here is the deliberately simple lowercase ``[a-z]+``
+(``functions.text.words``) the BPE trainer (``operators/bpe.py``) uses.
 """
 
 from __future__ import annotations
@@ -20,11 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
-
-def _tokens(text: Column) -> Column:
-    return F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 0)
 
 
 def _adjacent(toks: Column) -> Column:
@@ -43,7 +38,7 @@ def doc_bigrams(
     # input three times (size + two slices), which re-ran the regexp
     # tokenize 3x per row when handed the raw expression (r15)
     return (
-        df.select(F.col(id_col), _tokens(F.col(text_col)).alias("_tk"))
+        df.select(F.col(id_col), words(F.col(text_col)).alias("_tk"))
         .select(F.col(id_col), F.explode(_adjacent(F.col("_tk"))).alias("p"))
         .select(id_col, F.col("p.l").alias("l"), F.col("p.r").alias("r"))
     )
@@ -79,7 +74,7 @@ def bigram_logprob_scores(
     model = bg.groupBy("l", "r").agg(F.count(F.lit(1)).alias("c_lr"))
     left_tot = model.groupBy("l").agg(F.sum("c_lr").alias("c_l"))
     v = df.select(
-        F.explode(_tokens(F.col(text_col))).alias("tok")
+        F.explode(words(F.col(text_col))).alias("tok")
     ).agg(F.count_distinct("tok").alias("v_size"))
     scored = (
         bg.join(model, ["l", "r"])
@@ -129,7 +124,7 @@ def top_ngrams(
         lambda x, i: F.array_join(F.slice(toks, i + 1, n), " "),
     )
     rows = df.select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("_tk")
+        F.col(id_col), words(F.col(text_col)).alias("_tk")
     ).select(F.col(id_col), F.explode(grams).alias("ngram"))
     # two-stage aggregate instead of count_distinct: the (ngram, doc)
     # pre-aggregate map-side-combines within-document repetition (the

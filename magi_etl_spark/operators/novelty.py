@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def source_kl_novelty(
@@ -50,9 +50,7 @@ def source_kl_novelty(
     ``source, n_tokens, vocab_size, kl_nats`` (kl rounded to 6 dp)."""
     toks = df.select(
         F.col(source_col).alias("source"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("tok"),
+        F.explode(words(F.col(text_col))).alias("tok"),
     )
     st = toks.groupBy("source", "tok").agg(
         F.count(F.lit(1)).alias("c_st")

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import words
+
 
 def phrase_search(
     df: DataFrame,
@@ -34,17 +36,17 @@ def phrase_search(
     phrase terms are rare — the classic postings-intersection cost
     model.  Length-1 phrases reduce to a term-frequency count with no
     join."""
-    words = [w for w in phrase.lower().split() if w]
-    if not words:
+    terms = [w for w in phrase.lower().split() if w]
+    if not terms:
         raise ValueError("phrase must contain at least one token")
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z]+"), 0)
+    toks = words(F.col(text_col))
     postings = df.select(
         F.col(id_col), F.posexplode(toks).alias("_pos", "_tok")
     )
-    matches = postings.where(F.col("_tok") == words[0]).select(
+    matches = postings.where(F.col("_tok") == terms[0]).select(
         id_col, F.col("_pos").alias("_start")
     )
-    for i, w in enumerate(words[1:], start=1):
+    for i, w in enumerate(terms[1:], start=1):
         leg = postings.where(F.col("_tok") == w).select(
             id_col, (F.col("_pos") - i).alias("_start")
         )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import alnum_words
+
 
 def token_pmi(
     docs: DataFrame,
@@ -31,12 +33,7 @@ def token_pmi(
     (n_a * n_b))`` over document counts."""
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda t: t != "",
-            )
-        ).alias("tok"),
+        F.explode(alnum_words(F.col(text_col))).alias("tok"),
     ).distinct()
     df_tok = toks.groupBy("tok").agg(F.count("*").alias("_df"))
     # global top-k over the vocabulary-sized df frame: orderBy+limit

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import tokens
+
 
 def _tf(toks: Column, term: str) -> Column:
     return F.size(F.filter(toks, lambda x: x == F.lit(term)))
@@ -40,9 +42,7 @@ def bm25_scores(
     (df + 0.5))`` — always positive, so a term in most documents still
     contributes monotonically.
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda x: x != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     base = docs.select(
         F.col(id_col),
         F.size(toks).alias("dl"),
@@ -99,12 +99,7 @@ def tfidf_keywords(
     beyond the 1-row N."""
     toks = docs.select(
         F.col(id_col),
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("term"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
     )
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
+
 _SYLLABLE_RE = "[aeiouy]+"
 _SENTENCE_RE = "[.!?]+"
 
@@ -44,14 +45,14 @@ def readability_scores(
     both rounded to 6 decimals.  Documents with no ``[a-z]+`` word
     drop out (the ratios are undefined), as in the oracle."""
     low = F.lower(F.col(text_col))
-    words = _count(low, _WORD_RE)
+    n_words = F.size(words(F.col(text_col)))
     syll = _count(low, _SYLLABLE_RE)
     sent = F.greatest(_count(low, _SENTENCE_RE), F.lit(1))
-    wps = words.cast("double") / sent.cast("double")
-    spw = syll.cast("double") / words.cast("double")
-    return df.where(words > 0).select(
+    wps = n_words.cast("double") / sent.cast("double")
+    spw = syll.cast("double") / n_words.cast("double")
+    return df.where(n_words > 0).select(
         F.col(id_col),
-        words.cast("long").alias("n_words"),
+        n_words.cast("long").alias("n_words"),
         sent.cast("long").alias("n_sentences"),
         syll.cast("long").alias("n_syllables"),
         F.round(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import md5_u32
+
 
 def rendezvous_shard(
     key: Column, n_shards: int = 16, seed: str = "hrw"
@@ -27,19 +29,9 @@ def rendezvous_shard(
     32-bit md5 weight ``md5(seed|shard|key)``."""
     weights = [
         F.struct(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("|", F.lit(seed), F.lit(s), key.cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("w"),
+            md5_u32(
+                F.concat_ws("|", F.lit(seed), F.lit(s), key.cast("string"))
+            ).alias("w"),
             F.lit(s).alias("shard"),
         )
         for s in range(n_shards)

@@ -19,14 +19,11 @@ collects; weights are one division (``beta=1``) or one ``pow``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
-
-def _n_tokens(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 0))
 
 
 def soft_dedup_weights(
@@ -44,7 +41,7 @@ def soft_dedup_weights(
     per = df.select(
         F.col(id_col),
         F.md5(F.col(text_col)).alias("fp"),
-        _n_tokens(F.col(text_col)).alias("n_toks"),
+        F.size(words(F.col(text_col))).alias("n_toks"),
     )
     fc = per.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))
     if beta == 1.0:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import md5_u32
 from magi_etl_spark.operators.mixing import weighted_mix
 
 
@@ -119,10 +120,8 @@ def weighted_sample_n_per_group(
 
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    h = F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")))
-    # 8 hex digits = 32 bits: ample sampling entropy, and the parsed
-    # value fits BIGINT in every engine an oracle might run in
-    u32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+    # 32 bits: ample sampling entropy
+    u32 = md5_u32(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")))
     u = (u32 + 1).cast("double") / F.lit(float(2 ** 32))
     key = F.log(u) / F.col(weight_col)
     w = W.partitionBy(*group_cols).orderBy(F.desc("_es_key"), F.asc(id_col))

@@ -35,15 +35,10 @@ KMV's per-group top-k (k rows per group by construction).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-
-def _hash32(col: Column, salt: str) -> Column:
-    """Deterministic 32-bit hash in [0, 2^32): the first 8 md5 hex
-    digits of ``salt|value`` — the repo-standard portable draw."""
-    h = F.md5(F.concat(F.lit(f"{salt}|"), col.cast("string")))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+from magi_etl_spark.functions.text import md5_u32
 
 
 def kmv_distinct(
@@ -61,9 +56,8 @@ def kmv_distinct(
     distinct count; otherwise est = (k-1) / (kth_min / 2^32).  The
     distinct-hash frame is one shuffle; the k-th minimum is a per-group
     top-k window over it (k rows of state per group survive)."""
-    hashes = df.select(
-        *group_cols, _hash32(F.col(value_col), salt).alias("_h")
-    ).distinct()
+    h = md5_u32(F.concat(F.lit(f"{salt}|"), F.col(value_col).cast("string")))
+    hashes = df.select(*group_cols, h.alias("_h")).distinct()
     w = W.partitionBy(*group_cols).orderBy(F.asc("_h"))
     kept = hashes.withColumn("_rn", F.row_number().over(w)).where(
         F.col("_rn") <= k
@@ -151,7 +145,12 @@ def cms_counts(
         *[
             F.struct(
                 F.lit(j).alias("j"),
-                (_hash32(F.col(key_col), f"{salt}{j}") % width).alias("b"),
+                (
+                    md5_u32(
+                        F.concat(F.lit(f"{salt}{j}|"), F.col(key_col).cast("string"))
+                    )
+                    % width
+                ).alias("b"),
             )
             for j in range(depth)
         ]
@@ -195,9 +194,10 @@ def kmv_set_overlap(
     runs on two k-element arrays built by SCALAR collect aggregates —
     bounded at 2k values by construction, never a data-sized collect.
     """
+    h = md5_u32(F.concat(F.lit(f"{salt}|"), F.col(value_col).cast("string")))
     hashes = (
         df.where(F.col(group_col).isin(group_a, group_b))
-        .select(group_col, _hash32(F.col(value_col), salt).alias("_h"))
+        .select(group_col, h.alias("_h"))
         .distinct()
     )
     w = W.partitionBy(group_col).orderBy(F.asc("_h"))

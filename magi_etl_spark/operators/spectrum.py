@@ -23,14 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def _tokens(df: DataFrame, text_col: str) -> DataFrame:
     return df.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_WORD_RE), 0)
-        ).alias("tok")
+        F.explode(words(F.col(text_col))).alias("tok")
     )
 
 

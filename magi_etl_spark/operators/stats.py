@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import md5_u32
+
 
 def _join_bounds(
     df: DataFrame, bounds: DataFrame, group_cols: list[str]
@@ -228,15 +230,7 @@ def ab_assign_and_compare(
     broadcast self-join of the 2-row variant frame.
     """
     s = F.col(success_col) if isinstance(success_col, str) else success_col
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{salt}|"), F.col(unit_col).cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_u32(F.concat(F.lit(f"{salt}|"), F.col(unit_col).cast("string")))
     assigned = df.withColumn(
         "variant",
         F.when(h % 2 == 0, F.lit("control")).otherwise(F.lit("treatment")),

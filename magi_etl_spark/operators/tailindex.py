@@ -35,18 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WORD_RE = "[a-z]+"
+from magi_etl_spark.functions.text import words
 
 
 def token_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     """``tok, f`` exact token counts."""
     return (
         df.select(
-            F.explode(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(_WORD_RE), 0
-                )
-            ).alias("tok")
+            F.explode(words(F.col(text_col))).alias("tok")
         )
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("f"))

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import alnum_words
+
 
 def _count_class(text, pattern: str):
     """Occurrences of a single-char regex class, as length delta."""
@@ -79,12 +81,7 @@ def extractive_summary(
     stoks = sents.select(
         "doc_id",
         "sent_pos",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("sentence")), "[^a-z0-9]+"),
-                lambda x: x != "",
-            )
-        ).alias("tok"),
+        F.explode(alnum_words(F.col("sentence"))).alias("tok"),
     )
     tf = stoks.groupBy("doc_id", "tok").agg(F.count("*").alias("_tf"))
     scored = (

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from magi_etl_spark.functions.text import alnum_words, md5_u32
+
 
 def winnow_fingerprints(
     docs: DataFrame,
@@ -41,10 +43,7 @@ def winnow_fingerprints(
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda t: t != "",
-            )
+            alnum_words(F.col(text_col))
         ).alias("pos", "tok"),
     )
     byw = W.partitionBy("doc_id").orderBy("pos")
@@ -58,13 +57,7 @@ def winnow_fingerprints(
     hashed = grams.select(
         "doc_id",
         "pos",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{seed}|"), F.col("gram"))), 1, 8),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+        md5_u32(F.concat(F.lit(f"{seed}|"), F.col("gram"))).alias("h"),
         (-F.col("pos")).alias("_np"),
     )
     winf = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)

@@ -38,7 +38,7 @@ def q32_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash document sketch: per bit, majority vote over the md5-derived
     token hashes; near-dup docs land at small Hamming distance.  Pure
     bit-arithmetic Column expressions — portable to the oracle engine."""
-    from magi_etl_spark.functions.text import tokens
+    from magi_etl_spark.functions.text import md5_long, tokens
 
     d = load_table(spark, sf_dir, "documents")
     toks = F.array_distinct(tokens(F.col("text")))
@@ -47,10 +47,7 @@ def q32_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("toks") > 0)
         .select(
             "doc_id",
-            F.transform(
-                F.col("toks"),
-                lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-            ).alias("hs"),
+            F.transform(F.col("toks"), md5_long).alias("hs"),
         )
         .transform(materialize, eager=False)  # interpreted HOFs: hash once
     )

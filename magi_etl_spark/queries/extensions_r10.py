@@ -110,6 +110,7 @@ def q232_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics (second moments in decimal(38,0)/HUGEINT).  Every
     emitted double is one fixed operand sequence on both engines,
     rounded at the 6-dp grid."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.cuped import cuped_adjust
 
     o = load_table(spark, sf_dir, "orders")
@@ -123,20 +124,9 @@ def q232_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("cuped|"),
-                                F.col("o_custkey").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                md5_u32(
+                    F.concat(F.lit("cuped|"), F.col("o_custkey").cast("string"))
+                )
                 % 2
             )
             .cast("int")

@@ -132,23 +132,12 @@ def q239_spatial_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle replays it as the NAIVE all-pairs predicate, so the
     blocking's completeness is checked against an independent path —
     plus the randomized blocked-vs-naive unit test)."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.spatial import grid_blocked_eps_join
 
     def md5mod(salt: str, mod: int, shift: int):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(salt), F.col("c_custkey").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_u32(F.concat(F.lit(salt), F.col("c_custkey").cast("string")))
             % mod
             - shift
         )
@@ -301,6 +290,7 @@ def q241_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal (purchase cells' p divided by 101), micro-integer threshold
     arithmetic end to end, global rank via the range-partitioned
     prefix rank — never a single-partition window."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.fdr import bh_summary
 
     hyp = (
@@ -309,22 +299,14 @@ def q241_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     base_p = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("fdr|"),
-                        F.col("event_type"),
-                        F.lit("|"),
-                        F.col("day").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_u32(
+            F.concat(
+                F.lit("fdr|"),
+                F.col("event_type"),
+                F.lit("|"),
+                F.col("day").cast("string"),
+            )
+        )
         % 1_000_001
     )
     # _basep rides as a named column so the DIV is the epochs idiom
@@ -417,24 +399,13 @@ def q242_cmh_high_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi-square (q208).  Cell counts from one keyed aggregation;
     E/V/odds terms are per-stratum doubles in one fixed operand
     order."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.cmh import cmh_test
 
     o = load_table(spark, sf_dir, "orders").select(
         F.date_trunc("month", F.col("o_orderdate")).alias("mth"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("cmh|"), F.col("o_custkey").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_u32(F.concat(F.lit("cmh|"), F.col("o_custkey").cast("string")))
             % 2
         )
         .cast("int")

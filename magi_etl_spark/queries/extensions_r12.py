@@ -116,6 +116,7 @@ def q244_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays the definition naively — all-pairs neighbor
     counts and recursive-CTE reachability — so the blocked path is
     verified against an independent formulation, like q239."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.dbscan import grid_dbscan
 
     cust = load_table(spark, sf_dir, "customer")
@@ -123,17 +124,7 @@ def q244_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def md5coord(salt: str):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit(salt), F.col("c_custkey").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_u32(F.concat(F.lit(salt), F.col("c_custkey").cast("string")))
             % m
             - m // 2
         )
@@ -485,22 +476,13 @@ def q249_rmst_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restricted mean survival time at a 14-day horizon per md5 arm:
     the expected active days out of the first 14, the survival-family
     effect size beside the log-rank test (q236)."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.rmst import restricted_mean_survival
 
     ev = load_table(spark, sf_dir, "events").withColumn(
         "arm",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("rmst|"), F.col("user_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_u32(F.concat(F.lit("rmst|"), F.col("user_id").cast("string")))
             % 2
         ).cast("int"),
     )

@@ -460,6 +460,7 @@ def q255_dbscan_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean neighborhood is ~pi — denser than q244's geometry but
     still subcritical): the second composed gate over the density
     family, and the oracle replays the naive definition end-to-end."""
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.dbscan import grid_dbscan
     from magi_etl_spark.operators.dbstability import dbscan_cluster_profile
 
@@ -468,19 +469,7 @@ def q255_dbscan_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def md5coord(salt: str):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(salt), F.col("s_suppkey").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_u32(F.concat(F.lit(salt), F.col("s_suppkey").cast("string")))
             % m
             - m // 2
         )

@@ -787,6 +787,7 @@ def q131_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines expose the same (doc, rank) rows."""
     from pyspark.sql import Window as W
 
+    from magi_etl_spark.functions.text import md5_u32
     from magi_etl_spark.operators.sampling import weighted_sample_n_per_group
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -797,10 +798,8 @@ def q131_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # re-rank for a deterministic output rank column (the operator
     # drops its internal key)
-    h = F.md5(F.concat(F.lit("wsample|"), F.col("doc_id").cast("string")))
-    u = (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") + 1) / F.lit(
-        float(2 ** 32)
-    )
+    h = md5_u32(F.concat(F.lit("wsample|"), F.col("doc_id").cast("string")))
+    u = (h + 1) / F.lit(float(2 ** 32))
     return out.select(
         "doc_id",
         "lang",

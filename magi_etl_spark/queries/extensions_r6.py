@@ -160,15 +160,12 @@ def q135_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows).  est_freq >= freq always (collisions only overcount) — the
     oracle checks the exact estimates, the pytest suite pins the
     one-sided-error invariant corpus-wide."""
+    from magi_etl_spark.functions.text import words
     from magi_etl_spark.operators.sketches import cms_counts
 
     d = load_table(spark, sf_dir, "documents")
     tc = (
-        d.select(
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+"), 0)
-            ).alias("token")
-        )
+        d.select(F.explode(words(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )

@@ -1205,6 +1205,8 @@ def q218_source_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     token count, and encoding-flag counts (non-ASCII ratio > 5%) —
     the one-look summary a dataset card starts from, composed from the
     wave's building blocks in a single oracle."""
+    from magi_etl_spark.functions.text import alnum_words
+
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "source",
@@ -1212,12 +1214,7 @@ def q218_source_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_chars",
         F.md5("text").alias("h"),
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                lambda t: t != "",
-            )
-        ).alias("n_toks"),
+        F.size(alnum_words(F.col("text"))).alias("n_toks"),
         (
             (
                 F.length("text")

@@ -258,12 +258,14 @@ def q223_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates.  One corpus aggregation; everything after rides the tiny
     sources ledger.  All integer arithmetic."""
     from magi_etl_spark.operators.epochs import epoch_mixture_plan
-    from magi_etl_spark.operators.hashing_trick import _h32
+    from magi_etl_spark.functions.text import md5_u32
 
     d = load_table(spark, sf_dir, "documents")
     weights = d.select("source").distinct().select(
         "source",
-        ((_h32(F.lit("w"), F.col("source")) % 3) + 1).alias("weight"),
+        (
+            (md5_u32(F.concat_ws("|", F.lit("w"), F.col("source"))) % 3) + 1
+        ).alias("weight"),
     )
     return epoch_mixture_plan(d, weights, token_budget=_EPOCH_BUDGET)
 

@@ -60,22 +60,22 @@ DEFAULT_DRIVER_MEMORY = f"{min(_RAM_MB // 2, 24 * 1024)}m"
 def get_spark(
     app_name: str = "magi-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
     On a real cluster, ``master``/memory come from spark-submit and these
     builder calls are inert; locally they make ``local[N]`` behave like a
-    small cluster (parallel shuffles, AQE re-planning).
+    small cluster (parallel shuffles, AQE re-planning).  Shuffle
+    partitions and driver memory are deployment settings, read from
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` / ``SPARK_GRAFT_DRIVER_MEMORY``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = master or os.environ.get("SPARK_MASTER") or (f"local[{cpus}]" if cpus else "local[*]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -92,7 +92,7 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", DEFAULT_DRIVER_MEMORY))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", DEFAULT_DRIVER_MEMORY))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -46,9 +46,14 @@ LEDGER_SCALES = ("sf0.01", "sf0.1")
 # 46 dependents once the operator barriers were routed through
 # ``chkpt.materialize``; its extra gate is tests/test_chkpt_single_path.py
 # (every routed operator family against its oracle under the
-# ``reliable`` mode) and tests/test_r15_fixes.py.
+# ``reliable`` mode) and tests/test_r15_fixes.py.  functions/text.py
+# joined at 111 dependents once every operator and query took its token
+# rules and md5 draws from there; its extra gate is
+# tests/test_text_primitives.py (each primitive against the DuckDB form
+# the oracles use, and a guard that no module copies one).
 EXEMPT = frozenset({
     "magi_etl_spark/chkpt.py",
+    "magi_etl_spark/functions/text.py",
     "magi_etl_spark/tables.py",
     "magi_etl_spark/session.py",
     "magi_etl_spark/queries/__init__.py",

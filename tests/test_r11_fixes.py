@@ -209,13 +209,33 @@ def _one_digit_wider(plan: str) -> str:
     )
 
 
+def _rendered_at(plan: str, width: int) -> str:
+    """``plan``, built with uncut metadata, as Spark renders it when
+    every expression id has ``width`` digits: ids renumbered from
+    ``10**(width-1)``, and a ``DataFilters`` list longer than 100
+    characters cut to its first 97 plus "..."."""
+    ids: dict[str, int] = {}
+    s = re.sub(
+        r"#(\d+)",
+        lambda m: f"#{ids.setdefault(m.group(1), 10 ** (width - 1) + len(ids))}",
+        plan,
+    )
+    return re.sub(
+        r"(DataFilters: )(\[[^\n]*?\])(?=, Format: )",
+        lambda m: m.group(1)
+        + (m.group(2) if len(m.group(2)) <= 100 else m.group(2)[:97] + "..."),
+        s,
+    )
+
+
 def test_plan_fingerprint_still_stable_on_distinct_rewrite_queries(spark, sf_dir):
     """The two queries whose v1 hashes were compile-order coin flips
     (r10 finding: q184 4-of-4 distinct, q208 2-of-6) must stay stable
     under v3, which no longer strips digits globally.  q40 names its
     lambda variables from a JVM-wide counter and has a cut DataFilters
     list, so every build renders both anew; q02's cut list must hash
-    alike at a wider expression-id width."""
+    alike at a wider expression-id width, and so must q85's list, which
+    is whole at 4-digit ids and cut at 5."""
     from magi_etl_spark.plans import _physical, plan_fingerprint
     from magi_etl_spark.queries import QUERIES
 
@@ -225,3 +245,16 @@ def test_plan_fingerprint_still_stable_on_distinct_rewrite_queries(spark, sf_dir
     plan = _physical(QUERIES["q02_filter_project"](spark, sf_dir))
     assert "..., Format: " in plan, "q02's DataFilters list is no longer cut"
     assert plan_fingerprint(None, plan) == plan_fingerprint(None, _one_digit_wider(plan))
+
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        plan = _physical(QUERIES["q85_zorder_pruned_scan"](spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    narrow, wide = _rendered_at(plan, 4), _rendered_at(plan, 5)
+    assert "..., Format: " not in narrow and "..., Format: " in wide, (
+        "q85's DataFilters list no longer crosses the cut between 4- and 5-digit ids"
+    )
+    assert plan_fingerprint(None, narrow) == plan_fingerprint(None, wide)

@@ -1,6 +1,10 @@
-"""Dump the physical plans of named queries.
+"""Dump the physical plans of named queries, or of every registered one.
 
-Usage: python tools/dump_plans.py OUTDIR q197_extract_summary q206_... ...
+Usage: python tools/dump_plans.py OUTDIR [q197_extract_summary q206_... ...]
+
+With no query names, every query in ``QUERIES`` is dumped in
+registration order.  ``SPARK_GRAFT_SF_DIR`` names the scale-factor
+directory the plans are built over.
 
 Writes, per query, OUTDIR/<name>.raw.txt (the plan's ``toString()``),
 OUTDIR/<name>.canon.txt (``plans.canonical_plan`` of it, the string the
@@ -24,7 +28,7 @@ from magi_etl_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     outdir = sys.argv[1]
-    names = sys.argv[2:]
+    names = sys.argv[2:] or list(QUERIES)
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="plan-dump")
